@@ -271,11 +271,14 @@ object Import {
   }
 
   /** FK pre-validation: staging values with no match in the reference
-    * table (left-anti join; Catalyst broadcasts small reference sides). */
+    * table (left-anti join; Catalyst broadcasts small reference sides).
+    * The reference key is renamed before the join, so a staging frame
+    * that also carries a column named `refCol` stays unambiguous. */
   def fkViolations(staging: DataFrame, fkCol: String,
       ref: DataFrame, refCol: String): DataFrame =
     staging.filter(col(fkCol).isNotNull)
-      .join(ref.select(col(refCol)), col(fkCol) === col(refCol), "left_anti")
+      .join(ref.select(col(refCol).as("__graft_fk_ref")),
+        col(fkCol) === col("__graft_fk_ref"), "left_anti")
       .groupBy(col(fkCol)).agg(count(lit(1)).as("n_rows"))
 
   /** One column mapping: staging column → target column via a bidi fn's

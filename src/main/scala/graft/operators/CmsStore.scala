@@ -48,8 +48,9 @@ object CmsStore {
       norm: Column => Column = graft.functions.TextFns.normText): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // ledger dropped with the data: see ShingleIndex.build
-    Seq(s"${name}_cms", s"${name}_meta", s"${name}_batches")
+    // ledger and manifest dropped with the data: see ShingleIndex.build
+    Seq(s"${name}_cms", s"${name}_meta", s"${name}_batches",
+        s"${name}_manifest")
       .foreach(ShingleIndex.dropTable(spark, _))
     Corpus.cmsNgramMatrix(docs, idCol, textCol, n, depth, width, norm)
       .withColumn("batch_id", lit(ShingleIndex.BaseBatch))

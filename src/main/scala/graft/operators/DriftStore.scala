@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *     PARTITIONED by batch_id so a torn append is undone by
   *     [[pruneBatch]] partition surgery (the replay contract shared
   *     with every store family; ledger kept by the caller —
-  *     [[graft.streaming.Streams.driftIngestBatch]])
+  *     [[graft.streaming.Streams.multiIngestBatch]])
   *
   * The reference is deliberately FROZEN, like the IVF centroids and PQ
   * books: drift is only meaningful against a fixed yardstick, and the
@@ -37,8 +37,10 @@ object DriftStore {
       name: String, binWidth: Long): Unit = {
     val spark = ref.sparkSession
     import spark.implicits._
+    // ledger and manifest dropped with the data: see ShingleIndex.build
     Seq(s"${name}_ref", s"${name}_meta", s"${name}_drift",
-      s"${name}_batches").foreach(ShingleIndex.dropTable(spark, _))
+      s"${name}_batches", s"${name}_manifest")
+      .foreach(ShingleIndex.dropTable(spark, _))
     Corpus.valueHistogram(ref, groupCol, valueCol, binWidth, "r")
       .coalesce(1) // bins × groups — one file
       .write.mode("overwrite").saveAsTable(s"${name}_ref")

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * standard lifecycle contract: batch-stamped appends, partition-
   * surgery crash repair, counter-merging compaction behind the staged-
   * rename swap, and the `{name}_batches` ledger driven by
-  * [[graft.streaming.Streams.dsirIngest]].
+  * [[graft.streaming.Streams.multiIngest]].
   *
   * Like [[CmsStore]], this store stays trivially small because the
   * model is a pure-sum structure: a batch's contribution IS its bucket
@@ -43,8 +43,10 @@ object DsirStore {
       norm: Column => Column = graft.functions.TextFns.normText): Unit = {
     val spark = raw.sparkSession
     import spark.implicits._
+    // ledger and manifest dropped with the data: see ShingleIndex.build
     Seq(s"${name}_tgt", s"${name}_dsir", s"${name}_meta",
-      s"${name}_batches").foreach(ShingleIndex.dropTable(spark, _))
+      s"${name}_batches", s"${name}_manifest")
+      .foreach(ShingleIndex.dropTable(spark, _))
     Corpus.dsirHistogram(target, idCol, textCol, buckets, norm)
       .coalesce(1) // ≤ buckets rows — one file
       .write.mode("overwrite").saveAsTable(s"${name}_tgt")

@@ -78,9 +78,9 @@ object IvfIndex {
     // ShingleIndex.dropTable also clears stale warehouse directories —
     // an in-memory catalog forgets tables across JVMs, and a leftover
     // dir fails saveAsTable with LOCATION_ALREADY_EXISTS
-    // ledger dropped with the data: see ShingleIndex.build
+    // ledger and manifest dropped with the data: see ShingleIndex.build
     Seq(s"${name}_cells", s"${name}_cent", s"${name}_books",
-        s"${name}_batches")
+        s"${name}_batches", s"${name}_manifest")
       .foreach(ShingleIndex.dropTable(spark, _))
     val c = Similarity
       .withNorm(corpus, idCol, vecCol, "neighbor_id", "cv")
@@ -271,7 +271,8 @@ object IvfIndex {
     * [[Similarity.ivfNearDupPairs]]), deduped as bare id pairs BEFORE
     * vectors re-attach, then exact-cosine verified. New×new pairs emit
     * once with `vec_id < match_id` (the caller's keeper rule drops the
-    * larger id — [[graft.streaming.Streams.vectorIngestBatch]]).
+    * larger id — [[dupKeeperMap]], shared by the p44 gate and
+    * [[graft.streaming.Streams.vectorIngestBatch]]).
     * Determinism: candidate sets and cosines are exact functions of the
     * stored centroid geometry — no RNG anywhere. Zero-norm batch
     * vectors are excluded (cosine undefined; the streaming caller gives

@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * family, with the identical lifecycle contract as [[ShingleIndex]] /
   * [[IvfIndex]] / [[CmsStore]]: batch-stamped appends, partition-
   * surgery crash repair, fold-to-base compaction behind the staged-
-  * rename swap, `{name}_batches` ledger compatible with
-  * [[graft.streaming.Streams.compactIndex]].
+  * rename swap, and the `{name}_batches` ledger backfilled by
+  * [[graft.streaming.Streams.multiIngestBatch]]'s commit, which
+  * [[graft.streaming.Streams.compactIndex]] folds by.
   *
   * Serving contract: [[topK]] returns EXACTLY the rows of
   * [[Corpus.bm25TopK]] over the corpus the index holds — not "the same
@@ -71,9 +72,9 @@ object PostingIndex {
       norm: Column => Column = TextFns.normText): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // ledger dropped with the data: see ShingleIndex.build
+    // ledger and manifest dropped with the data: see ShingleIndex.build
     Seq(s"${name}_post", s"${name}_stats", s"${name}_meta",
-        s"${name}_batches")
+        s"${name}_batches", s"${name}_manifest")
       .foreach(ShingleIndex.dropTable(spark, _))
     postings(docs, idCol, textCol, norm)
       .withColumn("batch_id", lit(ShingleIndex.BaseBatch))

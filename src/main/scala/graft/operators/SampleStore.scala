@@ -18,7 +18,7 @@ import graft.functions.TextFns
   * persisted-store family, with the standard lifecycle: batch-stamped
   * appends, partition-surgery crash repair, fold-to-base compaction,
   * and the `{name}_batches` ledger driven by
-  * [[graft.streaming.Streams.sampleIngest]].
+  * [[graft.streaming.Streams.multiIngest]].
   *
   * The centroids are FROZEN at [[build]] (the IVF-store discipline):
   * a quota per cluster only means "topic balance" while every batch
@@ -49,8 +49,10 @@ object SampleStore {
     import spark.implicits._
     require(nCells >= 1 && k >= 1,
       s"SampleStore: need nCells >= 1 and k >= 1, got $nCells/$k")
+    // ledger and manifest dropped with the data: see ShingleIndex.build
     Seq(s"${name}_cent", s"${name}_smpl", s"${name}_meta",
-      s"${name}_batches").foreach(ShingleIndex.dropTable(spark, _))
+      s"${name}_batches", s"${name}_manifest")
+      .foreach(ShingleIndex.dropTable(spark, _))
     val v = Similarity.withNorm(corpus, idCol, vecCol, "vec_id", "v")
     val cent = centroids.getOrElse(
       Similarity.topKByHashCentroids(v, "vec_id", "v", nCells))

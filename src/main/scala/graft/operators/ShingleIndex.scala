@@ -85,12 +85,13 @@ object ShingleIndex {
         graft.functions.TextFns.normText): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // the ledger goes too: a rebuilt index starts a NEW batch-id
-    // history, and a stale ledger would make a fresh stream silently
-    // skip ids it believes committed (data loss) or compactIndex fold
-    // a torn new batch it believes committed (permanent half-write)
-    Seq(s"${name}_idx", s"${name}_sh", s"${name}_meta", s"${name}_batches")
-      .foreach(dropTable(spark, _))
+    // the ledger and the store's own (group-of-one) manifest go too: a
+    // rebuilt index starts a NEW batch-id history, and a stale commit
+    // row would make a fresh stream silently skip ids it believes
+    // committed (data loss) or compactIndex fold a torn new batch it
+    // believes committed (permanent half-write)
+    Seq(s"${name}_idx", s"${name}_sh", s"${name}_meta", s"${name}_batches",
+      s"${name}_manifest").foreach(dropTable(spark, _))
     // persisted across the two writes: without it the whole corpus
     // normalize/tokenize/shingle scan runs twice — once per table
     val sh = Dedup.shingleDocs(docs, idCol, textCol, n, norm).persist()
@@ -340,6 +341,20 @@ object ShingleIndex {
       norm: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         graft.functions.TextFns.normText): DataFrame = {
     val spark = newDocs.sparkSession
+    // the fused candidate stage collects BOTH sides' ids via
+    // graft_caplist, which takes bigint only — check the batch and the
+    // stored tables here, before any job, naming every type involved
+    val idTypes = (s"batch $idCol" ->
+      newDocs.select(col(idCol)).schema.head.dataType) +:
+      Seq("idx", "sh").map(t => s"${name}_$t.doc_id" ->
+        spark.table(s"${name}_$t").schema("doc_id").dataType)
+    require(idTypes.forall(_._2 == org.apache.spark.sql.types.LongType),
+      "ShingleIndex.incrementalPairs requires bigint doc ids (the fused " +
+        "candidate stage collects them via graft_caplist), got " +
+        idTypes.map { case (w, t) => s"$w: ${t.simpleString}" }
+          .mkString(", ") +
+        "; cast upstream (and rebuild a store built over other ids) or " +
+        "use Dedup.incrementalNearDupPairs' generic-id path")
     val (n, _, parts) = meta(spark, name)
     checkNormFp(spark, name, norm)
     val shNew = Dedup.shingleDocs(newDocs, idCol, textCol, n, norm).persist()
@@ -376,11 +391,6 @@ object ShingleIndex {
     // the store ≡ in-memory equality DedupIndexSpec pins — is
     // unchanged. idxRel now has a single consumer, so its pin is gone
     // too.
-    require(shNew.schema("doc_id").dataType ==
-      org.apache.spark.sql.types.LongType,
-      "ShingleIndex.incrementalPairs requires bigint doc ids (the fused " +
-        "candidate stage collects them via graft_caplist); cast upstream " +
-        "or use Dedup.incrementalNearDupPairs' generic-id path")
     val cand = Dedup.incrementalCandidates(
       newInv.select(col("s"), col("doc_id"), lit(true).as("is_new"))
         .unionByName(idxRel.select(col("s"), col("doc_id"),

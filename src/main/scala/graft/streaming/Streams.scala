@@ -26,6 +26,15 @@ import java.sql.Timestamp
   * with MemoryStream. State stores shard by groupBy key — user_id/
   * event_type partition uniformly, so a 1000-executor cluster splits the
   * state linearly.
+  *
+  * The ingest loops at the bottom write the persisted stores
+  * (graft.operators) through ONE commit protocol: a micro-batch commits
+  * as a row in `{group}_manifest`, and each member store's
+  * `{name}_batches` ledger is backfilled after it. A store ingested
+  * alone is a group of one, so it now writes `{name}_manifest` (its
+  * commit point) next to `{name}_batches`. State written before the
+  * manifest existed stays safe: a batch with no manifest row is pruned
+  * and appended again on replay, which converges to the same store.
   */
 object Streams {
 
@@ -365,478 +374,16 @@ object Streams {
       .drop("_qv", "_qn0", "_qn")
   }
 
-  // ---- streaming ingest round ---------------------------------------------
+  // ---- streaming ingest: one commit protocol -------------------------------
 
-  /** One micro-batch of the STREAMING ingest round — the body behind
-    * [[ingestTriage]], exposed so a spec (or a manual re-drive) can
-    * replay a batch id and observe the idempotence guard.
-    *
-    * Per batch: run [[graft.operators.Ingest.triage]] against the
-    * persisted index, hand the fate-annotated frame to `route` (the
-    * caller's policy: corpus sink, quarantine, metrics — same contract
-    * as the batch operator), then append the ACCEPTED docs to the index
-    * so later micro-batches dedup against earlier ones — the
-    * cross-batch memory a stateless per-row gate cannot have.
-    *
-    * Replay guard: foreachBatch RE-EXECUTES a batch after a failure,
-    * and an index append is not naturally idempotent (re-appended
-    * postings would inflate df counts and re-pair docs with
-    * themselves). The batch-id ledger in `{index}_batches` makes a
-    * replay of any COMMITTED batch a no-op; for an UNCOMMITTED batch,
-    * the append stamps its rows under a `batch_id` partition and the
-    * replay first [[graft.operators.ShingleIndex.pruneBatch prunes]]
-    * whatever a crashed attempt half-committed (postings without
-    * shingles, or both without the ledger row) before redoing the
-    * work — so the INDEX converges to exactly-once on restart. Two
-    * honest limits remain: between a crash and the restart, index
-    * readers can see the half-committed batch (convergence, not
-    * isolation); and `route` still fires at-least-once — a
-    * non-idempotent route action must key off the batch id on its own
-    * sink. */
-  def ingestBatch(batch: DataFrame, batchId: Long, idCol: String,
-      textCol: String, cfg: graft.operators.Ingest.Config,
-      route: (DataFrame, Long) => Unit,
-      lease: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val ledger = s"${cfg.indexName}_batches"
-    val replayed = spark.catalog.tableExists(ledger) &&
-      spark.table(ledger).filter(col("batch_id") === batchId)
-        .head(1).nonEmpty
-    if (!replayed) {
-      // single-writer guard, checked BEFORE any mutation: if another
-      // writer (second stream, concurrent compaction) took the lease
-      // since this loop started, fail loudly instead of interleaving
-      lease.foreach(graft.operators.WriterLease.check(spark, cfg.indexName, _))
-      // crash repair: drop anything a previous attempt of THIS batch
-      // appended before dying short of the ledger row (no-op on the
-      // normal first run — the partitions don't exist)
-      graft.operators.ShingleIndex.pruneBatch(spark, cfg.indexName, batchId)
-      val fates = graft.operators.Ingest.triage(batch, idCol, textCol, cfg)
-        // one computation feeds route AND the accepted-side append
-        .persist()
-      try {
-        route(fates, batchId)
-        graft.operators.ShingleIndex.append(
-          fates.filter(col("fate") === "accepted")
-            .select(col("doc_id"), col("text")),
-          "doc_id", "text", cfg.indexName, batchId, cfg.norm)
-        Seq(batchId).toDF("batch_id").write.mode("append").saveAsTable(ledger)
-      } finally {
-        // the callees (Ingest.triage → ShingleIndex.incrementalPairs)
-        // persist shared subtrees under the caller-clears-cache
-        // convention, and THIS loop is the caller: a foreachBatch
-        // stream never returns to a clearing scope, so without this
-        // the pinned frames accumulate one set per micro-batch for
-        // the stream's lifetime (executor storage, then disk). The
-        // loop owns its session's cache between batches — run the
-        // stream in a dedicated SparkSession if you cache elsewhere.
-        spark.catalog.clearCache()
-      }
-    }
-  }
-
-  /** The streaming production ingest loop: a foreachBatch sink driving
-    * [[ingestBatch]] — scrub → quality → Bloom gate → near-dup against
-    * the PERSISTED, GROWING shingle index, with batch-id idempotence.
-    * The index must exist ([[graft.operators.ShingleIndex.build]] it
-    * over the seed corpus first); `checkpoint` is the stream's normal
-    * recovery location. Stages 1–3 are stateless per-row maps; stage 4
-    * is batch-bounded against the index — no unbounded state store
-    * anywhere, the same 100 TB story as the batch round.
-    *
-    * Single writer per index: the ledger read/append and the index
-    * append assume one active ingest stream owns `cfg.indexName`
-    * (checkpointed streams already enforce one query per checkpoint;
-    * running a SECOND stream against the same index would interleave
-    * appends outside the ledger's guard). Fan ingest sources into one
-    * stream (union) rather than running parallel writers. */
-  def ingestTriage(docs: DataFrame, idCol: String, textCol: String,
-      cfg: graft.operators.Ingest.Config, checkpoint: String,
-      route: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // claim the writer lease once per stream start (takeover semantics
-    // — a restart after a crash just re-takes it); every batch
-    // re-checks, so a second writer turns this stream loud within one
-    // batch instead of silently interleaving appends
-    val lease = graft.operators.WriterLease.take(
-      docs.sparkSession, cfg.indexName)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((b: DataFrame, id: java.lang.Long) =>
-        ingestBatch(b, id, idCol, textCol, cfg, route, Some(lease)))
-      .start()
-  }
-
-  // ---- streaming embedding ingest -----------------------------------------
-
-  /** Config for the EMBEDDING ingest round — the vector face of
-    * [[graft.operators.Ingest.Config]].
-    *
-    * @param indexName [[graft.operators.IvfIndex]] table-name prefix
-    * @param threshold cosine above which a batch vector is a near-dup
-    * @param assignProbe batch-side multi-assignment width (recall knob,
-    *   same geometry as `Similarity.ivfNearDupPairs`) */
-  final case class VectorIngestConfig(
-      indexName: String, threshold: Double = 0.95, assignProbe: Int = 3)
-
-  /** One micro-batch of the streaming EMBEDDING ingest round — the
-    * vector mirror of [[ingestBatch]], with the identical
-    * convergent-exactly-once contract: the `{index}_batches` ledger
-    * makes a replay of a committed batch a no-op; an uncommitted
-    * replay first [[graft.operators.IvfIndex.pruneBatch prunes]]
-    * whatever a crashed attempt half-appended to the cell store before
-    * redoing the work. Same honest limits as the text loop: readers
-    * may see a torn batch between crash and restart (convergence, not
-    * isolation), and `route` fires at-least-once.
-    *
-    * Per batch: near-dup triage against the stored corpus and earlier
-    * rows of the same batch ([[graft.operators.IvfIndex
-    * .incrementalNearDups]] — old×old never pairs, batch-bounded),
-    * fates routed (`accepted` | `duplicate` with min-id `dup_of` |
-    * `zero_norm` for vectors cosine cannot compare), then the accepted
-    * vectors append to the index under this batch's partition so later
-    * micro-batches dedup against earlier ones. */
-  def vectorIngestBatch(batch: DataFrame, batchId: Long, idCol: String,
-      vecCol: String, cfg: VectorIngestConfig,
-      route: (DataFrame, Long) => Unit,
-      lease: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val ledger = s"${cfg.indexName}_batches"
-    val replayed = spark.catalog.tableExists(ledger) &&
-      spark.table(ledger).filter(col("batch_id") === batchId)
-        .head(1).nonEmpty
-    if (!replayed) {
-      lease.foreach(graft.operators.WriterLease.check(spark, cfg.indexName, _))
-      graft.operators.IvfIndex.pruneBatch(spark, cfg.indexName, batchId)
-      val dups = graft.operators.IvfIndex.incrementalNearDups(
-        batch, idCol, vecCol, cfg.indexName, cfg.threshold, cfg.assignProbe)
-      // keeper rule lives in ONE place (shared with the p44 gate)
-      val dropped = graft.operators.IvfIndex.dupKeeperMap(dups)
-      val fates = batch
-        .select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
-        .withColumn("_n", sqrt(graft.operators.Similarity.dot(
-          col("vec"), col("vec"))))
-        .join(dropped, Seq("vec_id"), "left")
-        .select(col("vec_id"), col("vec"),
-          when(coalesce(col("_n"), lit(0.0)) <= 0, lit("zero_norm"))
-            .when(col("dup_of").isNotNull, lit("duplicate"))
-            .otherwise(lit("accepted")).as("fate"),
-          when(coalesce(col("_n"), lit(0.0)) > 0, col("dup_of")).as("dup_of"))
-        .persist()
-      try {
-        route(fates, batchId)
-        graft.operators.IvfIndex.append(
-          fates.filter(col("fate") === "accepted")
-            .select(col("vec_id"), col("vec")),
-          "vec_id", "vec", cfg.indexName, batchId)
-        Seq(batchId).toDF("batch_id").write.mode("append").saveAsTable(ledger)
-      } finally {
-        // same cache-ownership rule as [[ingestBatch]]: the callee
-        // (IvfIndex.incrementalNearDups) persists its batch frames
-        // under the caller-clears-cache convention, and this loop is
-        // the caller that never returns to a clearing scope — clear
-        // per batch or leak one pinned set per micro-batch forever
-        spark.catalog.clearCache()
-      }
-    }
-  }
-
-  /** The streaming embedding ingest loop: a foreachBatch sink driving
-    * [[vectorIngestBatch]] — near-dup triage against the PERSISTED,
-    * GROWING IVF index with batch-id idempotence. The index must exist
-    * ([[graft.operators.IvfIndex.build]] it over the seed corpus
-    * first — centroids stay frozen across appends; schedule periodic
-    * rebuilds if the ingest distribution drifts). Same single-writer
-    * rule and lease guard as [[ingestTriage]]. */
-  def vectorIngest(vectors: DataFrame, idCol: String, vecCol: String,
-      cfg: VectorIngestConfig, checkpoint: String,
-      route: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val lease = graft.operators.WriterLease.take(
-      vectors.sparkSession, cfg.indexName)
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((b: DataFrame, id: java.lang.Long) =>
-        vectorIngestBatch(b, id, idCol, vecCol, cfg, route, Some(lease)))
-      .start()
-  }
-
-  /** One micro-batch of the streaming FREQUENCY-STATS ingest — the
-    * [[graft.operators.CmsStore]] mirror of [[ingestBatch]], same
-    * convergent-exactly-once ledger contract. Unlike the index loops
-    * there is no triage/route: the batch contributes ONLY its
-    * depth × width counter matrix (bounded rows per append no matter
-    * how large the batch), so this is the cheapest member of the
-    * family — and the one whose torn-batch window is benign by the
-    * sketch's own contract (a half-committed batch can only
-    * OVER-estimate, which the CMS read API already promises). */
-  def statsIngestBatch(batch: DataFrame, batchId: Long, idCol: String,
-      textCol: String, name: String,
-      lease: Option[String] = None): Unit =
-    ledgeredAppend(batch.sparkSession, name, batchId, lease)(
-      graft.operators.CmsStore.pruneBatch(batch.sparkSession, name, batchId),
-      graft.operators.CmsStore.append(batch, idCol, textCol, name, batchId))
-
-  /** THE ledger-replay wrapper every accumulation-only store loop
-    * shares (CMS stats, BM25 postings, drift reports, the DSIR model):
-    * skip a ledger-committed batch, check the writer lease, prune a
-    * torn attempt, run the store's append, then commit the ledger row
-    * — the convergent-exactly-once contract stated exactly once, so a
-    * fix to the replay/lease ordering cannot desync across families.
-    * `prune` and `append` are by-name: neither runs for a replayed
-    * batch. */
-  private def ledgeredAppend(spark: SparkSession, name: String,
-      batchId: Long, lease: Option[String])(
-      prune: => Unit, append: => Unit): Unit = {
-    import spark.implicits._
-    val ledger = s"${name}_batches"
-    val replayed = spark.catalog.tableExists(ledger) &&
-      spark.table(ledger).filter(col("batch_id") === batchId)
-        .head(1).nonEmpty
-    if (!replayed) {
-      lease.foreach(graft.operators.WriterLease.check(spark, name, _))
-      prune
-      append
-      Seq(batchId).toDF("batch_id").write.mode("append").saveAsTable(ledger)
-    }
-  }
-
-  /** The streaming frequency-stats loop: a foreachBatch sink driving
-    * [[statsIngestBatch]] against a [[graft.operators.CmsStore]] built
-    * over the seed corpus. Same single-writer lease rule as the other
-    * ingest loops; compact between restarts via [[compactIndex]]. */
-  def statsIngest(docs: DataFrame, idCol: String, textCol: String,
-      name: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val lease = graft.operators.WriterLease.take(docs.sparkSession, name)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((b: DataFrame, id: java.lang.Long) =>
-        statsIngestBatch(b, id, idCol, textCol, name, Some(lease)))
-      .start()
-  }
-
-  /** One micro-batch of the streaming RETRIEVAL-INDEX ingest — the
-    * [[graft.operators.PostingIndex]] member of the family, same
-    * ledger contract. Postings and the per-batch stats row land under
-    * one `batch_id`, so the torn window prunes as one unit; like the
-    * CMS loop there is no triage, only accumulation. */
-  def postingIngestBatch(batch: DataFrame, batchId: Long, idCol: String,
-      textCol: String, name: String,
-      lease: Option[String] = None): Unit =
-    ledgeredAppend(batch.sparkSession, name, batchId, lease)(
-      graft.operators.PostingIndex.pruneBatch(batch.sparkSession, name,
-        batchId),
-      graft.operators.PostingIndex.append(batch, idCol, textCol, name,
-        batchId))
-
-  /** The streaming retrieval-index loop: foreachBatch driving
-    * [[postingIngestBatch]] against a [[graft.operators.PostingIndex]]
-    * built over the seed corpus. Queries served mid-stream see every
-    * committed batch (df and corpus stats grow together — both live
-    * under the same batch partitions). */
-  def postingIngest(docs: DataFrame, idCol: String, textCol: String,
-      name: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val lease = graft.operators.WriterLease.take(docs.sparkSession, name)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((b: DataFrame, id: java.lang.Long) =>
-        postingIngestBatch(b, id, idCol, textCol, name, Some(lease)))
-      .start()
-  }
-
-  /** One micro-batch of the streaming DRIFT monitor — the
-    * [[graft.operators.DriftStore]] member of the family, same
-    * convergent-exactly-once ledger contract as [[statsIngestBatch]]:
-    * replayed batches are skipped via the ledger, torn batches are
-    * pruned before re-reporting. The batch contributes one report row
-    * per group (histogram-scale work against the FROZEN reference
-    * histogram — the reference corpus is never rescanned), so like the
-    * CMS loop this is accumulation only, no triage/route. */
-  def driftIngestBatch(batch: DataFrame, batchId: Long, groupCol: String,
-      valueCol: String, name: String,
-      lease: Option[String] = None): Unit =
-    ledgeredAppend(batch.sparkSession, name, batchId, lease)(
-      graft.operators.DriftStore.pruneBatch(batch.sparkSession, name,
-        batchId),
-      graft.operators.DriftStore.appendReport(batch, groupCol, valueCol,
-        name, batchId))
-
-  /** The streaming drift-monitor loop: foreachBatch driving
-    * [[driftIngestBatch]] against a [[graft.operators.DriftStore]]
-    * built over the reference corpus — per-micro-batch chi-square
-    * health reports with the same single-writer lease rule as the
-    * other loops. The monitor only APPENDS reports; acting on them
-    * (alerting, re-baselining via DriftStore.build) is the consumer's
-    * policy. */
-  def driftIngest(rows: DataFrame, groupCol: String, valueCol: String,
-      name: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val lease = graft.operators.WriterLease.take(rows.sparkSession, name)
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((b: DataFrame, id: java.lang.Long) =>
-        driftIngestBatch(b, id, groupCol, valueCol, name, Some(lease)))
-      .start()
-  }
-
-  /** One micro-batch of the streaming DSIR model — the
-    * [[graft.operators.DsirStore]] member of the family, same
-    * convergent-exactly-once ledger contract as [[statsIngestBatch]]:
-    * replayed batches are skipped via the ledger, torn batches are
-    * pruned before re-appending. Each batch contributes one ≤ buckets-
-    * row source histogram (counter addition on read — the accumulated
-    * model is bit-identical to a from-scratch fit over everything
-    * ingested), so this is accumulation only; scoring is the
-    * consumer's call ([[graft.operators.DsirStore.weights]]). */
-  def dsirIngestBatch(batch: DataFrame, batchId: Long, idCol: String,
-      textCol: String, name: String,
-      lease: Option[String] = None): Unit =
-    ledgeredAppend(batch.sparkSession, name, batchId, lease)(
-      graft.operators.DsirStore.pruneBatch(batch.sparkSession, name,
-        batchId),
-      graft.operators.DsirStore.append(batch, idCol, textCol, name, batchId))
-
-  /** The streaming DSIR-model loop: foreachBatch driving
-    * [[dsirIngestBatch]] against a [[graft.operators.DsirStore]] built
-    * over the base corpus + frozen target — the source distribution
-    * the importance weights are computed against grows with every
-    * micro-batch, at ≤ buckets rows per batch, without the stream ever
-    * re-reading old data. Same single-writer lease rule as the other
-    * loops. */
-  def dsirIngest(docs: DataFrame, idCol: String, textCol: String,
-      name: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val lease = graft.operators.WriterLease.take(docs.sparkSession, name)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((b: DataFrame, id: java.lang.Long) =>
-        dsirIngestBatch(b, id, idCol, textCol, name, Some(lease)))
-      .start()
-  }
-
-  /** One micro-batch of the streaming cluster-balanced SAMPLE — the
-    * [[graft.operators.SampleStore]] member of the family, same
-    * convergent-exactly-once ledger contract: the batch pays its own
-    * assignment against the FROZEN cells and appends ≤ cells·k local
-    * quota winners; min-k associativity makes the served sample ≡ the
-    * one-shot operator over everything ingested. */
-  def sampleIngestBatch(batch: DataFrame, batchId: Long, idCol: String,
-      vecCol: String, name: String,
-      lease: Option[String] = None): Unit =
-    ledgeredAppend(batch.sparkSession, name, batchId, lease)(
-      graft.operators.SampleStore.pruneBatch(batch.sparkSession, name,
-        batchId),
-      graft.operators.SampleStore.append(batch, idCol, vecCol, name,
-        batchId))
-
-  /** The streaming sample-maintenance loop: foreachBatch driving
-    * [[sampleIngestBatch]] against a [[graft.operators.SampleStore]]
-    * built over the base corpus — an always-fresh topic-balanced
-    * eval/probe set over an endless stream at ≤ cells·k rows per
-    * batch, never re-reading old data. Same single-writer lease rule
-    * as the other loops. */
-  def sampleIngest(vectors: DataFrame, idCol: String, vecCol: String,
-      name: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val lease = graft.operators.WriterLease.take(vectors.sparkSession, name)
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((b: DataFrame, id: java.lang.Long) =>
-        sampleIngestBatch(b, id, idCol, vecCol, name, Some(lease)))
-      .start()
-  }
-
-  /** Ledger-aware index compaction for a STOPPED ingest stream: folds
-    * every ledger-committed batch partition into the index's base
-    * corpus while leaving any appended-but-uncommitted batch (a crash
-    * the stream has not replayed yet) prunable in place. Handles BOTH
-    * index families — the table layout names the family: a shingle
-    * index has `{name}_idx` ([[graft.operators.ShingleIndex.compact]]),
-    * an IVF index has `{name}_cells`
-    * ([[graft.operators.IvfIndex.compact]]) — so one maintenance
-    * entry point serves text and embedding ingest alike. The
-    * uncommitted set is computed, not assumed: batch ids stamped in the
-    * index's REGISTERED partitions (SHOW PARTITIONS — catalog metadata
-    * only; a `select(batch_id).distinct()` would scan the postings,
-    * Spark's metadata-only rewrite being off by default) minus the
-    * ledger's committed ids. Run between stream restarts — compaction
-    * is a writer, and it TAKES the writer lease, so an ingest stream
-    * mistakenly left running fails loudly at its next batch instead of
-    * interleaving with the rewrite. (A third family dispatches the
-    * same way: a CMS stats store has `{name}_cms` —
-    * [[graft.operators.CmsStore.compact]] additionally MERGES folded
-    * counters so the base partition shrinks back to one matrix.) */
-  def compactIndex(spark: SparkSession, indexName: String): Unit = {
-    val ledger = s"${indexName}_batches"
-    val (partTable, runCompact) =
-      if (spark.catalog.tableExists(s"${indexName}_idx"))
-        (s"${indexName}_idx",
-          (u: Set[Long]) => graft.operators.ShingleIndex.compact(
-            spark, indexName, u))
-      else if (spark.catalog.tableExists(s"${indexName}_cells"))
-        (s"${indexName}_cells",
-          (u: Set[Long]) => graft.operators.IvfIndex.compact(
-            spark, indexName, u))
-      else if (spark.catalog.tableExists(s"${indexName}_cms"))
-        (s"${indexName}_cms",
-          (u: Set[Long]) => graft.operators.CmsStore.compact(
-            spark, indexName, u))
-      else if (spark.catalog.tableExists(s"${indexName}_post"))
-        (s"${indexName}_post",
-          (u: Set[Long]) => graft.operators.PostingIndex.compact(
-            spark, indexName, u))
-      else if (spark.catalog.tableExists(s"${indexName}_dsir"))
-        (s"${indexName}_dsir",
-          (u: Set[Long]) => graft.operators.DsirStore.compact(
-            spark, indexName, u))
-      else if (spark.catalog.tableExists(s"${indexName}_smpl"))
-        (s"${indexName}_smpl",
-          (u: Set[Long]) => graft.operators.SampleStore.compact(
-            spark, indexName, u))
-      else if (spark.catalog.tableExists(s"${indexName}_drift"))
-        (s"${indexName}_drift",
-          (u: Set[Long]) => graft.operators.DriftStore.compact(
-            spark, indexName, u))
-      else throw new IllegalArgumentException(
-        s"no persisted index named '$indexName' — none of " +
-          s"${indexName}_idx (shingle), ${indexName}_cells (IVF), " +
-          s"${indexName}_cms (CMS stats), ${indexName}_post (BM25), " +
-          s"${indexName}_dsir (DSIR model), ${indexName}_smpl " +
-          s"(balanced sample), or ${indexName}_drift (drift reports) " +
-          "exists")
-    graft.operators.WriterLease.take(spark, indexName)
-    val appended = spark.sql(s"SHOW PARTITIONS $partTable")
-      .collect()
-      .flatMap(_.getString(0).split('/').find(_.startsWith("batch_id=")))
-      .map(_.stripPrefix("batch_id=").toLong).toSet
-    val committed =
-      if (spark.catalog.tableExists(ledger))
-        spark.table(ledger).select(col("batch_id")).collect()
-          .map(_.getLong(0)).toSet
-      else Set.empty[Long]
-    runCompact(
-      appended -- committed - graft.operators.ShingleIndex.BaseBatch)
-  }
-
-  def compactIndex(spark: SparkSession,
-      cfg: graft.operators.Ingest.Config): Unit =
-    compactIndex(spark, cfg.indexName)
-
-  // ---- cross-family atomic ingest ----------------------------------------
-
-  /** One persisted-store family's lifecycle hooks AS DATA, for the
-    * cross-family loop [[multiIngestBatch]]: `prune` undoes whatever a
-    * crashed attempt of a batch half-appended (partition surgery,
-    * idempotent, no-op if the batch never landed) and `append` stamps
-    * the batch under its `batch_id` partition — exactly the pair every
-    * family already exposes; the constructors below just close over
-    * the column names. The hooks are the SAME functions the
-    * single-family loops call, so a family behaves identically whether
-    * it is ingested alone or inside a group. */
+  /** One persisted-store family's lifecycle hooks AS DATA — the only way
+    * an ingest loop touches a store: `prune` undoes whatever a crashed
+    * attempt of a batch half-appended (partition surgery, idempotent,
+    * no-op if the batch never landed) and `append` stamps the batch
+    * under its `batch_id` partition — exactly the pair every family
+    * already exposes; the constructors below just close over the column
+    * names. A family ingested alone is a group of one
+    * (`multiIngest(docs, name, Seq(StoreFamily.x(name, …)), …)`). */
   final case class StoreFamily(
       name: String,
       prune: (SparkSession, Long) => Unit,
@@ -905,110 +452,154 @@ object Streams {
           name, id))
   }
 
-  /** One micro-batch of the CROSS-FAMILY atomic ingest: N store
-    * families updated from ONE stream under ONE commit point, so a
-    * crash can never leave two families at different batch horizons
-    * unrepaired — the gap the per-family ledgers cannot see (family A
-    * appended batch 7, family B didn't; A's own ledger says nothing
-    * wrong, B's says batch 7 never happened, and nobody knows A must
-    * be pruned).
+  /** THE convergent-exactly-once commit of one ingest micro-batch, shared
+    * by every loop ([[multiIngestBatch]], [[triageMultiIngestBatch]],
+    * [[vectorIngestBatch]]) so a fix to the replay/lease ordering cannot
+    * desync across them. N member stores advance under ONE commit point,
+    * a row in `{group}_manifest`, written after `work` has appended to
+    * every member:
     *
-    * The commit point is one row in `{group}_manifest`, written after
-    * EVERY family's append. Crash anywhere before it — mid-append,
-    * between families, after the last append — and the replay finds no
-    * manifest row, prunes the batch's partitions in ALL families
-    * (idempotent surgery; a family that never appended is a no-op) and
-    * redoes every append. Crash after it and the replay skips the
-    * batch entirely. Either way every family converges to exactly the
-    * manifest's horizon.
+    *   1. a batch the manifest already holds is skipped — foreachBatch
+    *      re-executes a batch after a failure, and no store append is
+    *      naturally idempotent (re-appended postings inflate df counts);
+    *   2. otherwise every writer lease is checked BEFORE any mutation (a
+    *      second stream or a concurrent compaction turns this loop loud
+    *      instead of interleaving), every member is pruned of whatever a
+    *      crashed attempt of this batch half-appended — mid-append,
+    *      between members, after the last append — then `work` redoes
+    *      every append and the manifest row commits. Every member thus
+    *      converges to exactly the manifest's horizon, which per-member
+    *      ledgers alone cannot guarantee (member A appended batch 7, B
+    *      did not: A's ledger says nothing wrong, and nobody knows A must
+    *      be pruned);
+    *   3. in every case each member's `{name}_batches` ledger is
+    *      backfilled — AFTER the manifest, never before, and idempotently
+    *      on the replay path too (closing the crash-between-manifest-and-
+    *      backfill window). [[compactIndex]] folds exactly the ledger's
+    *      batches, and member-committed ⊆ manifest-committed means it
+    *      can never fold a batch the group replay still needs to prune;
+    *      a batch whose backfill was interrupted merely stays un-folded
+    *      until the next batch backfills it.
     *
-    * Per-family `{name}_batches` ledgers are BACKFILLED after the
-    * manifest commit (idempotently, on the replay path too, closing
-    * the crash-between-manifest-and-backfill window), so the
-    * single-family maintenance surface — [[compactIndex]], whose
-    * committed set is the family ledger — keeps working unchanged on a
-    * group member. Family-committed is always a subset of
-    * manifest-committed, so per-family compaction can never fold a
-    * batch the group would still need to prune; a manifest-committed
-    * batch whose backfill was interrupted merely stays un-folded until
-    * the next batch (or stream restart) backfills it.
-    *
-    * Scale: the batch is persisted once and feeds all N appends (each
-    * family pays its own batch-scale reduce — tokenize, assign,
-    * histogram — exactly as it would alone); nothing stored is read.
-    * Same convergence-not-isolation caveat as every loop here: between
-    * a crash and the replay, readers may see a torn batch.
-    *
-    * Single-writer: the group loop owns every member family —
-    * [[multiIngest]] takes the group lease AND each family lease, and
-    * each batch re-checks all of them, so a stray single-family stream
-    * or a concurrent compaction turns loud within one batch. */
-  def multiIngestBatch(batch: DataFrame, batchId: Long, group: String,
-      families: Seq[StoreFamily],
-      leases: Map[String, String] = Map.empty): Unit = {
-    val spark = batch.sparkSession
+    * Honest limits: between a crash and the replay, readers can see a
+    * torn batch (convergence, not isolation), and whatever `work` emits
+    * beside its appends (a `route` callback) fires at-least-once. */
+  private def commitBatch(spark: SparkSession, group: String,
+      members: Seq[StoreFamily], batchId: Long,
+      leases: Map[String, String])(work: => Unit): Unit = {
     import spark.implicits._
-    require(families.nonEmpty, "multiIngestBatch: need at least one family")
-    require(families.map(_.name).distinct.size == families.size,
-      "multiIngestBatch: family names must be unique, got " +
-        families.map(_.name).mkString(", "))
+    require(members.map(_.name).distinct.size == members.size,
+      s"ingest group '$group': store names must be unique, got " +
+        members.map(_.name).mkString(", ") + " — a repeated store (a " +
+        "family listed twice, or the triage index listed as a family " +
+        "too) would append the batch twice under one batch_id, which " +
+        "prune/replay cannot repair")
+    def holds(table: String) = spark.catalog.tableExists(table) &&
+      spark.table(table).filter(col("batch_id") === batchId).head(1).nonEmpty
+    def record(table: String) =
+      Seq(batchId).toDF("batch_id").write.mode("append").saveAsTable(table)
     val manifest = s"${group}_manifest"
-    val committed = spark.catalog.tableExists(manifest) &&
-      spark.table(manifest).filter(col("batch_id") === batchId)
-        .head(1).nonEmpty
-    if (!committed) {
+    if (!holds(manifest)) {
       leases.foreach { case (n, t) =>
         graft.operators.WriterLease.check(spark, n, t)
       }
-      families.foreach(_.prune(spark, batchId))
+      members.foreach(_.prune(spark, batchId))
+      work
+      record(manifest)
+    }
+    members.map(f => s"${f.name}_batches").filterNot(holds).foreach(record)
+  }
+
+  /** Start a foreachBatch ingest loop: claim each writer lease once per
+    * stream start (takeover semantics — a restart after a crash just
+    * re-takes it; `distinct`, so a group of one takes its lease once),
+    * then drive `runBatch` with the tokens, which re-checks them every
+    * batch. Checkpointed streams already run one query per checkpoint;
+    * the lease makes a SECOND writer on the same stores (another stream,
+    * a compaction) turn this loop loud within one batch. */
+  private def startIngest(input: DataFrame, checkpoint: String,
+      leaseNames: Seq[String])(
+      runBatch: (DataFrame, Long, Map[String, String]) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val leases = leaseNames.distinct.map(n =>
+      n -> graft.operators.WriterLease.take(input.sparkSession, n)).toMap
+    input.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch((b: DataFrame, id: java.lang.Long) =>
+        runBatch(b, id, leases))
+      .start()
+  }
+
+  /** One micro-batch of the store-family ingest: every family in
+    * `families` accumulates the raw batch under one `commitBatch`
+    * commit in `{group}_manifest`. A single family is a group of one —
+    * conventionally `group = family.name`, so the store's own
+    * `{name}_manifest` is its commit point, which the store's `build`
+    * drops with its ledger. A multi-family `{group}_manifest` belongs to
+    * no store: drop it when rebuilding the members, or a fresh stream
+    * skips batch ids the old one committed.
+    *
+    * Scale: the batch is persisted once and feeds all N appends (each
+    * family pays its own batch-scale reduce — tokenize, assign,
+    * histogram — exactly as it would alone); nothing stored is read. The
+    * accumulation families can be pruned and re-appended precisely
+    * because each store is a mergeable summary (counters, postings,
+    * min-k quotas, per-batch reports): a batch's contribution is its own
+    * partition, and the served answer is the merge over partitions. */
+  def multiIngestBatch(batch: DataFrame, batchId: Long, group: String,
+      families: Seq[StoreFamily],
+      leases: Map[String, String] = Map.empty): Unit = {
+    require(families.nonEmpty, "multiIngestBatch: need at least one family")
+    commitBatch(batch.sparkSession, group, families, batchId, leases) {
       val pinned = batch.persist()
       try families.foreach(_.append(pinned, batchId))
       finally { pinned.unpersist(); () }
-      Seq(batchId).toDF("batch_id").write.mode("append").saveAsTable(manifest)
-    }
-    // family-ledger backfill — AFTER the manifest commit, never before:
-    // a family row ahead of the manifest would let that family's
-    // compaction fold a batch the group replay still needs to prune
-    families.foreach { f =>
-      val ledger = s"${f.name}_batches"
-      val has = spark.catalog.tableExists(ledger) &&
-        spark.table(ledger).filter(col("batch_id") === batchId)
-          .head(1).nonEmpty
-      if (!has)
-        Seq(batchId).toDF("batch_id").write.mode("append")
-          .saveAsTable(ledger)
     }
   }
 
-  /** One micro-batch of the TRIAGE-DRIVEN group ingest — the full
-    * production pipeline under one commit point: the batch triages
-    * against the persisted shingle index ([[graft.operators.Ingest]]),
-    * `route` observes every fate (at-least-once, as in [[ingestBatch]]),
-    * and then the ACCEPTED docs — not the raw batch — feed the shingle
-    * index AND every derived family. This closes the last two-commit-
-    * domain gap: with [[ingestTriage]] for dedup and a separate
-    * [[multiIngest]] for the derived stores, a crash between the two
-    * streams' commits could leave the index holding a batch the
-    * posting/CMS/DSIR stores never saw (or vice versa); here one
-    * `{group}_manifest` row covers them all, and the replay contract
-    * is [[multiIngestBatch]]'s verbatim — prune everywhere, redo
-    * everything, or skip everywhere.
+  /** The store-family ingest loop: foreachBatch driving
+    * [[multiIngestBatch]] — one stream feeding shingle + posting + CMS +
+    * DSIR (+ any other family) with ONE commit point per batch, holding
+    * the group lease and every family lease. All member stores must be
+    * built over the seed corpus first; compact members between restarts
+    * via [[compactGroup]] (or per family via [[compactIndex]]). */
+  def multiIngest(docs: DataFrame, group: String,
+      families: Seq[StoreFamily], checkpoint: String)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    startIngest(docs, checkpoint, group +: families.map(_.name))(
+      (b, id, leases) => multiIngestBatch(b, id, group, families, leases))
+
+  /** One micro-batch of the TRIAGE-DRIVEN ingest — the full production
+    * pipeline under one commit point: scrub → quality → Bloom gate →
+    * near-dup triage against the persisted, GROWING shingle index
+    * ([[graft.operators.Ingest.triage]]), `route` observes every fate
+    * (the caller's policy: corpus sink, quarantine, metrics), and then
+    * the ACCEPTED docs — not the raw batch — feed the shingle index AND
+    * every derived family, so later micro-batches dedup against earlier
+    * ones. The index is a group member implicitly; plain dedup ingest is
+    * `group = cfg.indexName` with no families. One `{group}_manifest`
+    * row covers the index and every family: a crash can never leave the
+    * index holding a batch the posting/CMS/DSIR stores never saw.
     *
     * Triage normalizes its output to (doc_id, text, …) whatever the
     * input column names, so member families must close over
     * ("doc_id", "text") — e.g. `StoreFamily.posting(name, "doc_id",
-    * "text")` — regardless of `idCol`/`textCol`.
-    *
-    * The derived families see exactly the docs the index accepted, so
-    * the doc-disjointness contract every append family states is
-    * enforced by construction: a near-dup re-submission is triaged
-    * into `duplicate` and never reaches an append.
+    * "text")` — regardless of `idCol`/`textCol`. The derived families
+    * see exactly the docs the index accepted, so the doc-disjointness
+    * contract every append family states is enforced by construction: a
+    * near-dup re-submission is triaged into `duplicate` and never
+    * reaches an append. `route` fires at-least-once — a non-idempotent
+    * route action must key off the batch id on its own sink.
     *
     * The triage result is computed ONCE and feeds route, the index
-    * append, and all family appends; the session cache is cleared in
-    * `finally` ([[ingestBatch]]'s convention — triage persists shared
-    * subtrees and a foreachBatch loop never returns to a clearing
-    * scope). */
+    * append and all family appends. The session cache is cleared in
+    * `finally`: the callees (Ingest.triage → ShingleIndex
+    * .incrementalPairs) persist shared subtrees under the
+    * caller-clears-cache convention, and a foreachBatch loop never
+    * returns to a clearing scope — without this the pinned frames
+    * accumulate one set per micro-batch for the stream's lifetime. The
+    * loop owns its session's cache between batches; run the stream in a
+    * dedicated SparkSession if you cache elsewhere. */
   def triageMultiIngestBatch(batch: DataFrame, batchId: Long,
       idCol: String, textCol: String,
       cfg: graft.operators.Ingest.Config, group: String,
@@ -1016,15 +607,6 @@ object Streams {
       route: (DataFrame, Long) => Unit = (_, _) => (),
       leases: Map[String, String] = Map.empty): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
-    require(!families.exists(_.name == cfg.indexName),
-      s"triageMultiIngestBatch: the triage index '${cfg.indexName}' is " +
-        "a group member implicitly — do not list it as a family too")
-    require(families.map(_.name).distinct.size == families.size,
-      "triageMultiIngestBatch: family names must be unique, got " +
-        families.map(_.name).mkString(", ") +
-        " — a repeated family would append the batch twice into one " +
-        "store under one batch_id, which prune/replay cannot repair")
     // the same-normalizer invariant is ASSERTED, not commented: every
     // tokenizing family must normalize exactly as the triage does
     // (Column.equals compares the normalized expression trees the two
@@ -1042,61 +624,159 @@ object Streams {
             "batch); pass the SAME normalizer to the StoreFamily " +
             "constructor and Ingest.Config")))
     }
-    val manifest = s"${group}_manifest"
-    val committed = spark.catalog.tableExists(manifest) &&
-      spark.table(manifest).filter(col("batch_id") === batchId)
-        .head(1).nonEmpty
-    if (!committed) {
-      leases.foreach { case (n, t) =>
-        graft.operators.WriterLease.check(spark, n, t)
-      }
-      graft.operators.ShingleIndex.pruneBatch(spark, cfg.indexName, batchId)
-      families.foreach(_.prune(spark, batchId))
+    val members = StoreFamily.shingle(cfg.indexName, "doc_id", "text",
+      cfg.norm) +: families
+    commitBatch(spark, group, members, batchId, leases) {
       val fates = graft.operators.Ingest
         .triage(batch, idCol, textCol, cfg).persist()
       try {
         route(fates, batchId)
         val accepted = fates.filter(col("fate") === "accepted")
           .select(col("doc_id"), col("text"))
-        graft.operators.ShingleIndex.append(accepted, "doc_id", "text",
-          cfg.indexName, batchId, cfg.norm)
-        families.foreach(_.append(accepted, batchId))
-        Seq(batchId).toDF("batch_id").write.mode("append")
-          .saveAsTable(manifest)
+        members.foreach(_.append(accepted, batchId))
       } finally spark.catalog.clearCache()
-    }
-    (cfg.indexName +: families.map(_.name)).foreach { n =>
-      val ledger = s"${n}_batches"
-      val has = spark.catalog.tableExists(ledger) &&
-        spark.table(ledger).filter(col("batch_id") === batchId)
-          .head(1).nonEmpty
-      if (!has)
-        Seq(batchId).toDF("batch_id").write.mode("append")
-          .saveAsTable(ledger)
     }
   }
 
-  /** The triage-driven group loop: foreachBatch driving
-    * [[triageMultiIngestBatch]] — scrub → quality → Bloom gate →
-    * near-dup triage against the growing shingle index, then every
-    * derived store ingests the accepted docs, all under one manifest
-    * commit per micro-batch. The index and every family must be built
-    * first; compact via [[compactGroup]]/[[compactIndex]] between
-    * restarts. */
+  /** The triage-driven loop: foreachBatch driving
+    * [[triageMultiIngestBatch]]. The index and every family must be
+    * built first ([[graft.operators.ShingleIndex.build]] over the seed
+    * corpus); stages 1–3 are stateless per-row maps and stage 4 is
+    * batch-bounded against the index — no unbounded state store
+    * anywhere. Fan ingest sources into one stream (union) rather than
+    * running parallel writers; compact via [[compactGroup]] /
+    * [[compactIndex]] between restarts. */
   def triageMultiIngest(docs: DataFrame, idCol: String, textCol: String,
       cfg: graft.operators.Ingest.Config, group: String,
       families: Seq[StoreFamily], checkpoint: String,
       route: (DataFrame, Long) => Unit = (_, _) => ())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = docs.sparkSession
-    val leases = (group +: cfg.indexName +: families.map(_.name))
-      .map(n => n -> graft.operators.WriterLease.take(spark, n)).toMap
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((b: DataFrame, id: java.lang.Long) =>
-        triageMultiIngestBatch(b, id, idCol, textCol, cfg, group,
-          families, route, leases))
-      .start()
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    startIngest(docs, checkpoint,
+        group +: cfg.indexName +: families.map(_.name))(
+      (b, id, leases) => triageMultiIngestBatch(b, id, idCol, textCol, cfg,
+        group, families, route, leases))
+
+  /** Config for the EMBEDDING ingest round — the vector face of
+    * [[graft.operators.Ingest.Config]].
+    *
+    * @param indexName [[graft.operators.IvfIndex]] table-name prefix
+    * @param threshold cosine above which a batch vector is a near-dup
+    * @param assignProbe batch-side multi-assignment width (recall knob,
+    *   same geometry as `Similarity.ivfNearDupPairs`) */
+  final case class VectorIngestConfig(
+      indexName: String, threshold: Double = 0.95, assignProbe: Int = 3)
+
+  /** One micro-batch of the streaming EMBEDDING ingest — the vector
+    * mirror of [[triageMultiIngestBatch]], committed through the same
+    * `commitBatch` as a group of one (`{indexName}_manifest`), with
+    * `lease` the token for `cfg.indexName`.
+    *
+    * Per batch: near-dup triage against the stored corpus and earlier
+    * rows of the same batch ([[graft.operators.IvfIndex
+    * .incrementalNearDups]] — old×old never pairs, batch-bounded),
+    * fates routed (`accepted` | `duplicate` with min-id `dup_of` |
+    * `zero_norm` for vectors cosine cannot compare), then the accepted
+    * vectors append to the index under this batch's partition so later
+    * micro-batches dedup against earlier ones. Same cache-ownership rule
+    * as the text loop: the callee persists its batch frames, so the
+    * session cache is cleared per batch. */
+  def vectorIngestBatch(batch: DataFrame, batchId: Long, idCol: String,
+      vecCol: String, cfg: VectorIngestConfig,
+      route: (DataFrame, Long) => Unit,
+      lease: Option[String] = None): Unit = {
+    val spark = batch.sparkSession
+    val index = StoreFamily.vectors(cfg.indexName, "vec_id", "vec")
+    commitBatch(spark, cfg.indexName, Seq(index), batchId,
+        lease.map(cfg.indexName -> _).toMap) {
+      val dups = graft.operators.IvfIndex.incrementalNearDups(
+        batch, idCol, vecCol, cfg.indexName, cfg.threshold, cfg.assignProbe)
+      // keeper rule lives in ONE place (shared with the p44 gate)
+      val dropped = graft.operators.IvfIndex.dupKeeperMap(dups)
+      val fates = batch
+        .select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
+        .withColumn("_n", sqrt(graft.operators.Similarity.dot(
+          col("vec"), col("vec"))))
+        .join(dropped, Seq("vec_id"), "left")
+        .select(col("vec_id"), col("vec"),
+          when(coalesce(col("_n"), lit(0.0)) <= 0, lit("zero_norm"))
+            .when(col("dup_of").isNotNull, lit("duplicate"))
+            .otherwise(lit("accepted")).as("fate"),
+          when(coalesce(col("_n"), lit(0.0)) > 0, col("dup_of")).as("dup_of"))
+        .persist()
+      try {
+        route(fates, batchId)
+        index.append(fates.filter(col("fate") === "accepted")
+          .select(col("vec_id"), col("vec")), batchId)
+      } finally spark.catalog.clearCache()
+    }
+  }
+
+  /** The streaming embedding ingest loop: foreachBatch driving
+    * [[vectorIngestBatch]] — near-dup triage against the PERSISTED,
+    * GROWING IVF index with batch-id idempotence. The index must exist
+    * ([[graft.operators.IvfIndex.build]] it over the seed corpus
+    * first — centroids stay frozen across appends; schedule periodic
+    * rebuilds if the ingest distribution drifts). */
+  def vectorIngest(vectors: DataFrame, idCol: String, vecCol: String,
+      cfg: VectorIngestConfig, checkpoint: String,
+      route: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    startIngest(vectors, checkpoint, Seq(cfg.indexName))(
+      (b, id, leases) => vectorIngestBatch(b, id, idCol, vecCol, cfg, route,
+        leases.get(cfg.indexName)))
+
+  /** Every persisted-store family by the partitioned table whose
+    * existence names it, with its compaction — the dispatch table of
+    * [[compactIndex]]. */
+  private val compactors
+      : Seq[(String, String, (SparkSession, String, Set[Long]) => Unit)] =
+    Seq(
+      ("_idx", "shingle", graft.operators.ShingleIndex.compact),
+      ("_cells", "IVF", graft.operators.IvfIndex.compact),
+      ("_cms", "CMS stats", graft.operators.CmsStore.compact),
+      ("_post", "BM25", graft.operators.PostingIndex.compact),
+      ("_dsir", "DSIR model", graft.operators.DsirStore.compact),
+      ("_smpl", "balanced sample", graft.operators.SampleStore.compact),
+      ("_drift", "drift reports", graft.operators.DriftStore.compact))
+
+  /** Ledger-aware compaction for a STOPPED ingest stream: folds every
+    * ledger-committed batch partition into the store's base while
+    * leaving any appended-but-uncommitted batch (a crash the stream has
+    * not replayed yet) prunable in place. One maintenance entry point
+    * serves every family — the table layout names it (`{name}_idx` →
+    * [[graft.operators.ShingleIndex.compact]], `{name}_cells` →
+    * [[graft.operators.IvfIndex.compact]], `{name}_cms` →
+    * [[graft.operators.CmsStore.compact]], which also MERGES folded
+    * counters back to one matrix, and so on). The uncommitted set is
+    * computed, not assumed: batch ids stamped in the store's REGISTERED
+    * partitions (SHOW PARTITIONS — catalog metadata only; a
+    * `select(batch_id).distinct()` would scan the store, Spark's
+    * metadata-only rewrite being off by default) minus the
+    * `{name}_batches` ledger's ids. Run between stream restarts —
+    * compaction is a writer, and it TAKES the writer lease, so an ingest
+    * stream mistakenly left running fails loudly at its next batch
+    * instead of interleaving with the rewrite. */
+  def compactIndex(spark: SparkSession, indexName: String): Unit = {
+    val (partTable, runCompact) = compactors.iterator
+      .map { case (suffix, _, compact) => (indexName + suffix, compact) }
+      .find(t => spark.catalog.tableExists(t._1))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no persisted index named '$indexName' — none of " +
+          compactors.map { case (suffix, family, _) =>
+            s"$indexName$suffix ($family)" }.mkString(", ") + " exists"))
+    graft.operators.WriterLease.take(spark, indexName)
+    val appended = spark.sql(s"SHOW PARTITIONS $partTable")
+      .collect()
+      .flatMap(_.getString(0).split('/').find(_.startsWith("batch_id=")))
+      .map(_.stripPrefix("batch_id=").toLong).toSet
+    val ledger = s"${indexName}_batches"
+    val committed =
+      if (spark.catalog.tableExists(ledger))
+        spark.table(ledger).select(col("batch_id")).collect()
+          .map(_.getLong(0)).toSet
+      else Set.empty[Long]
+    runCompact(spark, indexName,
+      appended -- committed - graft.operators.ShingleIndex.BaseBatch)
   }
 
   /** Compact every member family of a STOPPED group ingest — the
@@ -1104,29 +784,8 @@ object Streams {
     * Valid precisely because the ledger backfill keeps
     * family-committed ⊆ manifest-committed: each family's own ledger
     * already names every batch safe to fold, so per-family compaction
-    * needs no group awareness (a manifest-committed batch whose
-    * backfill was interrupted simply stays un-folded until the next
-    * backfill — safe, bounded by one batch). */
+    * needs no group awareness. */
   def compactGroup(spark: SparkSession,
       families: Seq[StoreFamily]): Unit =
     families.foreach(f => compactIndex(spark, f.name))
-
-  /** The cross-family atomic ingest loop: foreachBatch driving
-    * [[multiIngestBatch]] — one stream feeding shingle + posting + CMS
-    * + DSIR (+ any other family) with ONE commit point per batch. All
-    * member stores must be built over the seed corpus first; compact
-    * members between restarts via [[compactGroup]] (or per family via
-    * [[compactIndex]]). */
-  def multiIngest(docs: DataFrame, group: String,
-      families: Seq[StoreFamily], checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = docs.sparkSession
-    val leases = (group +: families.map(_.name))
-      .map(n => n -> graft.operators.WriterLease.take(spark, n)).toMap
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((b: DataFrame, id: java.lang.Long) =>
-        multiIngestBatch(b, id, group, families, leases))
-      .start()
-  }
 }

@@ -28,10 +28,13 @@ object ScaleLadder {
     val fam = when(pmod(col("id"), lit(10)) === 9, col("id") - 1)
       .otherwise(col("id"))
     val len = (pmod(hash32(concat(lit("len"), fam)), lit(81)) + 40)
+    // words hash the family column of the first select: `fam` itself
+    // refers to `id`, which that select renamed away
     val word = (p: org.apache.spark.sql.Column) => {
-      val h = hash32(concat(lit("w"), fam, lit("_"), p))
+      val h = hash32(concat(lit("w"), col("_fam"), lit("_"), p))
       val common = pmod(h, lit(150))
-      val rare = pmod(hash32(concat(lit("r"), fam, lit("_"), p)), lit(30000))
+      val rare = pmod(hash32(concat(lit("r"), col("_fam"), lit("_"), p)),
+        lit(30000))
       concat(lit("w"), when(pmod(h, lit(10)) < 3, common).otherwise(rare))
     }
     spark.range(n).select(col("id").as("doc_id"),

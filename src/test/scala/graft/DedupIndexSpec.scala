@@ -233,4 +233,29 @@ class DedupIndexSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("incrementalPairs rejects a string-id store probed with long ids at entry, naming both types") {
+    import spark.implicits._
+    val text = "one two three four five six seven eight nine ten"
+    try {
+      ShingleIndex.build(Seq(("a", text)).toDF("doc_id", "text"),
+        "doc_id", "text", "graft_strid")
+      val e = intercept[IllegalArgumentException] {
+        ShingleIndex.incrementalPairs(Seq((1L, text)).toDF("doc_id", "text"),
+          "doc_id", "text", "graft_strid")
+      }
+      assert(e.getMessage.contains("batch doc_id: bigint") &&
+        e.getMessage.contains("graft_strid_idx.doc_id: string"), e.getMessage)
+    } finally Seq("graft_strid_idx", "graft_strid_sh", "graft_strid_meta")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("ScaleLadder corpus: every doc 10k+9 is a planted near-dup of doc 10k+8") {
+    val corpus = graft.tools.ScaleLadder.docs(spark, 20)
+    assert(corpus.count() == 20)
+    val pairs = Dedup.ngramJaccardPairs(corpus, "doc_id", "text")
+      .collect().map(r => (r.getAs[Long]("ida"), r.getAs[Long]("idb"))).toSet
+    spark.catalog.clearCache()
+    assert(pairs == Set((8L, 9L), (18L, 19L)), pairs.toString)
+  }
 }

@@ -80,9 +80,14 @@ class EtlSpec extends AnyFunSuite {
         (Some(99L), "d"), (None: Option[Long], "e"))
       .toDF("cust_id", "v")
     val ref = Seq(1L, 2L, 3L).toDF("c_id")
-    val bad = Import.fkViolations(staging, "cust_id", ref, "c_id").collect()
-    assert(bad.length == 1)
-    assert(bad(0).getAs[Long]("cust_id") == 99L && bad(0).getAs[Long]("n_rows") == 2)
+    // the second input also carries a staging column named like the
+    // reference key, which an unqualified join condition would make
+    // ambiguous
+    Seq(staging, staging.withColumn("c_id", lit(3L))).foreach { in =>
+      val bad = Import.fkViolations(in, "cust_id", ref, "c_id").collect()
+      assert(bad.length == 1)
+      assert(bad(0).getAs[Long]("cust_id") == 99L && bad(0).getAs[Long]("n_rows") == 2)
+    }
   }
 
   test("jsonl roundtrip: documents -> sink -> stage, schema + rows survive") {

@@ -350,8 +350,8 @@ class StreamsSpec extends AnyFunSuite {
       }
       val in = MemoryStream[(Long, String)]
       val ckpt = java.nio.file.Files.createTempDirectory("graft_ing_ckpt")
-      val q = Streams.ingestTriage(in.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", cfg, ckpt.toString, route)
+      val q = Streams.triageMultiIngest(in.toDF().toDF("doc_id", "text"),
+        "doc_id", "text", cfg, cfg.indexName, Nil, ckpt.toString, route)
       in.addData((10L, novelA), (11L, "too short"))
       q.processAllAvailable()
       in.addData((20L, nearDupA), (21L, novelB))
@@ -368,14 +368,14 @@ class StreamsSpec extends AnyFunSuite {
       // failures; a replayed append would inflate df counts)
       val postings = spark.table("graft_sing_idx").count()
       val calls = batchIds.size
-      Streams.ingestBatch(Seq((99L, novelC)).toDF("doc_id", "text"),
-        batchIds.head, "doc_id", "text", cfg, route)
+      Streams.triageMultiIngestBatch(Seq((99L, novelC)).toDF("doc_id", "text"),
+        batchIds.head, "doc_id", "text", cfg, cfg.indexName, Nil, route)
       assert(spark.table("graft_sing_idx").count() == postings)
       assert(batchIds.size == calls)
       assert(!fates.contains(99L))
       // ...while a NEW batch id processes normally
-      Streams.ingestBatch(Seq((99L, novelC)).toDF("doc_id", "text"),
-        batchIds.max + 1, "doc_id", "text", cfg, route)
+      Streams.triageMultiIngestBatch(Seq((99L, novelC)).toDF("doc_id", "text"),
+        batchIds.max + 1, "doc_id", "text", cfg, cfg.indexName, Nil, route)
       assert(fates(99L)._1 == "accepted")
       assert(spark.table("graft_sing_idx").count() > postings)
       // REAL restart replay: delete the checkpoint's last commit marker
@@ -400,8 +400,8 @@ class StreamsSpec extends AnyFunSuite {
         lastCommit.resolveSibling("." + lastCommit.getFileName + ".crc"))
       val beforeReplay = spark.table("graft_sing_idx").count()
       val callsBefore = batchIds.size
-      val q2 = Streams.ingestTriage(in.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", cfg, ckpt.toString, route)
+      val q2 = Streams.triageMultiIngest(in.toDF().toDF("doc_id", "text"),
+        "doc_id", "text", cfg, cfg.indexName, Nil, ckpt.toString, route)
       q2.processAllAvailable()
       q2.stop()
       assert(spark.table("graft_sing_idx").count() == beforeReplay,
@@ -410,7 +410,7 @@ class StreamsSpec extends AnyFunSuite {
         "a replayed committed batch must not re-route")
     } finally {
       Seq("graft_sing_idx", "graft_sing_sh", "graft_sing_meta",
-        "graft_sing_batches")
+        "graft_sing_batches", "graft_sing_manifest")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.catalog.clearCache()
     }
@@ -467,7 +467,8 @@ class StreamsSpec extends AnyFunSuite {
       assert(fates(99L)._1 == "accepted")
       assert(spark.table("graft_ving_cells").count() > cells)
     } finally {
-      Seq("graft_ving_cells", "graft_ving_cent", "graft_ving_batches")
+      Seq("graft_ving_cells", "graft_ving_cent", "graft_ving_batches",
+        "graft_ving_manifest")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.catalog.clearCache()
     }
@@ -537,7 +538,8 @@ class StreamsSpec extends AnyFunSuite {
         .filter(col("neighbor_id") === 20L).count()
       assert(nnAfter == 1, "compaction must not change any answer")
     } finally {
-      Seq("graft_vcrash_cells", "graft_vcrash_cent", "graft_vcrash_batches")
+      Seq("graft_vcrash_cells", "graft_vcrash_cent", "graft_vcrash_batches",
+        "graft_vcrash_manifest")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.catalog.clearCache()
     }
@@ -599,7 +601,7 @@ class StreamsSpec extends AnyFunSuite {
         "compaction must carry the codes column")
     } finally {
       Seq("graft_vpq_cells", "graft_vpq_cent", "graft_vpq_books",
-        "graft_vpq_batches")
+        "graft_vpq_batches", "graft_vpq_manifest")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.catalog.clearCache()
     }
@@ -640,7 +642,8 @@ class StreamsSpec extends AnyFunSuite {
         Seq((10L, Seq(0f, 1f, 0f, 0f))).toDF("vec_id", "embedding"),
         0L, "vec_id", "embedding", cfg, noop, lease = Some(mine))
     } finally {
-      Seq("graft_vlease_cells", "graft_vlease_cent", "graft_vlease_batches")
+      Seq("graft_vlease_cells", "graft_vlease_cent", "graft_vlease_batches",
+        "graft_vlease_manifest")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       WriterLease.release(spark, "graft_vlease")
       spark.catalog.clearCache()
@@ -664,8 +667,8 @@ class StreamsSpec extends AnyFunSuite {
     try {
       ShingleIndex.build(Seq((1L, seed)).toDF("doc_id", "text"),
         "doc_id", "text", "graft_crash")
-      Streams.ingestBatch(Seq((10L, docA)).toDF("doc_id", "text"),
-        0L, "doc_id", "text", cfg, noop)
+      Streams.triageMultiIngestBatch(Seq((10L, docA)).toDF("doc_id", "text"),
+        0L, "doc_id", "text", cfg, cfg.indexName, Nil, noop)
       val committed = spark.table("graft_crash_idx").count()
       // simulate the crash window: batch 1's accepted docs were appended
       // to the index, the JVM died BEFORE the ledger row — exactly the
@@ -677,8 +680,8 @@ class StreamsSpec extends AnyFunSuite {
       // foreachBatch re-executes the uncommitted batch on restart with
       // the same id and the same data: the replay must prune the torn
       // append first, so the index converges to exactly one copy
-      Streams.ingestBatch(Seq((20L, docB)).toDF("doc_id", "text"),
-        1L, "doc_id", "text", cfg, noop)
+      Streams.triageMultiIngestBatch(Seq((20L, docB)).toDF("doc_id", "text"),
+        1L, "doc_id", "text", cfg, cfg.indexName, Nil, noop)
       val idx = spark.table("graft_crash_idx")
       assert(idx.count() == tornTotal,
         "replay must land exactly the postings one clean append writes")
@@ -699,7 +702,7 @@ class StreamsSpec extends AnyFunSuite {
       // folds into base (the ledger knows 0 and 1 committed; nothing is
       // torn now), directory growth resets, answers unchanged
       spark.catalog.clearCache()
-      Streams.compactIndex(spark, cfg)
+      Streams.compactIndex(spark, cfg.indexName)
       val dirs = {
         val warehouse = spark.conf.get("spark.sql.warehouse.dir")
           .stripPrefix("file:")
@@ -719,7 +722,7 @@ class StreamsSpec extends AnyFunSuite {
       assert(pairsAfter == 1, "compaction must not change any answer")
     } finally {
       Seq("graft_crash_idx", "graft_crash_sh", "graft_crash_meta",
-        "graft_crash_batches")
+        "graft_crash_batches", "graft_crash_manifest")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.catalog.clearCache()
     }
@@ -730,6 +733,8 @@ class StreamsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val name = "graft_postledger"
+    // a single store ingests as a group of one
+    val fam = Seq(Streams.StoreFamily.posting(name, "doc_id", "text"))
     val seed = Seq((10L, "zebra quark filler words here"),
       (1L, "zebra walks alone tonight")).toDF("doc_id", "text")
     val b0 = Seq((2L, "quark soup again today")).toDF("doc_id", "text")
@@ -746,15 +751,15 @@ class StreamsSpec extends AnyFunSuite {
     }
     try {
       PostingIndex.build(seed, "doc_id", "text", name, buckets = 4)
-      Streams.postingIngestBatch(b0, 0L, "doc_id", "text", name)
+      Streams.multiIngestBatch(b0, 0L, name, fam)
       assert(served() == mem(seed, b0))
       // replay of the committed batch: no double-counted postings/stats
-      Streams.postingIngestBatch(b0, 0L, "doc_id", "text", name)
+      Streams.multiIngestBatch(b0, 0L, name, fam)
       assert(served() == mem(seed, b0))
       // torn batch: postings + stats appended, no ledger row; the
       // replay prunes both and converges
       PostingIndex.append(b1, "doc_id", "text", name, batchId = 1L)
-      Streams.postingIngestBatch(b1, 1L, "doc_id", "text", name)
+      Streams.multiIngestBatch(b1, 1L, name, fam)
       assert(served() == mem(seed, b0, b1))
       // family dispatch: compactIndex finds {name}_post and folds the
       // committed batches to base without changing any score
@@ -765,7 +770,7 @@ class StreamsSpec extends AnyFunSuite {
       assert(served() == mem(seed, b0, b1))
     } finally {
       Seq(s"${name}_post", s"${name}_stats", s"${name}_meta",
-        s"${name}_batches")
+        s"${name}_batches", s"${name}_manifest")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.catalog.clearCache()
     }
@@ -776,6 +781,8 @@ class StreamsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val name = "graft_cmsstore"
+    // a single store ingests as a group of one
+    val fam = Seq(Streams.StoreFamily.cms(name, "doc_id", "text"))
     val seed = Seq((1L, "alpha beta gamma delta epsilon"),
       (2L, "alpha beta gamma other words")).toDF("doc_id", "text")
     val b0 = Seq((10L, "alpha beta gamma again here")).toDF("doc_id", "text")
@@ -797,15 +804,15 @@ class StreamsSpec extends AnyFunSuite {
       CmsStore.build(seed, "doc_id", "text", name, n, depth, width)
       assert(fromStore() == fromScratch(seed))
       // committed ingest batch: store must equal a rebuild over the union
-      Streams.statsIngestBatch(b0, 0L, "doc_id", "text", name)
+      Streams.multiIngestBatch(b0, 0L, name, fam)
       assert(fromStore() == fromScratch(seed, b0))
       // replayed committed batch is a no-op (no double counting)
-      Streams.statsIngestBatch(b0, 0L, "doc_id", "text", name)
+      Streams.multiIngestBatch(b0, 0L, name, fam)
       assert(fromStore() == fromScratch(seed, b0))
       // torn batch: counters appended, JVM "dies" before the ledger row
       CmsStore.append(b1, "doc_id", "text", name, batchId = 1L)
       // replay with the same id and data: prune-then-append converges
-      Streams.statsIngestBatch(b1, 1L, "doc_id", "text", name)
+      Streams.multiIngestBatch(b1, 1L, name, fam)
       assert(fromStore() == fromScratch(seed, b0, b1))
       // ledger-aware compaction folds every committed batch into base,
       // MERGING counters: one batch_id=-1 partition, ≤ depth·width rows
@@ -830,7 +837,8 @@ class StreamsSpec extends AnyFunSuite {
         == hhRows(Corpus.cmsHeavyHitters(union, "doc_id", "text",
           n, depth, width, 2L)))
     } finally {
-      Seq(s"${name}_cms", s"${name}_meta", s"${name}_batches")
+      Seq(s"${name}_cms", s"${name}_meta", s"${name}_batches",
+        s"${name}_manifest")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.catalog.clearCache()
     }
@@ -842,13 +850,15 @@ class StreamsSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val name = "graft_driftlive"
+    // a single store ingests as a group of one
+    val fam = Seq(Streams.StoreFamily.drift(name, "src", "v"))
     val ref = (1L to 60L).map(i => ("s" + (i % 2), i % 23)).toDF("src", "v")
     try {
       DriftStore.build(ref, "src", "v", name, 4L)
       val in = MemoryStream[(String, Long)]
       val ckpt = java.nio.file.Files.createTempDirectory("graft_drift_ckpt")
-      val q = Streams.driftIngest(in.toDF().toDF("src", "v"),
-        "src", "v", name, ckpt.toString)
+      val q = Streams.multiIngest(in.toDF().toDF("src", "v"),
+        name, fam, ckpt.toString)
       val b0 = (1L to 30L).map(i => ("s" + (i % 2), i % 19))
       val b1 = (1L to 25L).map(i => ("s" + (i % 2), (i % 7) + 40))
       in.addData(b0: _*)
@@ -873,14 +883,14 @@ class StreamsSpec extends AnyFunSuite {
       // takeover semantics: a new monitor (e.g. after re-baseline)
       // claims the lease on start — no manual cleanup after a stop
       // or crash (WriterLease.take overwrites)
-      val q2 = Streams.driftIngest(in.toDF().toDF("src", "v"),
-        "src", "v", name, ckpt.toString)
+      val q2 = Streams.multiIngest(in.toDF().toDF("src", "v"),
+        name, fam, ckpt.toString)
       in.addData(("s0", 5L))
       q2.processAllAvailable()
       q2.stop()
     } finally {
       Seq(s"${name}_ref", s"${name}_meta", s"${name}_drift",
-        s"${name}_batches")
+        s"${name}_batches", s"${name}_manifest")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.catalog.clearCache()
     }
@@ -892,6 +902,8 @@ class StreamsSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val name = "graft_samplestore"
+    // a single store ingests as a group of one
+    val fam = Seq(Streams.StoreFamily.sample(name, "vec_id", "embedding"))
     def vec(i: Long) = (i, Array((i % 7).toDouble + 1.0,
       (i % 5).toDouble, (i % 3).toDouble))
     val base = (1L to 20L).map(vec).toDF("vec_id", "embedding")
@@ -914,8 +926,8 @@ class StreamsSpec extends AnyFunSuite {
       // associativity means the served sample tracks the union exactly
       val in = MemoryStream[(Long, Array[Double])]
       val ckpt = java.nio.file.Files.createTempDirectory("graft_smpl_ckpt")
-      val q = Streams.sampleIngest(in.toDF().toDF("vec_id", "embedding"),
-        "vec_id", "embedding", name, ckpt.toString)
+      val q = Streams.multiIngest(in.toDF().toDF("vec_id", "embedding"),
+        name, fam, ckpt.toString)
       in.addData(b0: _*); q.processAllAvailable()
       in.addData(b1: _*); q.processAllAvailable()
       q.stop()
@@ -931,8 +943,8 @@ class StreamsSpec extends AnyFunSuite {
       val b2 = Seq(vec(41L))
       SampleStore.append(b2.toDF("vec_id", "embedding"),
         "vec_id", "embedding", name, 60L)
-      Streams.sampleIngestBatch(b2.toDF("vec_id", "embedding"), 60L,
-        "vec_id", "embedding", name)
+      Streams.multiIngestBatch(b2.toDF("vec_id", "embedding"), 60L,
+        name, fam)
       assert(served() == oneShot(union(b0, b1, b2)))
       // compaction folds committed partitions without moving a row of
       // the served sample (the 50L direct append is uncommitted — it
@@ -943,7 +955,7 @@ class StreamsSpec extends AnyFunSuite {
       assert(parts == 2, s"expected base + uncommitted, got $parts")
     } finally {
       Seq(s"${name}_cent", s"${name}_smpl", s"${name}_meta",
-        s"${name}_batches")
+        s"${name}_batches", s"${name}_manifest")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.catalog.clearCache()
     }
@@ -955,6 +967,8 @@ class StreamsSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val name = "graft_dsirstore"
+    // a single store ingests as a group of one
+    val fam = Seq(Streams.StoreFamily.dsir(name, "doc_id", "text"))
     val B = 256
     def doc(i: Long, t: String) = (i, t)
     val base = Seq(doc(1, "alpha beta alpha"), doc(2, "gamma delta"),
@@ -979,8 +993,8 @@ class StreamsSpec extends AnyFunSuite {
       // two micro-batches through the real writeStream loop
       val in = MemoryStream[(Long, String)]
       val ckpt = java.nio.file.Files.createTempDirectory("graft_dsir_ckpt")
-      val q = Streams.dsirIngest(in.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", name, ckpt.toString)
+      val q = Streams.multiIngest(in.toDF().toDF("doc_id", "text"),
+        name, fam, ckpt.toString)
       in.addData(b0: _*); q.processAllAvailable()
       in.addData(b1: _*); q.processAllAvailable()
       q.stop()
@@ -994,13 +1008,13 @@ class StreamsSpec extends AnyFunSuite {
       // batch-level replay prunes and re-appends — converges
       val b2 = Seq(doc(8, "alpha sierra"))
       DsirStore.append(b2.toDF("doc_id", "text"), "doc_id", "text", name, 9L)
-      Streams.dsirIngestBatch(b2.toDF("doc_id", "text"), 9L,
-        "doc_id", "text", name)
+      Streams.multiIngestBatch(b2.toDF("doc_id", "text"), 9L,
+        name, fam)
       val all3 = union(b0, b1, b2)
       assert(served(all3) == oneShot(all3))
       // replay of a committed batch is a no-op
-      Streams.dsirIngestBatch(b2.toDF("doc_id", "text"), 9L,
-        "doc_id", "text", name)
+      Streams.multiIngestBatch(b2.toDF("doc_id", "text"), 9L,
+        name, fam)
       assert(served(all3) == oneShot(all3))
       // compaction merges counters without moving a single weight, and
       // the source table shrinks back to one ≤ buckets-row histogram
@@ -1010,7 +1024,7 @@ class StreamsSpec extends AnyFunSuite {
       assert(parts == 1, s"expected one folded partition, got $parts")
     } finally {
       Seq(s"${name}_tgt", s"${name}_dsir", s"${name}_meta",
-        s"${name}_batches")
+        s"${name}_batches", s"${name}_manifest")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.catalog.clearCache()
     }
@@ -1021,6 +1035,8 @@ class StreamsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val name = "graft_driftstore"
+    // a single store ingests as a group of one
+    val fam = Seq(Streams.StoreFamily.drift(name, "src", "v"))
     val ref = (1L to 60L).map(i => ("s" + (i % 2), i % 23)).toDF("src", "v")
     val b0 = (1L to 30L).map(i => ("s" + (i % 2), i % 19)).toDF("src", "v")
     val b1 = (1L to 25L).map(i => ("s" + (i % 2), (i % 7) + 40)) // shifted
@@ -1039,16 +1055,16 @@ class StreamsSpec extends AnyFunSuite {
       DriftStore.build(ref, "src", "v", name, 4L)
       // the stored-histogram path must match the one-shot operator
       // bit-for-bit, including the chi-square doubles
-      Streams.driftIngestBatch(b0, 0L, "src", "v", name)
+      Streams.multiIngestBatch(b0, 0L, name, fam)
       assert(stored(0L) == oneShot(b0) && stored(0L).nonEmpty)
       // replaying a committed batch is a no-op (no duplicate reports)
-      Streams.driftIngestBatch(b0, 0L, "src", "v", name)
+      Streams.multiIngestBatch(b0, 0L, name, fam)
       assert(DriftStore.reports(spark, name)
         .filter(col("batch_id") === 0L).count() == stored(0L).size)
       // torn batch: report appended, JVM "dies" before the ledger row;
       // replay prunes and re-reports — converges to exactly one set
       DriftStore.appendReport(b1, "src", "v", name, 1L)
-      Streams.driftIngestBatch(b1, 1L, "src", "v", name)
+      Streams.multiIngestBatch(b1, 1L, name, fam)
       assert(stored(1L) == oneShot(b1))
       // the shifted batch visibly drifts more than the in-family one
       val chi = (id: Long) => stored(id).map(_._6).sum
@@ -1065,9 +1081,15 @@ class StreamsSpec extends AnyFunSuite {
         s"batch_id=${graft.operators.ShingleIndex.BaseBatch}"))
       assert(DriftStore.reports(spark, name)
         .drop("batch_id").collect().toSet == before)
+      // re-baselining rebuilds the store, which drops its ledger AND its
+      // group-of-one manifest: a fresh stream restarting at batch 0 must
+      // land, not be skipped as already committed
+      DriftStore.build(ref, "src", "v", name, 4L)
+      Streams.multiIngestBatch(b0, 0L, name, fam)
+      assert(stored(0L) == oneShot(b0))
     } finally {
       Seq(s"${name}_ref", s"${name}_meta", s"${name}_drift",
-        s"${name}_batches")
+        s"${name}_batches", s"${name}_manifest")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.catalog.clearCache()
     }
