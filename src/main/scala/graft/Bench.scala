@@ -164,15 +164,20 @@ object Bench {
         .readAllLines(java.nio.file.Paths.get("/proc/loadavg")).get(0)
         .split("\\s+")(0).toDouble
       catch { case _: Throwable => -1.0 }
-    // One run of one query: wall/cpu seconds, gc ms, other-process cpu
-    // seconds, 1-min loadavg sampled at the run's end.
-    case class RunStat(wall: Double, cpu: Double, gcMs: Long,
+    // One run of one query: wall/cpu seconds, gc ms, Janino compiles
+    // (Spark's CodegenMetrics; 0 when every generated class was a cache
+    // hit), other-process cpu seconds, 1-min loadavg sampled at the
+    // run's end.
+    case class RunStat(wall: Double, cpu: Double, gcMs: Long, compiles: Long,
         otherCpu: Double, load: Double)
+    def compileCount(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def timeOnce(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         recordFail: Boolean = true): RunStat = {
       val m0 = machineBusySec()
       val g0 = gcMillis()
+      val j0 = compileCount()
       val c0 = osBean.getProcessCpuTime
       val t0 = System.nanoTime()
       val ok =
@@ -198,15 +203,16 @@ object Bench {
       val t = (System.nanoTime() - t0) / 1e9
       val c = (osBean.getProcessCpuTime - c0) / 1e9
       val g = gcMillis() - g0
+      val j = compileCount() - j0
       val m1 = machineBusySec()
       val other =
         if (m0 < 0 || m1 < 0) -1.0 else math.max(0.0, (m1 - m0) - c)
       spark.catalog.clearCache() // isolate queries: no cross-query caches
-      RunStat(if (ok) t else -1.0, c, g, other, loadAvg())
+      RunStat(if (ok) t else -1.0, c, g, j, other, loadAvg())
     }
     def betterOf(a: RunStat, b: RunStat): RunStat =
       if (b.wall >= 0 && (a.wall < 0 || b.wall < a.wall)) b
-      else a // cpu/gc/other/load travel with the run whose wall we report
+      else a // cpu/gc/compiles/other/load travel with the run whose wall we report
     val results = selected.map { case (name, fn) =>
       val r1 = timeOnce(name, fn)
       // a failure on EITHER base run is a FAILURE (the -1 sentinel wins
@@ -280,6 +286,8 @@ object Bench {
       .mkString("{", ",", "}")
     val gcs = adjudicated.map { case (k, s) => "\"" + k + "\":" + s.gcMs }
       .mkString("{", ",", "}")
+    val compiles = adjudicated.map { case (k, s) => "\"" + k + "\":" + s.compiles }
+      .mkString("{", ",", "}")
     val others = adjudicated
       .map { case (k, s) => "\"" + k + "\":" + fmt(s.otherCpu) }
       .mkString("{", ",", "}")
@@ -304,7 +312,7 @@ object Bench {
     val total = adjudicated.collect { case (_, s) if s.wall >= 0 => s.wall }.sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"cpu":$cpus_,"gc_ms":$gcs,"other_cpu":$others,"load":$loads,"adjudication":$adjJson,"suspect_contended":$suspect,"suspect_gc":$suspectGc,"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"cpu":$cpus_,"gc_ms":$gcs,"codegen_compiles":$compiles,"other_cpu":$others,"load":$loads,"adjudication":$adjJson,"suspect_contended":$suspect,"suspect_gc":$suspectGc,"failed":$failedJson,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("bench_results.json"),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(line)

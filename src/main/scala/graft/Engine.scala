@@ -11,6 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType, StringType}
 
+import scala.collection.mutable
+
 /** The embedded-library facade — the Spark-first equivalent of installing
   * the reference's schema + SDK into a database (SURVEY.md §3). State:
   *
@@ -27,19 +29,25 @@ import org.apache.spark.sql.types.{StructField, StructType, StringType}
   * what makes whatIf() a DataFrame transformation instead of the
   * reference's rollback-only transaction dance (core_test.clj:209-254).
   */
-final class Engine(
+final class Engine private (
     val spark: SparkSession,
     initialSnapshot: CatalogSnapshot,
-    indexedSpaceQuirk: Boolean = true) {
+    indexedSpaceQuirk: Boolean,
+    val fragments: FragmentRegistry,
+    mdeDefs: mutable.LinkedHashMap[String, String],
+    initialSmo: Option[DataFrame]) {
+
+  def this(spark: SparkSession, initialSnapshot: CatalogSnapshot,
+      indexedSpaceQuirk: Boolean = true) =
+    this(spark, initialSnapshot, indexedSpaceQuirk,
+      FragmentRegistry.withDefaults(spark), mutable.LinkedHashMap(), None)
 
   @volatile private var snapshot: CatalogSnapshot = initialSnapshot
-  @volatile private var smoCache: Option[DataFrame] = None
+  @volatile private var smoCache: Option[DataFrame] = initialSmo
   @volatile private var conceptsReg: ConceptRegistry =
     ConceptRegistry.builtins(indexedSpaceQuirk)
   @volatile private var i18nValue: String = "{}"
-  private val mdeDefs = scala.collection.mutable.LinkedHashMap[String, String]()
 
-  val fragments: FragmentRegistry = FragmentRegistry.withDefaults(spark)
   var bidiFns: BidiRegistry = BidiRegistry.withDefaults
 
   // ---- snapshot / SMO ----------------------------------------------------
@@ -50,15 +58,19 @@ final class Engine(
     * atomically swap the cached copy — write-new-then-swap is the
     * CONCURRENTLY mode of update_schema_metadata_overview. */
   def refresh(newSnapshot: CatalogSnapshot = snapshot): Unit = synchronized {
-    val fresh = SmoBuilder.build(newSnapshot, ignoredSchemas).cache()
+    val fresh = SmoBuilder.build(newSnapshot, ignoredSchemasOf(newSnapshot)).cache()
     fresh.count() // materialize before swapping, like REFRESH CONCURRENTLY
-    smoCache.foreach(_.unpersist(blocking = false))
+    // an unchanged snapshot plans the same SMO, whose cache entry `fresh`
+    // now shares: releasing the old frame would release it too
+    smoCache.filterNot(_.sameSemantics(fresh)).foreach(_.unpersist(blocking = false))
     snapshot = newSnapshot
     smoCache = Some(fresh)
   }
 
-  def ignoredSchemas: DataFrame =
-    SmoBuilder.ignoredSchemas(snapshot, fragments.df("ignored_schemas"))
+  def ignoredSchemas: DataFrame = ignoredSchemasOf(snapshot)
+
+  private def ignoredSchemasOf(snap: CatalogSnapshot): DataFrame =
+    SmoBuilder.ignoredSchemas(snap, fragments.df("ignored_schemas"))
 
   /** The SMO matview analog (cached until refresh). */
   def smo: DataFrame = smoCache.getOrElse { refresh(); smoCache.get }
@@ -136,7 +148,19 @@ final class Engine(
     * The dependency closure is computed driver-side: edges are
     * catalog-scale (one per view×base-relation, ≤10^5 for thousand-table
     * databases), not data-scale, so a collect here is the same class of
-    * operation as the reference walking pg_depend inside Postgres. */
+    * operation as the reference walking pg_depend inside Postgres.
+    *
+    * Snapshot semantics: the simulated engine's SMO is derived from this
+    * engine's SMO as of the call (its rows minus the dropped relations',
+    * its constraint arrays minus the dropped FKs), not rebuilt, and it is
+    * not cached: it adds no job and no cache entry. If this engine
+    * refreshes later, the simulation still answers for the old snapshot,
+    * but recomputes that SMO's plan instead of reading the released
+    * cache. Its `currentSnapshot` is the pruned snapshot, which scoring
+    * reads and an explicit `refresh()` rebuilds from. The simulation
+    * shares this engine's fragment registry (tenants, ignored schemas,
+    * MDE fragments), MDE definitions, concepts, bidi functions and i18n
+    * document, so status and scoring see the host's hooks. */
   def whatIfDropTable(schemaName: String, tableName: String): Engine = {
     import scala.jdk.CollectionConverters._
     val edges = snapshot.dependencies
@@ -145,8 +169,8 @@ final class Engine(
       .collect()
       .map(r => ((r.getString(2), r.getString(3)), (r.getString(0), r.getString(1))))
     val byRef = edges.groupBy(_._1).map { case (k, v) => (k, v.map(_._2)) }
-    val dropped = scala.collection.mutable.Set((schemaName, tableName))
-    val frontier = scala.collection.mutable.Queue((schemaName, tableName))
+    val dropped = mutable.Set((schemaName, tableName))
+    val frontier = mutable.Queue((schemaName, tableName))
     while (frontier.nonEmpty) {
       val t = frontier.dequeue()
       byRef.getOrElse(t, Array.empty[(String, String)]).foreach { dep =>
@@ -159,9 +183,8 @@ final class Engine(
         StructField("table_name", StringType, nullable = false))))
     def not(df: DataFrame) =
       df.join(broadcast(droppedDf), Seq("schema_name", "table_name"), "left_anti")
-    val prunedConstraints = not(snapshot.constraints)
-      .filter(!(coalesce(col("references_schema"), lit("")) === schemaName
-        && coalesce(col("references_table"), lit("")) === tableName))
+    val inboundFk = coalesce(col("references_schema"), lit("")) === schemaName &&
+      coalesce(col("references_table"), lit("")) === tableName
     val prunedDeps = snapshot.dependencies
       .join(broadcast(droppedDf),
         col("dependent_schema") === col("schema_name")
@@ -174,10 +197,16 @@ final class Engine(
         "left_anti")
     val sim = CatalogSnapshot(
       not(snapshot.relations), not(snapshot.attributes),
-      prunedConstraints, not(snapshot.indexes), snapshot.schemaPrivs,
-      prunedDeps, snapshot.roles, snapshot.roleMembers, prunedGrants)
-    val e = new Engine(spark, sim, indexedSpaceQuirk)
+      not(snapshot.constraints).filter(!inboundFk), not(snapshot.indexes),
+      snapshot.schemaPrivs, prunedDeps, snapshot.roles, snapshot.roleMembers,
+      prunedGrants)
+    val simSmo = SmoBuilder.withoutConstraints(not(smo),
+      snapshot.constraints.filter(inboundFk))
+    val e = new Engine(spark, sim, indexedSpaceQuirk, fragments, mdeDefs,
+      Some(simSmo))
     e.conceptsReg = this.conceptsReg
+    e.bidiFns = this.bidiFns
+    e.i18nValue = this.i18nValue
     e
   }
 }

@@ -3,8 +3,28 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared SparkSession construction so every entry point (Verify, Bench,
-  * tests, library users) gets the same scale-oriented defaults. */
+  * tests, library users) gets the same scale-oriented defaults.
+  *
+  * Generated-code cache: Spark keeps each compiled whole-stage and
+  * expression class in an LRU cache of `spark.sql.codegen.cache.maxEntries`
+  * classes (default 100). One host-app session cycle (SMO refresh, status,
+  * columns, MDE top-10, what-if status, two imports) used about 95–110
+  * classes and one corpus cycle (curation, a BM25 query set, a CMS ingest
+  * batch) 145, so at the default every cycle evicted what the next one
+  * needed and compiled it again with Janino, each class starting cold in
+  * the JIT. Counted with Spark's `CodegenMetrics`, a whole host-app run
+  * touches at most 150 distinct classes, a whole corpus run 177, and one
+  * `graft.Bench` query at most 46 (the suite pass compiles about 1,300,
+  * each once). A host serving both sessions from one JVM thus needs at
+  * most about 330; [[CodegenCacheEntries]] is the smallest round size with
+  * 2× headroom over that. The conf is static: it takes effect only if it
+  * is set before the JVM's first query, so a host that builds its own
+  * SparkSession must set it there too.
+  */
 object Sessions {
+  /** `spark.sql.codegen.cache.maxEntries`; see the object doc. */
+  val CodegenCacheEntries = 1000
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -13,6 +33,11 @@ object Sessions {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // a whole-stage class named after its stage id is new code whenever
+      // the id differs, and AQE numbers a query's stages in the order it
+      // plans them, which varies with the order sibling stages finish
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // explode()-inferred size(...)>0 filters get pushed below the
       // repartition WITH the generator expression fully inlined — for
       // array-building lambdas over tokenized text that re-evaluates the

@@ -46,6 +46,38 @@ object SmoBuilder {
     noUsage.union(registryIgnored.toDF("schema_name")).distinct()
   }
 
+  /** One element of the `constraints` array. sequence_name only applies
+    * to 'p' constraints (sql/V000009…sql:117-119). */
+  private def packedConstraint(name: Column, tpe: Column, definition: Column,
+      sequenceName: Column): Column =
+    struct(name.as("name"), tpe.as("type"), definition.as("definition"),
+      when(tpe === "p", sequenceName).as("sequence_name"))
+
+  private def packed(c: Column): Column = {
+    val arr = array_sort(c)
+    when(size(arr) > 0, arr) // jsonb_agg FILTER yields NULL, not []
+  }
+
+  /** `smo` with the snapshot constraint rows `dropped` (constraintsSchema)
+    * taken out of the `constraints` array of each of their table's rows:
+    * what `build` gives once those rows leave the snapshot, without
+    * rebuilding. Rows are matched in the form `build` packs them, and an
+    * array left empty becomes null, as `build` leaves it. `dropped` is
+    * grouped per table and broadcast, so it must be catalog-sized. */
+  def withoutConstraints(smo: DataFrame, dropped: DataFrame): DataFrame = {
+    val gone = dropped
+      .groupBy(col("schema_name"), col("table_name"))
+      .agg(collect_set(packedConstraint(col("constraint_name"),
+        col("constraint_type"), col("definition"), col("sequence_name")))
+        .as("dropped_constraints"))
+    smo.join(broadcast(gone), Seq("schema_name", "table_name"), "left")
+      .withColumn("constraints",
+        when(col("dropped_constraints").isNull, col("constraints"))
+          .otherwise(packed(array_except(col("constraints"),
+            col("dropped_constraints")))))
+      .drop("dropped_constraints")
+  }
+
   def build(snap: CatalogSnapshot, ignored: DataFrame): DataFrame = {
     val base = notIgnored(
       snap.relations.filter(col("relkind").isin("r", "v", "m")), ignored)
@@ -104,23 +136,13 @@ object SmoBuilder {
           && col("table_name") === col("ix_table")
           && array_contains(col("index_keys"), col("attnum")), "left")
 
-    // sequence_name only applies to 'p' constraints (sql/V000009…sql:117-119)
-    val constraintStruct = struct(
-      col("constraint_name").as("name"),
-      col("constraint_type").as("type"),
-      col("constraint_definition").as("definition"),
-      when(col("constraint_type") === "p", col("sequence_name"))
-        .as("sequence_name"))
+    val constraintStruct = packedConstraint(col("constraint_name"),
+      col("constraint_type"), col("constraint_definition"), col("sequence_name"))
     val indexStruct = struct(
       col("index_name").as("name"),
       col("index_type").as("type"),
       col("index_definition").as("definition"),
       col("index_immediate").as("immediate"))
-
-    def packed(c: Column): Column = {
-      val arr = array_sort(c)
-      when(size(arr) > 0, arr) // jsonb_agg FILTER yields NULL, not []
-    }
 
     joined
       .groupBy(col("schema_name"), col("table_name"), col("column_name"),

@@ -7,18 +7,28 @@ import org.apache.spark.sql.functions._
   * re-expression of the reference's status view
   * (/root/reference/sql/V000012__more_concepts.sql:148-171).
   *
-  * Plain counts, FILTERed counts (count(when(cond,1))), tuple-distinct
-  * counts (countDistinct over a struct), and tuple-distinct FILTERed
-  * counts (countDistinct over when(cond, struct)) all evaluate in a single
-  * partial-aggregate pass — one shuffle of pre-aggregated partials, which
-  * is the plan shape that survives a 100× wider SMO.
+  * Two aggregate levels, one shuffle each: the columns fold into one row
+  * per table (column counts, FILTERed counts, and whether any column
+  * carries a table-level flag), and the tables fold into the rollup,
+  * where the reference's tuple-distinct counts become plain counts and
+  * the distinct schema count a set of schema names. Pre-aggregated
+  * partials cross both shuffles, which is the plan shape that survives a
+  * 100× wider SMO. It also avoids count(DISTINCT) over several different
+  * inputs: Spark plans that with an Expand whose projections come out in
+  * a different order on every call, so each call compiled new code.
   */
 object Status {
 
   private def countIf(cond: Column): Column = count(when(cond, 1))
 
-  private def countDistinctTableIf(cond: Column): Column =
-    count_distinct(when(cond, struct(col("schema_name"), col("table_name"))))
+  /** Column-level FILTERed counts: summed over tables. */
+  private val columnCounts = Seq("pii", "metadata", "primary_key",
+    "foreign_key", "unique_key", "check_constrained", "exclusion_constrained",
+    "indexed", "generated", "natural_key", "surrogate_key", "self_reference",
+    "external_reference")
+
+  /** Table-level counts: tables with any column flagged. */
+  private val tableCounts = Seq("schema_migration_table", "ignored_table")
 
   /** @param columns the SMO widened by ConceptRegistry.applyAll — must
     *   contain every is_* referenced below.
@@ -27,26 +37,16 @@ object Status {
     * @param mdes list_mdes() rows (mde_name)
     */
   def status(columns: DataFrame, tenants: DataFrame, mdes: DataFrame): DataFrame = {
-    val counts = columns.agg(
-      count_distinct(col("schema_name")).as("schema_count"),
-      count_distinct(struct(col("schema_name"), col("table_name"))).as("table_count"),
+    val tables = columns.groupBy(col("schema_name"), col("table_name")).agg(
       count(lit(1)).as("column_count"),
-      countDistinctTableIf(col("is_schema_migration_table"))
-        .as("schema_migration_table_count"),
-      countDistinctTableIf(col("is_ignored_table")).as("ignored_table_count"),
-      countIf(col("is_pii")).as("pii_count"),
-      countIf(col("is_metadata")).as("metadata_count"),
-      countIf(col("is_primary_key")).as("primary_key_count"),
-      countIf(col("is_foreign_key")).as("foreign_key_count"),
-      countIf(col("is_unique_key")).as("unique_key_count"),
-      countIf(col("is_check_constrained")).as("check_constrained_count"),
-      countIf(col("is_exclusion_constrained")).as("exclusion_constrained_count"),
-      countIf(col("is_indexed")).as("indexed_count"),
-      countIf(col("is_generated")).as("generated_count"),
-      countIf(col("is_natural_key")).as("natural_key_count"),
-      countIf(col("is_surrogate_key")).as("surrogate_key_count"),
-      countIf(col("is_self_reference")).as("self_reference_count"),
-      countIf(col("is_external_reference")).as("external_reference_count"))
+      tableCounts.map(c => max(col(s"is_$c")).as(s"is_$c")) ++
+        columnCounts.map(c => countIf(col(s"is_$c")).as(s"${c}_count")): _*)
+    def total(c: String): Column = coalesce(sum(col(c)), lit(0L)).as(c)
+    val counts = tables.agg(
+      size(collect_set(col("schema_name"))).cast("long").as("schema_count"),
+      Seq(count(lit(1)).as("table_count"), total("column_count")) ++
+        tableCounts.map(c => countIf(col(s"is_$c")).as(s"${c}_count")) ++
+        columnCounts.map(c => total(s"${c}_count")): _*)
 
     // the two scalar subqueries (jsonb_agg ... order by) become 1-row DFs
     // cross-joined in — registry data is tiny, both sides broadcast.

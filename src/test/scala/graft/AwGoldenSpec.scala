@@ -141,4 +141,18 @@ class AwGoldenSpec extends AnyFunSuite {
     // the original engine is untouched — the rollback analog is free
     assert(perSchema(engine) == baselinePerSchema)
   }
+
+  test("what-if keeps the host's hooks and derives its SMO without rebuilding or caching") {
+    engine.smo.count() // the parent's SMO is cached before the simulation
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val sim = engine.whatIfDropTable("production", "document")
+    val st = sim.status.collect()(0)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+    assert(st.getAs[String]("tenants") ==
+      engine.status.collect()(0).getAs[String]("tenants"))
+    assert(st.getAs[String]("tenants").contains("\"tenant_short_name\":\"test_tenant\""))
+    val rebuilt = graft.smo.SmoBuilder.build(sim.currentSnapshot, sim.ignoredSchemas)
+    assert(sim.smo.exceptAll(rebuilt).isEmpty)
+    assert(rebuilt.exceptAll(sim.smo).isEmpty)
+  }
 }

@@ -92,6 +92,11 @@ class EngineSpec extends AnyFunSuite {
 
   private lazy val engine = new Engine(spark, snap)
 
+  /** Janino compiles allowed in a repeated engine cycle: measured 0 with
+    * the session's generated-code cache (Sessions.CodegenCacheEntries),
+    * 16 with Spark's default of 100 entries. */
+  private val MaxRecompiles = 4
+
   test("SMO: one row per live column, ignored schemas excluded, ordered") {
     val smo = engine.smo.collect()
     // 14 live columns: 4 customer (dropped excluded) + 5 order + 2 product
@@ -270,6 +275,41 @@ class EngineSpec extends AnyFunSuite {
     assert(engine.columns.filter(col("table_name") === "customer").count() == 4)
   }
 
+  test("what-if SMO: derived from the cached SMO, equal to a rebuild, no cache entry added") {
+    engine.smo.count() // the parent's SMO is cached before the simulation
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val sim = engine.whatIfDropTable("sales", "customer")
+    assert(sim.status.collect().head.getAs[Long]("column_count") == 12L)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+    val rebuilt = graft.smo.SmoBuilder.build(sim.currentSnapshot, sim.ignoredSchemas)
+    assert(sim.smo.exceptAll(rebuilt).isEmpty)
+    assert(rebuilt.exceptAll(sim.smo).isEmpty)
+    // order's FK to customer left its constraints array; the array of a
+    // column whose only constraint it was is null, as the builder packs it
+    val custId = sim.smo.filter(col("table_name") === "order"
+      && col("column_name") === "customer_id").collect()(0)
+    assert(custId.isNullAt(custId.fieldIndex("constraints")))
+  }
+
+  test("a repeated engine cycle reuses its generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val e = new Engine(spark, snap)
+    def cycle(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      e.refresh(snap)
+      e.status.collect()
+      e.columns.filter(col("is_pii")).select("column_name").collect()
+      e.masterDataEntityCandidates.limit(10).collect()
+      e.whatIfDropTable("sales", "customer").status.collect()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val first = cycle()
+    val second = cycle()
+    assert(second <= MaxRecompiles, s"first pass compiled $first, second $second")
+    // refreshing to an unchanged snapshot keeps the SMO cached
+    assert(e.smo.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+  }
+
   test("bidi mapping fns: forward/backward roundtrip where exact") {
     import spark.implicits._
     val reg = engine.bidiFns
@@ -318,6 +358,17 @@ class EngineSpec extends AnyFunSuite {
     assert(e2.listTenants.collect()(0).getString(0) == "t1")
     assert(e2.listMdes.collect().map(_.getString(0)).contains("things"))
     assert(e2.i18n.contains("Zustand"))
+  }
+
+  test("refresh reads the privileges of the snapshot it swaps in") {
+    val e2 = new Engine(spark, snap)
+    assert(e2.smo.filter(col("schema_name") === "production").count() > 0)
+    val revoked = CatalogSnapshot.fromRows(spark, relations, attributes,
+      constraints, indexes,
+      schemaPrivs.map(r => if (r.getString(0) == "production") Row("production", false) else r))
+    e2.refresh(revoked)
+    assert(e2.smo.filter(col("schema_name") === "production").count() == 0)
+    assert(e2.smo.filter(col("schema_name") === "sales").count() > 0)
   }
 
   test("refresh swaps snapshots atomically") {
