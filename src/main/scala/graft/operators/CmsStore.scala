@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
   * stats that ACCUMULATE across ingest batches without ever re-scanning
   * old data. The third member of the persisted-store family
   * ([[ShingleIndex]] for pair dedup, [[IvfIndex]] for ANN serving),
-  * with the same lifecycle contract: batch-stamped appends, partition-
-  * surgery crash repair, fold-to-base compaction behind the staged-
-  * rename swap, and the `{name}_batches` ledger driven by
-  * [[graft.streaming.Streams]].
+  * with the same [[BatchTable]] lifecycle: batch-stamped appends,
+  * partition-surgery crash repair, fold-to-base compaction behind the
+  * staged-rename swap, committed through [[graft.streaming.Streams]]'
+  * `{group}_manifest`.
   *
   * Why this store stays trivially small where the other two grow with
   * the corpus: [[Corpus.cmsNgramMatrix]] is a pure-sum structure, so a
@@ -18,13 +18,13 @@ import org.apache.spark.sql.functions._
   * counter addition ([[Corpus.cmsMerge]] — exact, spec-pinned). Each
   * append writes at most depth·width rows regardless of batch size;
   * the serve-time merge reads catalog-partition directories whose
-  * count [[compact]] keeps bounded. Estimates from the merged store
+  * count compaction keeps bounded. Estimates from the merged store
   * are IDENTICAL to a from-scratch build over the union of all
   * ingested corpora — not approximately, bit-for-bit (the spec pins
   * store ≡ rebuild).
   *
   * The crash window is the standard one: an append that dies before
-  * its caller's ledger row leaves a `batch_id` partition that
+  * its caller's manifest row leaves a `batch_id` partition that
   * [[pruneBatch]] removes on replay — the counters CONVERGE to
   * exactly-once across crash replays. Readers in the gap may see the
   * half-committed batch's counts (over-estimates only — CMS reads are
@@ -40,7 +40,9 @@ import org.apache.spark.sql.functions._
   *   - `{name}_meta` (n, depth, width) — hash geometry; append/serve
   *     verify against it instead of silently mixing geometries.
   */
-object CmsStore {
+object CmsStore extends BatchTable.Store {
+
+  protected val batchSuffixes = Seq("_cms")
 
   /** Create (overwrite) the store from a base corpus (batch −1). */
   def build(docs: DataFrame, idCol: String, textCol: String, name: String,
@@ -48,16 +50,11 @@ object CmsStore {
       norm: Column => Column = graft.functions.TextFns.normText): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // ledger and manifest dropped with the data: see ShingleIndex.build
-    Seq(s"${name}_cms", s"${name}_meta", s"${name}_batches",
-        s"${name}_manifest")
-      .foreach(ShingleIndex.dropTable(spark, _))
-    Corpus.cmsNgramMatrix(docs, idCol, textCol, n, depth, width, norm)
-      .withColumn("batch_id", lit(ShingleIndex.BaseBatch))
-      .coalesce(1) // the matrix is ≤ depth·width rows — one file per batch
-      .write.partitionBy("batch_id").mode("overwrite")
-      .saveAsTable(s"${name}_cms")
-    Seq((n, depth, width, ShingleIndex.normFp(norm)))
+    dropStore(spark, name)
+    BatchTable.writeBase(
+      Corpus.cmsNgramMatrix(docs, idCol, textCol, n, depth, width, norm),
+      s"${name}_cms")
+    Seq((n, depth, width, BatchTable.normFp(norm)))
       .toDF("n", "depth", "width", "norm_fp")
       .write.mode("overwrite").saveAsTable(s"${name}_meta")
   }
@@ -69,33 +66,19 @@ object CmsStore {
       name: String, batchId: Long,
       norm: Column => Column = graft.functions.TextFns.normText): Unit = {
     val (n, depth, width) = meta(docs.sparkSession, name)
-    ShingleIndex.checkNormFp(docs.sparkSession, name, norm)
-    ShingleIndex.insertByName(
-      Corpus.cmsNgramMatrix(docs, idCol, textCol, n, depth, width, norm)
-        .withColumn("batch_id", lit(batchId))
-        .coalesce(1),
-      s"${name}_cms")
+    BatchTable.checkNormFp(docs.sparkSession, name, norm)
+    BatchTable.append(
+      Corpus.cmsNgramMatrix(docs, idCol, textCol, n, depth, width, norm),
+      s"${name}_cms", batchId)
   }
 
-  /** Replay repair: drop whatever a crashed attempt of `batchId`
-    * appended — partition surgery, idempotent, no-op if absent. */
-  def pruneBatch(spark: SparkSession, name: String, batchId: Long): Unit =
-    ShingleIndex.dropBatchPartitions(spark, Seq(s"${name}_cms"), batchId)
-
-  /** Fold committed batch partitions into base (−1), MERGING their
-    * counters — after compaction the base partition is again a single
-    * ≤ depth·width matrix, so directory count AND row count stay
-    * bounded over thousands of micro-batches. Uncommitted batches keep
-    * their partitions verbatim (still prunable on replay). Same
-    * staged-rename swap + caller contract as [[ShingleIndex.compact]]. */
-  def compact(spark: SparkSession, name: String,
-      uncommitted: Set[Long] = Set.empty): Unit =
-    ShingleIndex.compactTable(spark, s"${name}_cms", uncommitted,
-      (df, tmp) =>
-        df.groupBy(col("batch_id"), col("rw"), col("bucket"))
-          .agg(sum(col("cnt")).as("cnt"))
-          .coalesce(1)
-          .write.partitionBy("batch_id").mode("overwrite").saveAsTable(tmp))
+  /** Compaction MERGES the folded counters — after it the base
+    * partition is again a single ≤ depth·width matrix, so directory
+    * count AND row count stay bounded over thousands of micro-batches. */
+  override protected def fold(spark: SparkSession, name: String,
+      table: String, rows: DataFrame): DataFrame =
+    rows.groupBy(col("batch_id"), col("rw"), col("bucket"))
+      .agg(sum(col("cnt")).as("cnt"))
 
   /** The merged whole-corpus matrix: counter sums across every batch
     * partition — O(depth·width) rows out, the broadcastable form

@@ -770,6 +770,12 @@ object Corpus {
     * posting list exceeds the cap (zero-information terms, the same
     * df-cap lever as Dedup.cappedIndex).
     *
+    * Snapshot semantics: the query terms are collected when this method
+    * BUILDS its plan (one driver job, [[bm25QueryTermsLocal]]), not when
+    * the returned frame runs. The frame scores the query documents as
+    * they were at the call against the corpus as it is at execution; a
+    * caller whose query source changes in between must call again.
+    *
     * @param queryPred picks the query documents (evaluated per row)
     * @param nQueryTerms leading-token window of each query doc; its
     *   distinct terms are the query, each carrying its first-occurrence

@@ -18,9 +18,9 @@ import org.apache.spark.sql.functions._
   *     back, never re-passed per batch
   *   - `{name}_drift` — (grp, n_ref, n_cur, n_bins, dof, chi2) reports,
   *     PARTITIONED by batch_id so a torn append is undone by
-  *     [[pruneBatch]] partition surgery (the replay contract shared
-  *     with every store family; ledger kept by the caller —
-  *     [[graft.streaming.Streams.multiIngestBatch]])
+  *     [[pruneBatch]] partition surgery (the [[BatchTable]] lifecycle
+  *     shared with every store family; committed by the caller's
+  *     manifest — [[graft.streaming.Streams.multiIngestBatch]])
   *
   * The reference is deliberately FROZEN, like the IVF centroids and PQ
   * books: drift is only meaningful against a fixed yardstick, and the
@@ -28,76 +28,51 @@ import org.apache.spark.sql.functions._
   * re-baselining ([[build]] again) — that call is the operator's knob,
   * not something the stream decides implicitly.
   */
-object DriftStore {
+object DriftStore extends BatchTable.Store {
 
-  /** Reduce the reference corpus to its frozen histogram + geometry.
-    * Drops any previous incarnation of the store (including reports —
-    * reports against a replaced reference are not comparable). */
+  protected val batchSuffixes = Seq("_drift")
+  override protected val frozenSuffixes = Seq("_ref")
+
+  /** Reduce the reference corpus to its frozen histogram + geometry,
+    * and create the (empty) report table. Drops any previous
+    * incarnation of the store (including reports — reports against a
+    * replaced reference are not comparable). */
   def build(ref: DataFrame, groupCol: String, valueCol: String,
       name: String, binWidth: Long): Unit = {
     val spark = ref.sparkSession
     import spark.implicits._
-    // ledger and manifest dropped with the data: see ShingleIndex.build
-    Seq(s"${name}_ref", s"${name}_meta", s"${name}_drift",
-      s"${name}_batches", s"${name}_manifest")
-      .foreach(ShingleIndex.dropTable(spark, _))
+    dropStore(spark, name)
     Corpus.valueHistogram(ref, groupCol, valueCol, binWidth, "r")
       .coalesce(1) // bins × groups — one file
       .write.mode("overwrite").saveAsTable(s"${name}_ref")
     Seq(binWidth).toDF("bin_width")
       .write.mode("overwrite").saveAsTable(s"${name}_meta")
+    BatchTable.writeBase(report(ref.limit(0), groupCol, valueCol, name),
+      s"${name}_drift")
   }
 
-  private def binWidth(spark: SparkSession, name: String): Long =
-    spark.table(s"${name}_meta").head().getLong(0)
+  /** A batch's report rows against the frozen reference: the batch pays
+    * its own histogram and a histogram-scale join. */
+  private def report(batch: DataFrame, groupCol: String, valueCol: String,
+      name: String): DataFrame = {
+    val spark = batch.sparkSession
+    val bw = spark.table(s"${name}_meta").head().getLong(0)
+    Corpus.chiSquareFromHists(spark.table(s"${name}_ref"),
+      Corpus.valueHistogram(batch, groupCol, valueCol, bw, "o"))
+  }
 
   /** One batch's drift report vs the frozen reference, appended under
     * its own `batch_id` partition. Nothing already written is read or
-    * touched; the batch pays its own histogram and a histogram-scale
-    * join. */
+    * touched. Compaction is a pure re-stamp (no merge arithmetic —
+    * unlike [[CmsStore]]'s sums, a report row IS the final value). */
   def appendReport(batch: DataFrame, groupCol: String, valueCol: String,
-      name: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val bw = binWidth(spark, name)
-    val report = Corpus.chiSquareFromHists(spark.table(s"${name}_ref"),
-      Corpus.valueHistogram(batch, groupCol, valueCol, bw, "o"))
-    val table = s"${name}_drift"
-    val stamped = report.withColumn("batch_id", lit(batchId)).coalesce(1)
-    if (!spark.catalog.tableExists(table))
-      stamped.write.partitionBy("batch_id").mode("overwrite")
-        .saveAsTable(table)
-    else ShingleIndex.insertByName(stamped, table)
-  }
+      name: String, batchId: Long): Unit =
+    BatchTable.append(report(batch, groupCol, valueCol, name),
+      s"${name}_drift", batchId)
 
-  /** Undo a batch's report — replay repair for a crash between the
-    * append and the caller's ledger commit. Idempotent; a no-op before
-    * the first report (the `{name}_drift` table is created lazily by
-    * [[appendReport]], unlike the bulk stores whose data tables exist
-    * from build time). */
-  def pruneBatch(spark: SparkSession, name: String, batchId: Long): Unit =
-    if (spark.catalog.tableExists(s"${name}_drift"))
-      ShingleIndex.dropBatchPartitions(spark, Seq(s"${name}_drift"), batchId)
-
-  /** Fold committed report partitions into base — the same bounded-
-    * catalog story as every other store family: thousands of
-    * micro-batches otherwise leave one partition (and one file) per
-    * batch in `{name}_drift` forever. Reports are immutable rows, so
-    * compaction is a pure re-stamp (no merge arithmetic — unlike
-    * [[CmsStore]]'s sums, a report row IS the final value); batches in
-    * `uncommitted` keep their partitions so replay surgery still
-    * works. Same staged-rename swap + caller contract
-    * ([[ShingleIndex.compact]]); a store that has not reported yet
-    * (lazy `_drift` creation) is a no-op. */
-  def compact(spark: SparkSession, name: String,
-      uncommitted: Set[Long] = Set.empty): Unit =
-    if (spark.catalog.tableExists(s"${name}_drift"))
-      ShingleIndex.compactTable(spark, s"${name}_drift", uncommitted,
-        (df, tmp) => df.coalesce(1)
-          .write.partitionBy("batch_id").mode("overwrite").saveAsTable(tmp))
-
-  /** All committed reports (the caller filters by its ledger if a torn
-    * batch might be present; after a clean stream shutdown every
-    * partition is committed). */
+  /** All reports (the caller filters by its manifest if a torn batch
+    * might be present; after a clean stream shutdown every partition is
+    * committed). */
   def reports(spark: SparkSession, name: String): DataFrame =
     spark.table(s"${name}_drift")
 }

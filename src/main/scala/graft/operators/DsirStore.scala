@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
   * [[Corpus.dsirWeights]] kept on disk so a 100 TB ingest stream scores
   * against an ACCUMULATING source model without ever re-scanning old
   * data. The sixth member of the persisted-store family, with the
-  * standard lifecycle contract: batch-stamped appends, partition-
+  * standard [[BatchTable]] lifecycle: batch-stamped appends, partition-
   * surgery crash repair, counter-merging compaction behind the staged-
-  * rename swap, and the `{name}_batches` ledger driven by
+  * rename swap, committed through the `{group}_manifest` of
   * [[graft.streaming.Streams.multiIngest]].
   *
   * Like [[CmsStore]], this store stays trivially small because the
@@ -34,7 +34,10 @@ import org.apache.spark.sql.functions._
   *   - `{name}_meta` — (buckets): hash geometry; append/serve verify
   *     against it instead of silently mixing feature spaces
   */
-object DsirStore {
+object DsirStore extends BatchTable.Store {
+
+  protected val batchSuffixes = Seq("_dsir")
+  override protected val frozenSuffixes = Seq("_tgt")
 
   /** Create (overwrite) the store: frozen target histogram + the base
     * corpus' source histogram (batch −1). */
@@ -43,19 +46,14 @@ object DsirStore {
       norm: Column => Column = graft.functions.TextFns.normText): Unit = {
     val spark = raw.sparkSession
     import spark.implicits._
-    // ledger and manifest dropped with the data: see ShingleIndex.build
-    Seq(s"${name}_tgt", s"${name}_dsir", s"${name}_meta",
-      s"${name}_batches", s"${name}_manifest")
-      .foreach(ShingleIndex.dropTable(spark, _))
+    dropStore(spark, name)
     Corpus.dsirHistogram(target, idCol, textCol, buckets, norm)
       .coalesce(1) // ≤ buckets rows — one file
       .write.mode("overwrite").saveAsTable(s"${name}_tgt")
-    Corpus.dsirHistogram(raw, idCol, textCol, buckets, norm)
-      .withColumn("batch_id", lit(ShingleIndex.BaseBatch))
-      .coalesce(1)
-      .write.partitionBy("batch_id").mode("overwrite")
-      .saveAsTable(s"${name}_dsir")
-    Seq((buckets, ShingleIndex.normFp(norm))).toDF("buckets", "norm_fp")
+    BatchTable.writeBase(
+      Corpus.dsirHistogram(raw, idCol, textCol, buckets, norm),
+      s"${name}_dsir")
+    Seq((buckets, BatchTable.normFp(norm))).toDF("buckets", "norm_fp")
       .write.mode("overwrite").saveAsTable(s"${name}_meta")
   }
 
@@ -69,31 +67,16 @@ object DsirStore {
       name: String, batchId: Long,
       norm: Column => Column = graft.functions.TextFns.normText): Unit = {
     val b = buckets(docs.sparkSession, name)
-    ShingleIndex.checkNormFp(docs.sparkSession, name, norm)
-    ShingleIndex.insertByName(
-      Corpus.dsirHistogram(docs, idCol, textCol, b, norm)
-        .withColumn("batch_id", lit(batchId))
-        .coalesce(1),
-      s"${name}_dsir")
+    BatchTable.checkNormFp(docs.sparkSession, name, norm)
+    BatchTable.append(Corpus.dsirHistogram(docs, idCol, textCol, b, norm),
+      s"${name}_dsir", batchId)
   }
 
-  /** Replay repair: drop whatever a crashed attempt of `batchId`
-    * appended — partition surgery, idempotent, no-op if absent. */
-  def pruneBatch(spark: SparkSession, name: String, batchId: Long): Unit =
-    ShingleIndex.dropBatchPartitions(spark, Seq(s"${name}_dsir"), batchId)
-
-  /** Fold committed batch partitions into base (−1), MERGING their
-    * counters — after compaction the base partition is again one
-    * ≤ buckets-row histogram. Uncommitted batches keep their partitions
-    * verbatim (still prunable on replay). */
-  def compact(spark: SparkSession, name: String,
-      uncommitted: Set[Long] = Set.empty): Unit =
-    ShingleIndex.compactTable(spark, s"${name}_dsir", uncommitted,
-      (df, tmp) =>
-        df.groupBy(col("batch_id"), col("b"))
-          .agg(sum(col("c")).as("c"))
-          .coalesce(1)
-          .write.partitionBy("batch_id").mode("overwrite").saveAsTable(tmp))
+  /** Compaction MERGES the folded counters — after it the base
+    * partition is again one ≤ buckets-row histogram. */
+  override protected def fold(spark: SparkSession, name: String,
+      table: String, rows: DataFrame): DataFrame =
+    rows.groupBy(col("batch_id"), col("b")).agg(sum(col("c")).as("c"))
 
   /** The accumulated source histogram: counter sums across every batch
     * partition — O(buckets) rows. */
@@ -111,7 +94,7 @@ object DsirStore {
       : DataFrame = {
     val spark = docs.sparkSession
     val b = buckets(spark, name)
-    ShingleIndex.checkNormFp(spark, name, norm)
+    BatchTable.checkNormFp(spark, name, norm)
     Corpus.dsirScore(docs, idCol, textCol, b,
       Corpus.collectDsirHist(sourceHist(spark, name), b),
       Corpus.collectDsirHist(spark.table(s"${name}_tgt"), b), norm)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,7 +27,10 @@ import org.apache.spark.sql.functions._
   * (IvfIndexSpec pins the equality); p14 remains the oracle gate for
   * the semantics.
   */
-object IvfIndex {
+object IvfIndex extends BatchTable.Store {
+
+  protected val batchSuffixes = Seq("_cells")
+  override protected val frozenSuffixes = Seq("_cent", "_books")
 
   /** Residual-PQ config for [[build]] (IVFADC — Jégou/Douze/Schmid,
     * TPAMI 2011 §IV-A): `m` subspaces × `nCodes` codes per book;
@@ -39,10 +43,12 @@ object IvfIndex {
 
   /** Create (overwrite) the index tables for `corpus`.
     *
-    * `{name}_cells` carries the same `batch_id` PARTITION column as the
-    * shingle index (build stamps everything -1, [[append]] stamps its
-    * caller's id) for the same reason: undoing a half-committed append
-    * is partition surgery ([[pruneBatch]]), never a table rewrite.
+    * `{name}_cells` carries the same `batch_id` PARTITION column as every
+    * store (the [[BatchTable]] lifecycle: build stamps the base batch,
+    * [[append]] its caller's id): undoing a half-committed append is
+    * partition surgery ([[pruneBatch]]), never a table rewrite, and
+    * compaction folds committed batches back into the base. The
+    * centroid and codebook tables are frozen and never compact.
     * Bucket pruning on `list_id` operates within each partition, so the
     * probed-cell file-skipping below is unaffected.
     *
@@ -75,13 +81,7 @@ object IvfIndex {
       pq: Option[PqSpec] = None,
       binary: Boolean = false): Unit = {
     val spark = corpus.sparkSession
-    // ShingleIndex.dropTable also clears stale warehouse directories —
-    // an in-memory catalog forgets tables across JVMs, and a leftover
-    // dir fails saveAsTable with LOCATION_ALREADY_EXISTS
-    // ledger and manifest dropped with the data: see ShingleIndex.build
-    Seq(s"${name}_cells", s"${name}_cent", s"${name}_books",
-        s"${name}_batches", s"${name}_manifest")
-      .foreach(ShingleIndex.dropTable(spark, _))
+    dropStore(spark, name)
     val c = Similarity
       .withNorm(corpus, idCol, vecCol, "neighbor_id", "cv")
       .repartition(corpus.sparkSession.sparkContext.defaultParallelism,
@@ -129,11 +129,9 @@ object IvfIndex {
           col("cv_n"),
           Similarity.pqCodesFor(col("rv"), stored).as("codes"))
     }
-    withBinaryPack(spark, name, cellRows, binary)
-      .withColumn("batch_id", lit(ShingleIndex.BaseBatch))
-      .write.partitionBy("batch_id").bucketBy(buckets, "list_id")
-      .sortBy("list_id", "neighbor_id")
-      .mode("overwrite").saveAsTable(s"${name}_cells")
+    BatchTable.writeBase(withBinaryPack(spark, name, cellRows, binary),
+      s"${name}_cells",
+      Some(BucketSpec(buckets, Seq("list_id"), Seq("list_id", "neighbor_id"))))
     // build is self-contained: every action above has run, so the
     // intermediates release here (no caller-clears contract needed)
     pinnedResid.foreach(_.unpersist(blocking = false))
@@ -199,7 +197,7 @@ object IvfIndex {
     *   this append and the caller's commit record can be undone by
     *   [[pruneBatch]] — same contract as the shingle index's append. */
   def append(vectors: DataFrame, idCol: String, vecCol: String,
-      name: String, batchId: Long = ShingleIndex.BaseBatch): Unit = {
+      name: String, batchId: Long = BatchTable.BaseBatch): Unit = {
     val spark = vectors.sparkSession
     val v = Similarity.withNorm(vectors, idCol, vecCol, "neighbor_id", "cv")
     val assigned = Similarity.assignCells(v, "neighbor_id", "cv",
@@ -222,42 +220,7 @@ object IvfIndex {
     // — detected from the stored schema, same as the books above
     val rows2 = withBinaryPack(spark, name, rows,
       on = spark.table(s"${name}_cells").columns.contains("cb"))
-    ShingleIndex.insertByName(rows2.withColumn("batch_id", lit(batchId)),
-      s"${name}_cells")
-  }
-
-  /** Undo one append batch's partition — the IVF mirror of
-    * [[ShingleIndex.pruneBatch]] (same replay-repair contract). */
-  def pruneBatch(spark: SparkSession, name: String, batchId: Long): Unit =
-    ShingleIndex.dropBatchPartitions(spark, Seq(s"${name}_cells"), batchId)
-
-  /** Fold ingest-batch partitions of `{name}_cells` back into the base
-    * corpus — the IVF face of [[ShingleIndex.compact]], completing the
-    * index lifecycle to the same standard: thousands of streamed
-    * [[append]]s accumulate one `batch_id` directory each, and without
-    * this pass the listing cost of the cell store creeps without bound
-    * even though the data layout stays sound. Same shared fold-and-swap
-    * core ([[ShingleIndex.compactTable]]): batches in `uncommitted`
-    * (appended but never ledger-committed — a crashed stream that has
-    * not replayed yet) keep their partitions verbatim so [[pruneBatch]]
-    * can still undo them; everything else re-stamps as base. The
-    * centroid table never compacts — it is O(nCells) and unpartitioned.
-    * Same caller contract as the shingle side: single writer, run
-    * between stream restarts, clear persisted plans over the index
-    * first. */
-  def compact(spark: SparkSession, name: String,
-      uncommitted: Set[Long] = Set.empty): Unit = {
-    // the rewrite must reproduce build's bucket layout; read the count
-    // from the live table's own metadata instead of trusting a caller
-    // to repeat the build-time argument
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(s"${name}_cells"))
-      .bucketSpec.map(_.numBuckets).getOrElse(32)
-    ShingleIndex.compactTable(spark, s"${name}_cells", uncommitted,
-      (df, tmp) =>
-        df.write.partitionBy("batch_id").bucketBy(buckets, "list_id")
-          .sortBy("list_id", "neighbor_id")
-          .mode("overwrite").saveAsTable(tmp))
+    BatchTable.append(rows2, s"${name}_cells", batchId)
   }
 
   /** Near-dup matches of an ingest batch against the stored corpus AND

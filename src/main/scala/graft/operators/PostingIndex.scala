@@ -2,16 +2,16 @@ package graft.operators
 
 import graft.functions.TextFns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
 
 /** Persisted BM25 posting index — retrieval served from disk without
   * re-tokenizing the corpus. The fourth member of the persisted-store
-  * family, with the identical lifecycle contract as [[ShingleIndex]] /
-  * [[IvfIndex]] / [[CmsStore]]: batch-stamped appends, partition-
-  * surgery crash repair, fold-to-base compaction behind the staged-
-  * rename swap, and the `{name}_batches` ledger backfilled by
-  * [[graft.streaming.Streams.multiIngestBatch]]'s commit, which
-  * [[graft.streaming.Streams.compactIndex]] folds by.
+  * family, with the [[BatchTable]] lifecycle every store shares:
+  * batch-stamped appends, partition-surgery crash repair, fold-to-base
+  * compaction behind the staged-rename swap, committed by a
+  * `{group}_manifest` row of [[graft.streaming.Streams.multiIngestBatch]]
+  * whose batch ids [[graft.streaming.Streams.compactIndex]] folds.
   *
   * Serving contract: [[topK]] returns EXACTLY the rows of
   * [[Corpus.bm25TopK]] over the corpus the index holds — not "the same
@@ -40,7 +40,9 @@ import org.apache.spark.sql.functions._
   * append and force a rewrite; counting it over the pruned scan keeps
   * appends O(batch) and queries exact).
   */
-object PostingIndex {
+object PostingIndex extends BatchTable.Store {
+
+  protected val batchSuffixes = Seq("_post", "_stats")
 
   private def postings(docs: DataFrame, idCol: String,
       textCol: String, norm: Column => Column): DataFrame =
@@ -72,20 +74,12 @@ object PostingIndex {
       norm: Column => Column = TextFns.normText): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // ledger and manifest dropped with the data: see ShingleIndex.build
-    Seq(s"${name}_post", s"${name}_stats", s"${name}_meta",
-        s"${name}_batches", s"${name}_manifest")
-      .foreach(ShingleIndex.dropTable(spark, _))
-    postings(docs, idCol, textCol, norm)
-      .withColumn("batch_id", lit(ShingleIndex.BaseBatch))
-      .write.partitionBy("batch_id").bucketBy(buckets, "term").sortBy("term")
-      .mode("overwrite").saveAsTable(s"${name}_post")
-    statsRow(docs, idCol, textCol, norm)
-      .withColumn("batch_id", lit(ShingleIndex.BaseBatch))
-      .coalesce(1)
-      .write.partitionBy("batch_id").mode("overwrite")
-      .saveAsTable(s"${name}_stats")
-    Seq((buckets, ShingleIndex.normFp(norm))).toDF("buckets", "norm_fp")
+    dropStore(spark, name)
+    BatchTable.writeBase(postings(docs, idCol, textCol, norm),
+      s"${name}_post", Some(BucketSpec(buckets, Seq("term"), Seq("term"))))
+    BatchTable.writeBase(statsRow(docs, idCol, textCol, norm),
+      s"${name}_stats")
+    Seq((buckets, BatchTable.normFp(norm))).toDF("buckets", "norm_fp")
       .write.mode("overwrite").saveAsTable(s"${name}_meta")
   }
 
@@ -95,7 +89,7 @@ object PostingIndex {
     * CONTRACT — batches must be doc-disjoint: a doc_id may appear in
     * at most ONE batch across the store's lifetime (the same contract
     * [[graft.streaming.Streams]] ingest loops provide via their
-    * exactly-once ledger, and the same "re-ingested doc must carry a
+    * exactly-once manifest, and the same "re-ingested doc must carry a
     * new id" rule as [[Dedup.incrementalNearDupPairs]]). A doc
     * re-appended under the same id would leave BOTH batches' posting
     * rows live and double-count `_stats` (n_docs, sum_dl) — and no
@@ -109,42 +103,21 @@ object PostingIndex {
   def append(docs: DataFrame, idCol: String, textCol: String,
       name: String, batchId: Long,
       norm: Column => Column = TextFns.normText): Unit = {
-    ShingleIndex.checkNormFp(docs.sparkSession, name, norm)
-    ShingleIndex.insertByName(
-      postings(docs, idCol, textCol, norm)
-        .withColumn("batch_id", lit(batchId)),
-      s"${name}_post")
-    ShingleIndex.insertByName(
-      statsRow(docs, idCol, textCol, norm)
-        .withColumn("batch_id", lit(batchId))
-        .coalesce(1),
-      s"${name}_stats")
+    BatchTable.checkNormFp(docs.sparkSession, name, norm)
+    BatchTable.append(postings(docs, idCol, textCol, norm),
+      s"${name}_post", batchId)
+    BatchTable.append(statsRow(docs, idCol, textCol, norm),
+      s"${name}_stats", batchId)
   }
 
-  /** Replay repair: partition surgery, idempotent, no-op if absent. */
-  def pruneBatch(spark: SparkSession, name: String, batchId: Long): Unit =
-    ShingleIndex.dropBatchPartitions(
-      spark, Seq(s"${name}_post", s"${name}_stats"), batchId)
-
-  /** Fold committed batches into base; stats rows MERGE (their sums
-    * are the whole point), postings rewrite under the same bucket
-    * layout. Same swap discipline + caller contract as
-    * [[ShingleIndex.compact]]. */
-  def compact(spark: SparkSession, name: String,
-      uncommitted: Set[Long] = Set.empty): Unit = {
-    val buckets = spark.table(s"${name}_meta").head().getInt(0)
-    ShingleIndex.compactTable(spark, s"${name}_post", uncommitted,
-      (df, tmp) => df.write.partitionBy("batch_id")
-        .bucketBy(buckets, "term").sortBy("term")
-        .mode("overwrite").saveAsTable(tmp))
-    ShingleIndex.compactTable(spark, s"${name}_stats", uncommitted,
-      (df, tmp) =>
-        df.groupBy(col("batch_id"))
-          .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-          .select(col("n_docs"), col("sum_dl"), col("batch_id"))
-          .coalesce(1)
-          .write.partitionBy("batch_id").mode("overwrite").saveAsTable(tmp))
-  }
+  /** Compaction MERGES the folded stats rows (their sums are the whole
+    * point); postings rewrite verbatim under the same bucket layout. */
+  override protected def fold(spark: SparkSession, name: String,
+      table: String, rows: DataFrame): DataFrame =
+    if (table == s"${name}_stats")
+      rows.groupBy(col("batch_id"))
+        .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
+    else rows
 
   /** BM25 top-k for a frame of (query_id, text) queries, served from
     * the store: the query term set collects to the driver (bounded by
@@ -159,7 +132,13 @@ object PostingIndex {
     * behave exactly as they do in the in-memory operator. The flip
     * side is the caller's contract: EXTERNAL queries must use an id
     * space disjoint from the corpus, or an accidental id collision
-    * silently drops that one candidate. */
+    * silently drops that one candidate.
+    *
+    * Snapshot semantics: the query terms are collected when this method
+    * BUILDS its plan (the same [[Corpus.bm25QueryTermsLocal]] as
+    * [[Corpus.bm25TopK]]), and they fix the bucket filter too. The frame
+    * scores the queries as they were at the call against the store as
+    * it is at execution; call again after the query source changes. */
   def topK(queries: DataFrame, idCol: String, textCol: String,
       name: String, nQueryTerms: Int, k: Int,
       k1: Double = 1.2, b: Double = 0.75,
@@ -168,7 +147,7 @@ object PostingIndex {
     require(nQueryTerms >= 1 && nQueryTerms <= 128 && k >= 1,
       s"topK: need 1 <= nQueryTerms <= 128 and k >= 1, got $nQueryTerms/$k")
     val spark = queries.sparkSession
-    ShingleIndex.checkNormFp(spark, name, norm)
+    BatchTable.checkNormFp(spark, name, norm)
     // evaluated ONCE: the collected rows serve the isin bucket filter
     // below AND re-plant as the scoring plan's local query-term frame
     // (Corpus.bm25QueryTermsLocal) — the query set is bounded, and the

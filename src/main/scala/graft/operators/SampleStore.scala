@@ -15,9 +15,9 @@ import graft.functions.TextFns
   * batch size) and the serve-time window re-takes the global quota.
   * Store-served sample ≡ the one-shot operator over everything
   * ingested, bit-for-bit (spec-pinned) — the seventh member of the
-  * persisted-store family, with the standard lifecycle: batch-stamped
-  * appends, partition-surgery crash repair, fold-to-base compaction,
-  * and the `{name}_batches` ledger driven by
+  * persisted-store family, with the standard [[BatchTable]] lifecycle:
+  * batch-stamped appends, partition-surgery crash repair, fold-to-base
+  * compaction, committed through the `{group}_manifest` of
   * [[graft.streaming.Streams.multiIngest]].
   *
   * The centroids are FROZEN at [[build]] (the IVF-store discipline):
@@ -36,7 +36,10 @@ import graft.functions.TextFns
   *     slots (re-ingestion is idempotent, not double-counted)
   *   - `{name}_meta` — (k): the quota; serve/append read it back
   */
-object SampleStore {
+object SampleStore extends BatchTable.Store {
+
+  protected val batchSuffixes = Seq("_smpl")
+  override protected val frozenSuffixes = Seq("_cent")
 
   /** Create (overwrite) the store: frozen centroids from the base
     * corpus (hash-order sample — the oracle-replayable default; pass
@@ -49,20 +52,13 @@ object SampleStore {
     import spark.implicits._
     require(nCells >= 1 && k >= 1,
       s"SampleStore: need nCells >= 1 and k >= 1, got $nCells/$k")
-    // ledger and manifest dropped with the data: see ShingleIndex.build
-    Seq(s"${name}_cent", s"${name}_smpl", s"${name}_meta",
-      s"${name}_batches", s"${name}_manifest")
-      .foreach(ShingleIndex.dropTable(spark, _))
+    dropStore(spark, name)
     val v = Similarity.withNorm(corpus, idCol, vecCol, "vec_id", "v")
     val cent = centroids.getOrElse(
       Similarity.topKByHashCentroids(v, "vec_id", "v", nCells))
     cent.coalesce(1).write.mode("overwrite").saveAsTable(s"${name}_cent")
     Seq(k).toDF("k").write.mode("overwrite").saveAsTable(s"${name}_meta")
-    localQuota(v, spark, name, k)
-      .withColumn("batch_id", lit(ShingleIndex.BaseBatch))
-      .coalesce(1)
-      .write.partitionBy("batch_id").mode("overwrite")
-      .saveAsTable(s"${name}_smpl")
+    BatchTable.writeBase(localQuota(v, spark, name, k), s"${name}_smpl")
   }
 
   private def quota(spark: SparkSession, name: String): Int =
@@ -92,35 +88,21 @@ object SampleStore {
       name: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val v = Similarity.withNorm(batch, idCol, vecCol, "vec_id", "v")
-    ShingleIndex.insertByName(
-      localQuota(v, spark, name, quota(spark, name))
-        .withColumn("batch_id", lit(batchId))
-        .coalesce(1),
-      s"${name}_smpl")
+    BatchTable.append(localQuota(v, spark, name, quota(spark, name)),
+      s"${name}_smpl", batchId)
   }
 
-  /** Replay repair: drop whatever a crashed attempt of `batchId`
-    * appended — partition surgery, idempotent, no-op if absent. */
-  def pruneBatch(spark: SparkSession, name: String, batchId: Long): Unit =
-    ShingleIndex.dropBatchPartitions(spark, Seq(s"${name}_smpl"), batchId)
-
-  /** Fold committed batch partitions into base (−1), RE-TAKING the
-    * quota — min-k is associative, so the folded base is exactly the
-    * quota of everything folded, and row count shrinks back to
-    * ≤ cells·k. Uncommitted batches keep their partitions verbatim. */
-  def compact(spark: SparkSession, name: String,
-      uncommitted: Set[Long] = Set.empty): Unit = {
-    val k = quota(spark, name)
+  /** Compaction RE-TAKES the quota — min-k is associative, so the folded
+    * base is exactly the quota of everything folded, and row count
+    * shrinks back to ≤ cells·k. */
+  override protected def fold(spark: SparkSession, name: String,
+      table: String, rows: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("batch_id"), col("list_id"))
       .orderBy(col("h"), col("doc_id"))
-    ShingleIndex.compactTable(spark, s"${name}_smpl", uncommitted,
-      (df, tmp) =>
-        df.dropDuplicates("batch_id", "list_id", "doc_id")
-          .withColumn("_r", row_number().over(w))
-          .filter(col("_r") <= k)
-          .select(col("list_id"), col("doc_id"), col("h"), col("batch_id"))
-          .coalesce(1)
-          .write.partitionBy("batch_id").mode("overwrite").saveAsTable(tmp))
+    rows.dropDuplicates("batch_id", "list_id", "doc_id")
+      .withColumn("_r", row_number().over(w))
+      .filter(col("_r") <= quota(spark, name))
+      .drop("_r")
   }
 
   /** The current sample: the global per-cluster quota over every

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.TextFns._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
 
 /** Persisted, bucketed shingle index — the storage half of
@@ -57,17 +58,18 @@ import org.apache.spark.sql.functions._
   * over the whole corpus per batch — the difference is roughly the
   * corpus' text bytes vs 16 bytes per stored posting.
   */
-object ShingleIndex {
+object ShingleIndex extends BatchTable.Store {
+
+  protected val batchSuffixes = Seq("_idx", "_sh")
 
   /** Create (overwrite) the index tables for `docs`.
     *
     * Both data tables carry a `batch_id` PARTITION column (build writes
-    * everything as batch -1, the base corpus; [[append]] stamps its
-    * caller's id). It exists for crash repair, not for queries: undoing
-    * a half-committed append ([[pruneBatch]]) is then partition-
-    * directory surgery instead of a table rewrite. Every read path
-    * drops it; the extra directory level per ingest batch is the same
-    * file-growth trajectory the per-batch bucketed appends already had.
+    * everything as the base batch; [[append]] stamps its caller's id) —
+    * the [[BatchTable]] lifecycle. It exists for crash repair, not for
+    * queries: every read path drops it; the extra directory level per
+    * ingest batch is the same file-growth trajectory the per-batch
+    * bucketed appends already had.
     *
     * @param parts partition-directory count for `{name}_idx` (the file-
     *   pruning granularity). The posting write repartitions by `p` so
@@ -85,68 +87,27 @@ object ShingleIndex {
         graft.functions.TextFns.normText): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // the ledger and the store's own (group-of-one) manifest go too: a
-    // rebuilt index starts a NEW batch-id history, and a stale commit
-    // row would make a fresh stream silently skip ids it believes
-    // committed (data loss) or compactIndex fold a torn new batch it
-    // believes committed (permanent half-write)
-    Seq(s"${name}_idx", s"${name}_sh", s"${name}_meta", s"${name}_batches",
-      s"${name}_manifest").foreach(dropTable(spark, _))
+    dropStore(spark, name)
     // persisted across the two writes: without it the whole corpus
     // normalize/tokenize/shingle scan runs twice — once per table
     val sh = Dedup.shingleDocs(docs, idCol, textCol, n, norm).persist()
     try {
-      postings(sh, parts, BaseBatch)
-        .write.partitionBy("p", "batch_id").bucketBy(buckets, "s").sortBy("s")
-        .mode("overwrite").saveAsTable(s"${name}_idx")
-      sh.withColumn("batch_id", lit(BaseBatch))
-        .write.partitionBy("batch_id").bucketBy(buckets, "doc_id")
-        .mode("overwrite").saveAsTable(s"${name}_sh")
-      Seq((n, buckets, parts, normFp(norm)))
+      BatchTable.writeBase(postings(sh, parts), s"${name}_idx",
+        Some(BucketSpec(buckets, Seq("s"), Seq("s"))), partitionBy = Seq("p"))
+      BatchTable.writeBase(sh, s"${name}_sh",
+        Some(BucketSpec(buckets, Seq("doc_id"), Nil)))
+      Seq((n, buckets, parts, BatchTable.normFp(norm)))
         .toDF("n", "buckets", "parts", "norm_fp")
         .write.mode("overwrite").saveAsTable(s"${name}_meta")
     } finally sh.unpersist(blocking = false)
   }
 
-  /** The batch id [[build]] (and id-less [[append]] calls) write under:
-    * base-corpus rows, never prunable. */
-  val BaseBatch: Long = -1L
-
-  /** DROP TABLE plus stale-directory cleanup: an in-memory catalog
-    * forgets tables across JVMs while their warehouse directories
-    * persist, and a leftover directory fails the next saveAsTable with
-    * LOCATION_ALREADY_EXISTS. When the table IS in the catalog, the
-    * data location is resolved from its metadata — a table created with
-    * a custom LOCATION (or living in a non-default database) does not
-    * sit at `<warehouse>/<name>`, and deleting the convention path
-    * would orphan its real data while killing an unrelated same-named
-    * directory. The warehouse-path convention applies only to the
-    * catalog-forgot-it case, where the convention is all that's left.
-    * Goes through the Hadoop FileSystem of the resolved path, so any
-    * scheme (file/hdfs/s3a) works. Only graft-owned table names (this
-    * object, [[IvfIndex]], the p41 query fingerprint) are ever passed
-    * here. */
-  private[graft] def dropTable(spark: SparkSession, table: String): Unit = {
-    val loc: java.net.URI =
-      if (spark.catalog.tableExists(table))
-        spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table)).location
-      else new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase).toUri
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val path = new org.apache.hadoop.fs.Path(loc)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.delete(path, true)
-  }
-
-  /** (doc_id, s, p, batch_id) postings in table-column order (partition
-    * cols last), clustered by `p` so each write task emits ~1 partition
-    * directory per batch. */
-  private def postings(sh: DataFrame, parts: Int, batchId: Long): DataFrame =
+  /** (doc_id, s, p) postings, clustered by `p` so each write task emits
+    * ~1 partition directory per batch. */
+  private def postings(sh: DataFrame, parts: Int): DataFrame =
     sh.select(col("doc_id"), explode(transform(col("shingles"),
         s => hash60(s))).as("s"))
       .withColumn("p", pmod(col("s"), lit(parts.toLong)))
-      .withColumn("batch_id", lit(batchId))
       .repartition(parts, col("p"))
 
   /** Append a batch to the index (plain bucketed inserts — the cap is
@@ -158,175 +119,32 @@ object ShingleIndex {
     * @param batchId stamps the written partitions so a crash between
     *   this append and the caller's commit record can be undone by
     *   [[pruneBatch]] on replay. The default merges into the base
-    *   corpus (batch -1) — fine for one-shot batch ingest where the
-    *   caller has no replay, but a ledger-guarded stream MUST pass its
-    *   real batch id or replay repair has nothing to prune. */
+    *   corpus — fine for one-shot batch ingest where the caller has no
+    *   replay, but a manifest-guarded stream MUST pass its real batch id
+    *   or replay repair has nothing to prune. */
   def append(docs: DataFrame, idCol: String, textCol: String,
-      name: String, batchId: Long = BaseBatch,
+      name: String, batchId: Long = BatchTable.BaseBatch,
       norm: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         graft.functions.TextFns.normText): Unit = {
     val (n, _, parts) = meta(docs.sparkSession, name)
-    checkNormFp(docs.sparkSession, name, norm)
+    BatchTable.checkNormFp(docs.sparkSession, name, norm)
     // persisted for the same two-writes reason as in build
     val sh = Dedup.shingleDocs(docs, idCol, textCol, n, norm).persist()
     try {
-      insertByName(postings(sh, parts, batchId), s"${name}_idx")
-      insertByName(sh.withColumn("batch_id", lit(batchId)), s"${name}_sh")
+      BatchTable.append(postings(sh, parts), s"${name}_idx", batchId)
+      BatchTable.append(sh, s"${name}_sh", batchId)
     } finally sh.unpersist(blocking = false)
   }
 
-  /** Fold ingest-batch partitions back into the base corpus
-    * (`batch_id = -1`) — the maintenance pass that keeps a long-lived
-    * index's directory count bounded. Every append adds one `batch_id`
-    * partition level; after thousands of micro-batches the listing cost
-    * creeps even though the DATA layout is fine. Compaction rewrites
-    * each table with every batch NOT in `uncommitted` re-stamped as
-    * base; `uncommitted` batches (appended but never ledger-committed —
-    * a crashed stream that has not yet replayed) keep their partitions
-    * verbatim so [[pruneBatch]] can still undo them on replay.
-    *
-    * Crash discipline, stated honestly: the rewrite lands in a
-    * `_cmp` table first, then swaps via two catalog renames (current →
-    * `_old`, `_cmp` → current) and drops `_old`. No step destroys data
-    * before the replacement exists; a crash between the renames leaves
-    * the index under the `_old`/`_cmp` names — loud (readers fail on a
-    * missing table, nothing silently wrong) and manually recoverable by
-    * finishing the renames. A transactional table format would make the
-    * swap atomic; plain catalog tables cannot.
-    *
-    * Caller contract: run only while no writer is active (same
-    * single-writer rule as append — [[graft.streaming.Streams]] exposes
-    * the ledger-aware driver `compactIndex`), and clear any persisted
-    * plans over the index tables first (the same caller-clears-cache
-    * convention as the pair operators: a cached plan pins the
-    * pre-compact file listing and fails on the swapped files). */
-  def compact(spark: SparkSession, name: String,
-      uncommitted: Set[Long] = Set.empty): Unit = {
-    val (_, buckets, parts) = meta(spark, name)
-    compactTable(spark, s"${name}_idx", uncommitted, (df, tmp) =>
-      df.repartition(parts, col("p"))
-        .write.partitionBy("p", "batch_id").bucketBy(buckets, "s").sortBy("s")
-        .mode("overwrite").saveAsTable(tmp))
-    compactTable(spark, s"${name}_sh", uncommitted, (df, tmp) =>
-      df.write.partitionBy("batch_id").bucketBy(buckets, "doc_id")
-        .mode("overwrite").saveAsTable(tmp))
-  }
-
-  /** The fold-and-swap core of [[compact]], shared with
-    * [[IvfIndex.compact]]: re-stamp every batch NOT in `uncommitted` as
-    * base, write the result to a `_cmp` staging table via `write`
-    * (which owns the table-specific partition/bucket layout), then swap
-    * it in with the two-rename dance and drop the old generation. See
-    * [[compact]]'s scaladoc for the crash discipline the swap
-    * provides. */
-  private[operators] def compactTable(spark: SparkSession, table: String,
-      uncommitted: Set[Long], write: (DataFrame, String) => Unit): Unit = {
-    val keep = uncommitted - BaseBatch
-    val stamp =
-      if (keep.isEmpty) lit(BaseBatch)
-      else when(col("batch_id").isin(keep.toSeq: _*), col("batch_id"))
-        .otherwise(lit(BaseBatch))
-    val tmp = s"${table}_cmp"
-    val old = s"${table}_old"
-    Seq(tmp, old).foreach(dropTable(spark, _))
-    write(spark.table(table).withColumn("batch_id", stamp), tmp)
-    spark.sql(s"ALTER TABLE $table RENAME TO $old")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    // RENAME moves a managed table's root directory but leaves its
-    // catalog PARTITION entries pointing at the pre-rename paths —
-    // measured, not theorized: without the recovers, the swapped-in
-    // table reads empty, and dropping the old table purges partition
-    // dirs by their stale paths INSIDE the live table. Re-register
-    // both sides from the filesystem before anything reads or drops.
-    spark.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
-    spark.sql(s"ALTER TABLE $old RECOVER PARTITIONS")
-    spark.sql(s"REFRESH TABLE $table")
-    dropTable(spark, old)
-  }
-
-  /** Column-name-safe append: `insertInto` matches by POSITION, so a
-    * producer whose projection order drifts from the table's would
-    * silently scramble the store — reorder to the table's own column
-    * list first, making the append structurally immune to upstream
-    * reorders (a genuinely missing column still fails, loudly). */
-  private[operators] def insertByName(df: DataFrame, table: String): Unit =
-    df.select(df.sparkSession.table(table).columns.map(col): _*)
-      .write.mode("append").insertInto(table)
-
-  /** Undo every row batch `batchId` wrote to the index — the replay
-    * repair for a crash anywhere in the append→commit window (postings
-    * written but shingles not, or both written but the caller's ledger
-    * row not). Appends land in `batch_id=<id>` partition directories,
-    * so undoing one is DROP PARTITION surgery: no rewrite of any other
-    * batch's data, idempotent, and a batch that never appended is a
-    * no-op. Between the crash and the replay, readers may see the
-    * half-committed batch — the guarantee is convergence on restart,
-    * not isolation in the gap. */
-  def pruneBatch(spark: SparkSession, name: String, batchId: Long): Unit =
-    dropBatchPartitions(spark, Seq(s"${name}_idx", s"${name}_sh"), batchId)
-
-  /** The partition-surgery core of [[pruneBatch]], shared with
-    * [[IvfIndex.pruneBatch]]: drop every `batch_id = batchId` partition
-    * of each table (enumerated via the partial spec, since a table may
-    * carry other partition columns too). */
-  private[operators] def dropBatchPartitions(spark: SparkSession,
-      tables: Seq[String], batchId: Long): Unit = {
-    require(batchId != BaseBatch, "the base corpus cannot be pruned")
-    tables.foreach { t =>
-      val specs = spark.sql(
-        s"SHOW PARTITIONS $t PARTITION (batch_id=$batchId)").collect()
-      specs.foreach { r =>
-        val spec = r.getString(0).split('/').map { kv =>
-          val Array(k, v) = kv.split("=", 2)
-          s"$k='$v'"
-        }.mkString(", ")
-        spark.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION ($spec)")
-      }
-      // session FileIndex caches can outlive the partition drop
-      // (observed after a compact's rename/recover churn): make the
-      // removal visible to every later read in this session
-      if (specs.nonEmpty) spark.sql(s"REFRESH TABLE $t")
-    }
-  }
+  /** Compaction re-clusters the postings by `p`, as build writes them. */
+  override protected def fold(spark: SparkSession, name: String,
+      table: String, rows: DataFrame): DataFrame =
+    if (table == s"${name}_idx") rows.repartition(meta(spark, name)._3, col("p"))
+    else rows
 
   private def meta(spark: SparkSession, name: String): (Int, Int, Int) = {
     val r = spark.table(s"${name}_meta").head()
     (r.getInt(0), r.getInt(1), r.getInt(2))
-  }
-
-  /** Deterministic fingerprint of a text normalizer: the expression
-    * tree it builds over a fixed probe column, rendered as a string —
-    * zero Spark jobs, so checking it per append/probe costs nothing.
-    * Persisted into every text store's `{name}_meta` at build and
-    * REQUIRED to match at append/probe time: the "same normalizer for
-    * build, every append, every probe" contract is thereby enforced by
-    * the store itself, not by scaladoc (a mismatched caller would
-    * silently write/query a disjoint hash space). Stores built before
-    * the fingerprint existed lack the column and skip the check.
-    * (Stability note: the rendered tree is stable for a fixed Spark
-    * version; a Spark upgrade that changes expression printing
-    * invalidates stored fingerprints LOUDLY — rebuild or re-stamp.) */
-  private[operators] def normFp(
-      norm: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
-      : String =
-    norm(col("__graft_norm_fp__")).toString
-
-  /** Require `{name}_meta`'s stored normalizer fingerprint (if present)
-    * to match the caller's normalizer. */
-  private[operators] def checkNormFp(spark: SparkSession, name: String,
-      norm: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
-      : Unit = {
-    val m = spark.table(s"${name}_meta")
-    if (m.columns.contains("norm_fp")) {
-      val stored = m.head().getAs[String]("norm_fp")
-      val got = normFp(norm)
-      require(stored == got,
-        s"$name: this store was built with a DIFFERENT text normalizer " +
-          s"than the caller passed (stored fingerprint:\n  $stored\n" +
-          s"caller's:\n  $got\n) — appends/probes under a mismatched " +
-          "normalizer write or query a disjoint token/shingle space; " +
-          "pass the build-time normalizer, or rebuild the store")
-    }
   }
 
   /** New-batch near-dup pairs against the indexed corpus — row-for-row
@@ -356,7 +174,7 @@ object ShingleIndex {
         "; cast upstream (and rebuild a store built over other ids) or " +
         "use Dedup.incrementalNearDupPairs' generic-id path")
     val (n, _, parts) = meta(spark, name)
-    checkNormFp(spark, name, norm)
+    BatchTable.checkNormFp(spark, name, norm)
     val shNew = Dedup.shingleDocs(newDocs, idCol, textCol, n, norm).persist()
     val newInv = shNew.select(col("doc_id"),
       explode(transform(col("shingles"), s => hash60(s))).as("s"))

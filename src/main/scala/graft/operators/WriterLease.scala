@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets
 
 /** Best-effort single-writer lease for the persisted indexes.
   *
-  * Both index families document a single-writer rule (ledger-guarded
+  * Both index families document a single-writer rule (manifest-guarded
   * appends interleaved from two streams corrupt silently); this marker
   * turns the violation LOUD instead of preventing it. Semantics are
   * deliberate takeover, not mutual exclusion:

@@ -1721,7 +1721,7 @@ object Pipeline {
       }
     if (!fpOk) {
       build
-      graft.operators.ShingleIndex.dropTable(spark, fpTable)
+      graft.operators.BatchTable.dropTable(spark, fpTable)
       Seq((fp.getLong(0), fp.getLong(1))).toDF("n", "ids")
         .write.saveAsTable(fpTable)
     }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.functions.TextFns
+import graft.operators.{BatchTable, CmsStore, DriftStore, DsirStore, IvfIndex, PostingIndex, SampleStore, ShingleIndex, WriterLease}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -28,13 +30,13 @@ import java.sql.Timestamp
   * state linearly.
   *
   * The ingest loops at the bottom write the persisted stores
-  * (graft.operators) through ONE commit protocol: a micro-batch commits
-  * as a row in `{group}_manifest`, and each member store's
-  * `{name}_batches` ledger is backfilled after it. A store ingested
-  * alone is a group of one, so it now writes `{name}_manifest` (its
-  * commit point) next to `{name}_batches`. State written before the
-  * manifest existed stays safe: a batch with no manifest row is pruned
-  * and appended again on replay, which converges to the same store.
+  * (graft.operators, each on the [[graft.operators.BatchTable]]
+  * lifecycle) through ONE commit protocol: a micro-batch commits as a
+  * row in `{group}_manifest`, the only commit record. A store ingested
+  * alone is a group of one, committed in its own `{name}_manifest`.
+  * Compaction folds exactly the batch ids of the manifest the store was
+  * ingested under. A batch with no manifest row is pruned and appended
+  * again on replay, which converges to the same store.
   */
 object Streams {
 
@@ -376,17 +378,15 @@ object Streams {
 
   // ---- streaming ingest: one commit protocol -------------------------------
 
-  /** One persisted-store family's lifecycle hooks AS DATA — the only way
-    * an ingest loop touches a store: `prune` undoes whatever a crashed
-    * attempt of a batch half-appended (partition surgery, idempotent,
-    * no-op if the batch never landed) and `append` stamps the batch
-    * under its `batch_id` partition — exactly the pair every family
-    * already exposes; the constructors below just close over the column
-    * names. A family ingested alone is a group of one
+  /** One persisted-store family as an ingest loop sees it: the store
+    * (whose [[graft.operators.BatchTable.Store]] lifecycle gives `prune`
+    * and compaction) and an `append` that stamps the batch under its
+    * `batch_id` partition, closed over the family's column names. A
+    * family ingested alone is a group of one
     * (`multiIngest(docs, name, Seq(StoreFamily.x(name, …)), …)`). */
   final case class StoreFamily(
       name: String,
-      prune: (SparkSession, Long) => Unit,
+      store: BatchTable.Store,
       append: (DataFrame, Long) => Unit,
       /** The text normalizer the family's append closes over (None for
         * non-tokenizing families — drift/vectors/sample). Carried so
@@ -395,7 +395,13 @@ object Streams {
         * normalizes Unicode but whose posting family defaults to ASCII
         * would commit divergent tokenizations under one manifest row
         * (empty postings but counted stats for a non-Latin batch). */
-      norm: Option[Column => Column] = None)
+      norm: Option[Column => Column] = None) {
+    /** Undo whatever a crashed attempt of `batchId` half-appended:
+      * partition surgery over the store's batch tables, idempotent, a
+      * no-op if the batch never landed. */
+    def prune(spark: SparkSession, batchId: Long): Unit =
+      store.pruneBatch(spark, name, batchId)
+  }
 
   object StoreFamily {
     // Text families take the SAME pluggable normalizer their stores
@@ -404,52 +410,38 @@ object Streams {
     // here too, or one commit would write divergent tokenizations
     // (empty postings but counted stats rows, for a CJK batch).
     def shingle(name: String, idCol: String, textCol: String,
-        norm: Column => Column = graft.functions.TextFns.normText)
-        : StoreFamily =
-      StoreFamily(name,
-        (s, id) => graft.operators.ShingleIndex.pruneBatch(s, name, id),
-        (b, id) => graft.operators.ShingleIndex.append(b, idCol, textCol,
-          name, id, norm), norm = Some(norm))
+        norm: Column => Column = TextFns.normText): StoreFamily =
+      StoreFamily(name, ShingleIndex,
+        ShingleIndex.append(_, idCol, textCol, name, _, norm), Some(norm))
     def posting(name: String, idCol: String, textCol: String,
-        norm: Column => Column = graft.functions.TextFns.normText)
-        : StoreFamily =
-      StoreFamily(name,
-        (s, id) => graft.operators.PostingIndex.pruneBatch(s, name, id),
-        (b, id) => graft.operators.PostingIndex.append(b, idCol, textCol,
-          name, id, norm), norm = Some(norm))
+        norm: Column => Column = TextFns.normText): StoreFamily =
+      StoreFamily(name, PostingIndex,
+        PostingIndex.append(_, idCol, textCol, name, _, norm), Some(norm))
     def cms(name: String, idCol: String, textCol: String,
-        norm: Column => Column = graft.functions.TextFns.normText)
-        : StoreFamily =
-      StoreFamily(name,
-        (s, id) => graft.operators.CmsStore.pruneBatch(s, name, id),
-        (b, id) => graft.operators.CmsStore.append(b, idCol, textCol,
-          name, id, norm), norm = Some(norm))
+        norm: Column => Column = TextFns.normText): StoreFamily =
+      StoreFamily(name, CmsStore,
+        CmsStore.append(_, idCol, textCol, name, _, norm), Some(norm))
     def dsir(name: String, idCol: String, textCol: String,
-        norm: Column => Column = graft.functions.TextFns.normText)
-        : StoreFamily =
-      StoreFamily(name,
-        (s, id) => graft.operators.DsirStore.pruneBatch(s, name, id),
-        (b, id) => graft.operators.DsirStore.append(b, idCol, textCol,
-          name, id, norm), norm = Some(norm))
+        norm: Column => Column = TextFns.normText): StoreFamily =
+      StoreFamily(name, DsirStore,
+        DsirStore.append(_, idCol, textCol, name, _, norm), Some(norm))
     def drift(name: String, groupCol: String, valueCol: String): StoreFamily =
-      StoreFamily(name,
-        (s, id) => graft.operators.DriftStore.pruneBatch(s, name, id),
-        (b, id) => graft.operators.DriftStore.appendReport(b, groupCol,
-          valueCol, name, id))
+      StoreFamily(name, DriftStore,
+        DriftStore.appendReport(_, groupCol, valueCol, name, _))
     /** Plain accumulation into the IVF cell store (vs frozen
       * centroids) — the near-dup TRIAGE of [[vectorIngestBatch]] is an
       * upstream policy, not a store append: pre-filter the stream if
       * only novel vectors should land. */
     def vectors(name: String, idCol: String, vecCol: String): StoreFamily =
-      StoreFamily(name,
-        (s, id) => graft.operators.IvfIndex.pruneBatch(s, name, id),
-        (b, id) => graft.operators.IvfIndex.append(b, idCol, vecCol,
-          name, id))
+      StoreFamily(name, IvfIndex, IvfIndex.append(_, idCol, vecCol, name, _))
     def sample(name: String, idCol: String, vecCol: String): StoreFamily =
-      StoreFamily(name,
-        (s, id) => graft.operators.SampleStore.pruneBatch(s, name, id),
-        (b, id) => graft.operators.SampleStore.append(b, idCol, vecCol,
-          name, id))
+      StoreFamily(name, SampleStore,
+        SampleStore.append(_, idCol, vecCol, name, _))
+
+    /** Every store a family can wrap — what [[compactIndex]] dispatches
+      * over, by the first batch table that exists under a name. */
+    private[Streams] val stores: Seq[BatchTable.Store] = Seq(ShingleIndex,
+      IvfIndex, CmsStore, PostingIndex, DsirStore, SampleStore, DriftStore)
   }
 
   /** THE convergent-exactly-once commit of one ingest micro-batch, shared
@@ -468,18 +460,12 @@ object Streams {
     *      crashed attempt of this batch half-appended — mid-append,
     *      between members, after the last append — then `work` redoes
     *      every append and the manifest row commits. Every member thus
-    *      converges to exactly the manifest's horizon, which per-member
-    *      ledgers alone cannot guarantee (member A appended batch 7, B
-    *      did not: A's ledger says nothing wrong, and nobody knows A must
-    *      be pruned);
-    *   3. in every case each member's `{name}_batches` ledger is
-    *      backfilled — AFTER the manifest, never before, and idempotently
-    *      on the replay path too (closing the crash-between-manifest-and-
-    *      backfill window). [[compactIndex]] folds exactly the ledger's
-    *      batches, and member-committed ⊆ manifest-committed means it
-    *      can never fold a batch the group replay still needs to prune;
-    *      a batch whose backfill was interrupted merely stays un-folded
-    *      until the next batch backfills it.
+    *      converges to exactly the manifest's horizon (member A appended
+    *      batch 7, B did not: only the group's record shows that A must
+    *      be pruned).
+    *
+    * The manifest row is the only commit record: compaction
+    * ([[compactIndex]], [[compactGroup]]) folds exactly its batch ids.
     *
     * Honest limits: between a crash and the replay, readers can see a
     * torn batch (convergence, not isolation), and whatever `work` emits
@@ -494,20 +480,15 @@ object Streams {
         "family listed twice, or the triage index listed as a family " +
         "too) would append the batch twice under one batch_id, which " +
         "prune/replay cannot repair")
-    def holds(table: String) = spark.catalog.tableExists(table) &&
-      spark.table(table).filter(col("batch_id") === batchId).head(1).nonEmpty
-    def record(table: String) =
-      Seq(batchId).toDF("batch_id").write.mode("append").saveAsTable(table)
     val manifest = s"${group}_manifest"
-    if (!holds(manifest)) {
-      leases.foreach { case (n, t) =>
-        graft.operators.WriterLease.check(spark, n, t)
-      }
+    val committed = spark.catalog.tableExists(manifest) &&
+      spark.table(manifest).filter(col("batch_id") === batchId).head(1).nonEmpty
+    if (!committed) {
+      leases.foreach { case (n, t) => WriterLease.check(spark, n, t) }
       members.foreach(_.prune(spark, batchId))
       work
-      record(manifest)
+      Seq(batchId).toDF("batch_id").write.mode("append").saveAsTable(manifest)
     }
-    members.map(f => s"${f.name}_batches").filterNot(holds).foreach(record)
   }
 
   /** Start a foreachBatch ingest loop: claim each writer lease once per
@@ -522,7 +503,7 @@ object Streams {
       runBatch: (DataFrame, Long, Map[String, String]) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val leases = leaseNames.distinct.map(n =>
-      n -> graft.operators.WriterLease.take(input.sparkSession, n)).toMap
+      n -> WriterLease.take(input.sparkSession, n)).toMap
     input.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch((b: DataFrame, id: java.lang.Long) =>
@@ -535,7 +516,7 @@ object Streams {
     * commit in `{group}_manifest`. A single family is a group of one —
     * conventionally `group = family.name`, so the store's own
     * `{name}_manifest` is its commit point, which the store's `build`
-    * drops with its ledger. A multi-family `{group}_manifest` belongs to
+    * drops with its data. A multi-family `{group}_manifest` belongs to
     * no store: drop it when rebuilding the members, or a fresh stream
     * skips batch ids the old one committed.
     *
@@ -562,7 +543,7 @@ object Streams {
     * DSIR (+ any other family) with ONE commit point per batch, holding
     * the group lease and every family lease. All member stores must be
     * built over the seed corpus first; compact members between restarts
-    * via [[compactGroup]] (or per family via [[compactIndex]]). */
+    * via [[compactGroup]] (a group of one via [[compactIndex]]). */
   def multiIngest(docs: DataFrame, group: String,
       families: Seq[StoreFamily], checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -644,8 +625,9 @@ object Streams {
     * corpus); stages 1–3 are stateless per-row maps and stage 4 is
     * batch-bounded against the index — no unbounded state store
     * anywhere. Fan ingest sources into one stream (union) rather than
-    * running parallel writers; compact via [[compactGroup]] /
-    * [[compactIndex]] between restarts. */
+    * running parallel writers; compact via [[compactGroup]] (a plain
+    * dedup ingest, `group = cfg.indexName`, via [[compactIndex]])
+    * between restarts. */
   def triageMultiIngest(docs: DataFrame, idCol: String, textCol: String,
       cfg: graft.operators.Ingest.Config, group: String,
       families: Seq[StoreFamily], checkpoint: String,
@@ -725,67 +707,58 @@ object Streams {
       (b, id, leases) => vectorIngestBatch(b, id, idCol, vecCol, cfg, route,
         leases.get(cfg.indexName)))
 
-  /** Every persisted-store family by the partitioned table whose
-    * existence names it, with its compaction — the dispatch table of
-    * [[compactIndex]]. */
-  private val compactors
-      : Seq[(String, String, (SparkSession, String, Set[Long]) => Unit)] =
-    Seq(
-      ("_idx", "shingle", graft.operators.ShingleIndex.compact),
-      ("_cells", "IVF", graft.operators.IvfIndex.compact),
-      ("_cms", "CMS stats", graft.operators.CmsStore.compact),
-      ("_post", "BM25", graft.operators.PostingIndex.compact),
-      ("_dsir", "DSIR model", graft.operators.DsirStore.compact),
-      ("_smpl", "balanced sample", graft.operators.SampleStore.compact),
-      ("_drift", "drift reports", graft.operators.DriftStore.compact))
-
-  /** Ledger-aware compaction for a STOPPED ingest stream: folds every
-    * ledger-committed batch partition into the store's base while
+  /** Manifest-driven compaction for a STOPPED ingest stream of a store
+    * ingested alone — the group of one, committed in `{name}_manifest`.
+    * Folds every committed batch partition into the store's base while
     * leaving any appended-but-uncommitted batch (a crash the stream has
-    * not replayed yet) prunable in place. One maintenance entry point
-    * serves every family — the table layout names it (`{name}_idx` →
-    * [[graft.operators.ShingleIndex.compact]], `{name}_cells` →
-    * [[graft.operators.IvfIndex.compact]], `{name}_cms` →
-    * [[graft.operators.CmsStore.compact]], which also MERGES folded
-    * counters back to one matrix, and so on). The uncommitted set is
-    * computed, not assumed: batch ids stamped in the store's REGISTERED
-    * partitions (SHOW PARTITIONS — catalog metadata only; a
-    * `select(batch_id).distinct()` would scan the store, Spark's
-    * metadata-only rewrite being off by default) minus the
-    * `{name}_batches` ledger's ids. Run between stream restarts —
-    * compaction is a writer, and it TAKES the writer lease, so an ingest
-    * stream mistakenly left running fails loudly at its next batch
-    * instead of interleaving with the rewrite. */
+    * not replayed yet) prunable in place. The store is found by its
+    * tables (`{name}_idx` → [[ShingleIndex]], `{name}_cells` →
+    * [[IvfIndex]], `{name}_cms` → [[CmsStore]], which also MERGES folded
+    * counters back to one matrix, and so on). A store that holds ingest
+    * batches but has no `{name}_manifest` was ingested as a member of a
+    * multi-family group: this fails, naming [[compactGroup]], rather
+    * than guess which of its batches are committed. */
   def compactIndex(spark: SparkSession, indexName: String): Unit = {
-    val (partTable, runCompact) = compactors.iterator
-      .map { case (suffix, _, compact) => (indexName + suffix, compact) }
-      .find(t => spark.catalog.tableExists(t._1))
+    val store = StoreFamily.stores
+      .find(s => spark.catalog.tableExists(s.batchTables(indexName).head))
       .getOrElse(throw new IllegalArgumentException(
-        s"no persisted index named '$indexName' — none of " +
-          compactors.map { case (suffix, family, _) =>
-            s"$indexName$suffix ($family)" }.mkString(", ") + " exists"))
-    graft.operators.WriterLease.take(spark, indexName)
-    val appended = spark.sql(s"SHOW PARTITIONS $partTable")
-      .collect()
-      .flatMap(_.getString(0).split('/').find(_.startsWith("batch_id=")))
-      .map(_.stripPrefix("batch_id=").toLong).toSet
-    val ledger = s"${indexName}_batches"
-    val committed =
-      if (spark.catalog.tableExists(ledger))
-        spark.table(ledger).select(col("batch_id")).collect()
-          .map(_.getLong(0)).toSet
-      else Set.empty[Long]
-    runCompact(spark, indexName,
-      appended -- committed - graft.operators.ShingleIndex.BaseBatch)
+        s"no persisted store named '$indexName' — none of " +
+          StoreFamily.stores.map(_.batchTables(indexName).head)
+            .mkString(", ") + " exists"))
+    compactMember(spark, indexName, store, indexName)
   }
 
-  /** Compact every member family of a STOPPED group ingest — the
-    * group face of [[compactIndex]], one call per maintenance window.
-    * Valid precisely because the ledger backfill keeps
-    * family-committed ⊆ manifest-committed: each family's own ledger
-    * already names every batch safe to fold, so per-family compaction
-    * needs no group awareness. */
-  def compactGroup(spark: SparkSession,
+  /** Compact every member family of a STOPPED group ingest, folding
+    * exactly the batch ids `{group}_manifest` holds — one call per
+    * maintenance window. For a triage group, list the shingle index too
+    * (`StoreFamily.shingle(cfg.indexName, "doc_id", "text", cfg.norm)`). */
+  def compactGroup(spark: SparkSession, group: String,
       families: Seq[StoreFamily]): Unit =
-    families.foreach(f => compactIndex(spark, f.name))
+    families.foreach(f => compactMember(spark, f.name, f.store, group))
+
+  /** Fold store `name`'s batches that `{group}_manifest` commits. The
+    * uncommitted set is computed, not assumed: batch ids in the store's
+    * registered partitions minus the manifest's. Compaction is a writer,
+    * and it TAKES the writer lease first, so an ingest stream mistakenly
+    * left running fails loudly at its next batch instead of interleaving
+    * with the rewrite. */
+  private def compactMember(spark: SparkSession, name: String,
+      store: BatchTable.Store, group: String): Unit = {
+    WriterLease.take(spark, name)
+    val appended = BatchTable.batchIds(spark, store.batchTables(name)) -
+      BatchTable.BaseBatch
+    val manifest = s"${group}_manifest"
+    val committed =
+      if (spark.catalog.tableExists(manifest))
+        spark.table(manifest).collect().map(_.getLong(0)).toSet
+      else if (appended.isEmpty) Set.empty[Long]
+      else throw new IllegalStateException(
+        s"$name holds ingest batches ${appended.toSeq.sorted.mkString(", ")} " +
+          s"but no commit record $manifest exists" +
+          (if (group == name) " — it was ingested as a member of a " +
+            "multi-family group; compact it with Streams.compactGroup(" +
+            "spark, <group>, <families>)"
+          else ""))
+    store.compact(spark, name, appended -- committed)
+  }
 }

@@ -67,7 +67,7 @@ object DsirScaleProbe {
       }
     } finally {
       Seq("graft_dsirprobe_tgt", "graft_dsirprobe_dsir",
-        "graft_dsirprobe_meta", "graft_dsirprobe_batches")
+        "graft_dsirprobe_meta")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.stop()
     }

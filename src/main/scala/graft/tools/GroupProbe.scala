@@ -9,13 +9,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Group-ingest overhead ladder — the missing measurement behind
-  * `Streams.multiIngestBatch`'s "N+1 bounded writes per batch" claim:
+  * `Streams.multiIngestBatch`'s "bounded writes per batch" claim:
   * per-batch WALL as a function of family count (1/3/7) and the
   * accumulated corpus size the stores hold (10×/50×), against the sum
   * of the SAME families' bare appends on the same batch. The
   * difference is the commit machinery — manifest committed-check +
-  * N prune no-ops + batch persist + manifest row + N ledger
-  * backfills — which the claim says is constant-bounded per batch
+  * N prune no-ops + batch persist + manifest row — which the claim
+  * says is constant-bounded per batch
   * (catalog writes, nothing corpus- or store-scale).
   *
   * The 7-family group exercises every append family in the engine
@@ -95,19 +95,13 @@ object GroupProbe {
       StoreFamily.vectors("graft_gp_ivf", "doc_id", "embedding"),
       StoreFamily.sample("graft_gp_smpl", "doc_id", "embedding")).take(f)
     val allTables = Seq(
-      "graft_gp_shingle_idx", "graft_gp_shingle_sh",
-      "graft_gp_shingle_meta", "graft_gp_shingle_batches",
+      "graft_gp_shingle_idx", "graft_gp_shingle_sh", "graft_gp_shingle_meta",
       "graft_gp_post_post", "graft_gp_post_stats", "graft_gp_post_meta",
-      "graft_gp_post_batches",
-      "graft_gp_cms_cms", "graft_gp_cms_meta", "graft_gp_cms_batches",
+      "graft_gp_cms_cms", "graft_gp_cms_meta",
       "graft_gp_dsir_tgt", "graft_gp_dsir_dsir", "graft_gp_dsir_meta",
-      "graft_gp_dsir_batches",
       "graft_gp_drift_ref", "graft_gp_drift_meta", "graft_gp_drift_drift",
-      "graft_gp_drift_batches",
       "graft_gp_ivf_cells", "graft_gp_ivf_cent", "graft_gp_ivf_meta",
-      "graft_gp_ivf_batches",
-      "graft_gp_smpl_cent", "graft_gp_smpl_smpl", "graft_gp_smpl_meta",
-      "graft_gp_smpl_batches") ++
+      "graft_gp_smpl_cent", "graft_gp_smpl_smpl", "graft_gp_smpl_meta") ++
       famCounts.map(f => s"graft_gp_g${f}_manifest")
     def dropAll(): Unit =
       allTables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -147,7 +141,7 @@ object GroupProbe {
           }
           // the bare-append control: same batch shape, same families,
           // fresh ids, NO commit machinery — the group/bare delta is
-          // the manifest+ledger+prune overhead under test
+          // the manifest+prune overhead under test
           for (b <- 1 to nBatches) {
             tag += 1
             val batch = batchOf(tag)

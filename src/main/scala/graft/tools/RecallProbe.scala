@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Sessions
-import graft.operators.{IvfIndex, ShingleIndex, Similarity}
+import graft.operators.{BatchTable, IvfIndex, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -190,7 +190,7 @@ object RecallProbe {
         "graft_probe_recall_km_cells", "graft_probe_recall_km_cent",
         "graft_probe_recall_pq_cells", "graft_probe_recall_pq_cent",
         "graft_probe_recall_pq_books")
-        .foreach(ShingleIndex.dropTable(spark, _))
+        .foreach(BatchTable.dropTable(spark, _))
       val root = java.nio.file.Paths.get(truthPath).getParent
       import scala.jdk.CollectionConverters._
       val walk = java.nio.file.Files.walk(root)

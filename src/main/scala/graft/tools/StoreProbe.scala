@@ -186,13 +186,11 @@ object StoreProbe {
       }
     } finally {
       Seq("graft_sp_post_post", "graft_sp_post_stats", "graft_sp_post_meta",
-        "graft_sp_post_batches", "graft_sp_cms_cms", "graft_sp_cms_meta",
-        "graft_sp_cms_batches", "graft_sp_ivf_cells", "graft_sp_ivf_cent",
-        "graft_sp_dsir_tgt", "graft_sp_dsir_dsir", "graft_sp_dsir_meta",
-        "graft_sp_dsir_batches", "graft_sp_drift_ref", "graft_sp_drift_meta",
-        "graft_sp_drift_drift", "graft_sp_drift_batches",
-        "graft_sp_smpl_cent", "graft_sp_smpl_smpl", "graft_sp_smpl_meta",
-        "graft_sp_smpl_batches")
+        "graft_sp_cms_cms", "graft_sp_cms_meta", "graft_sp_ivf_cells",
+        "graft_sp_ivf_cent", "graft_sp_dsir_tgt", "graft_sp_dsir_dsir",
+        "graft_sp_dsir_meta", "graft_sp_drift_ref", "graft_sp_drift_meta",
+        "graft_sp_drift_drift", "graft_sp_smpl_cent", "graft_sp_smpl_smpl",
+        "graft_sp_smpl_meta")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.stop()
     }

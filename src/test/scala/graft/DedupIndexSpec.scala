@@ -217,7 +217,7 @@ class DedupIndexSpec extends AnyFunSuite {
       // old convention would have resolved to
       Files.createDirectories(decoy)
       Files.write(decoy.resolve("bystander.txt"), "keep me".getBytes)
-      graft.operators.ShingleIndex.dropTable(spark, "graft_ext_t")
+      graft.operators.BatchTable.dropTable(spark, "graft_ext_t")
       assert(!spark.catalog.tableExists("graft_ext_t"))
       assert(!Files.exists(loc), "the table's real data dir must be cleaned")
       assert(Files.exists(decoy.resolve("bystander.txt")),

@@ -126,8 +126,7 @@ class IngestSpec extends AnyFunSuite {
       assert(e.getMessage.contains("DIFFERENT text normalizer"),
         e.getMessage)
     } finally {
-      Seq("graft_ing_u_idx", "graft_ing_u_sh", "graft_ing_u_meta",
-        "graft_ing_u_batches")
+      Seq("graft_ing_u_idx", "graft_ing_u_sh", "graft_ing_u_meta")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.catalog.clearCache()
     }

@@ -159,7 +159,7 @@ class PipelineSpec extends AnyFunSuite {
         norm = uni).count() >= 1)
     } finally {
       Seq("graft_fp_post_post", "graft_fp_post_stats",
-        "graft_fp_post_meta", "graft_fp_post_batches")
+        "graft_fp_post_meta")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.catalog.clearCache()
     }
