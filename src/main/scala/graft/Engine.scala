@@ -7,7 +7,7 @@ import graft.registry.{FragmentRegistry, Volatility, FragmentDef}
 import graft.smo.SmoBuilder
 import graft.scoring.Scoring
 import graft.status.Status
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, LocalLeaf, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType, StringType}
 
@@ -16,9 +16,9 @@ import scala.collection.mutable
 /** The embedded-library facade — the Spark-first equivalent of installing
   * the reference's schema + SDK into a database (SURVEY.md §3). State:
   *
-  *   - an immutable CatalogSnapshot (refresh() swaps in a new one and
-  *     atomically invalidates the cached SMO — the matview semantics of
-  *     sql/V000001__init.sql:376-386 without locks);
+  *   - an immutable CatalogSnapshot and the SMO built from it (refresh()
+  *     builds the new SMO, then swaps both in at once — the matview
+  *     semantics of sql/V000001__init.sql:376-386 without locks);
   *   - a ConceptRegistry (defineConcept widens columns()/status() on the
   *     next call — the dynamic-view regeneration of V000012…sql:1-31);
   *   - a FragmentRegistry (list_tenants / ignored_schemas / MDE hooks);
@@ -28,6 +28,18 @@ import scala.collection.mutable
   * Every read path is a pure function of (snapshot, registries), which is
   * what makes whatIf() a DataFrame transformation instead of the
   * reference's rollback-only transaction dance (core_test.clj:209-254).
+  *
+  * The SMO is held as a lineage-free leaf: refresh() runs the builder
+  * once and keeps its one sorted partition as a local checkpoint under a
+  * one-node plan that declares `SinglePartition` (LocalLeaf).
+  * Status, columns, what-if and import rules plan over that leaf, and
+  * their per-table aggregates need no exchange. No cache entry is
+  * registered, so the builder's plan and broadcasts are freed once the
+  * leaf exists, and a superseded SMO, or that of a dropped Engine, is
+  * released by Spark's ContextCleaner once nothing references it.
+  * Caveat of a local checkpoint: its one block lives on one executor; on
+  * a cluster, losing that executor fails SMO reads until the next
+  * refresh().
   */
 final class Engine private (
     val spark: SparkSession,
@@ -43,7 +55,7 @@ final class Engine private (
       FragmentRegistry.withDefaults(spark), mutable.LinkedHashMap(), None)
 
   @volatile private var snapshot: CatalogSnapshot = initialSnapshot
-  @volatile private var smoCache: Option[DataFrame] = initialSmo
+  @volatile private var heldSmo: Option[DataFrame] = initialSmo
   @volatile private var conceptsReg: ConceptRegistry =
     ConceptRegistry.builtins(indexedSpaceQuirk)
   @volatile private var i18nValue: String = "{}"
@@ -54,17 +66,14 @@ final class Engine private (
 
   def currentSnapshot: CatalogSnapshot = snapshot
 
-  /** refresh(): recompute the SMO from the (possibly new) snapshot and
-    * atomically swap the cached copy — write-new-then-swap is the
+  /** refresh(): build the SMO of the (possibly new) snapshot as a
+    * lineage-free leaf, then swap it in — write-new-then-swap is the
     * CONCURRENTLY mode of update_schema_metadata_overview. */
   def refresh(newSnapshot: CatalogSnapshot = snapshot): Unit = synchronized {
-    val fresh = SmoBuilder.build(newSnapshot, ignoredSchemasOf(newSnapshot)).cache()
-    fresh.count() // materialize before swapping, like REFRESH CONCURRENTLY
-    // an unchanged snapshot plans the same SMO, whose cache entry `fresh`
-    // now shares: releasing the old frame would release it too
-    smoCache.filterNot(_.sameSemantics(fresh)).foreach(_.unpersist(blocking = false))
+    // materialized before the swap, like REFRESH CONCURRENTLY
+    val fresh = LocalLeaf(SmoBuilder.build(newSnapshot, ignoredSchemasOf(newSnapshot)))
     snapshot = newSnapshot
-    smoCache = Some(fresh)
+    heldSmo = Some(fresh)
   }
 
   def ignoredSchemas: DataFrame = ignoredSchemasOf(snapshot)
@@ -72,8 +81,8 @@ final class Engine private (
   private def ignoredSchemasOf(snap: CatalogSnapshot): DataFrame =
     SmoBuilder.ignoredSchemas(snap, fragments.df("ignored_schemas"))
 
-  /** The SMO matview analog (cached until refresh). */
-  def smo: DataFrame = smoCache.getOrElse { refresh(); smoCache.get }
+  /** The SMO matview analog (held until refresh). */
+  def smo: DataFrame = heldSmo.getOrElse { refresh(); heldSmo.get }
 
   // ---- concepts ------------------------------------------------------------
 
@@ -152,15 +161,15 @@ final class Engine private (
     *
     * Snapshot semantics: the simulated engine's SMO is derived from this
     * engine's SMO as of the call (its rows minus the dropped relations',
-    * its constraint arrays minus the dropped FKs), not rebuilt, and it is
-    * not cached: it adds no job and no cache entry. If this engine
-    * refreshes later, the simulation still answers for the old snapshot,
-    * but recomputes that SMO's plan instead of reading the released
-    * cache. Its `currentSnapshot` is the pruned snapshot, which scoring
-    * reads and an explicit `refresh()` rebuilds from. The simulation
-    * shares this engine's fragment registry (tenants, ignored schemas,
-    * MDE fragments), MDE definitions, concepts, bidi functions and i18n
-    * document, so status and scoring see the host's hooks. */
+    * its constraint arrays minus the dropped FKs), not rebuilt, and not
+    * materialized: it adds no job and no cache entry. It reads this
+    * engine's SMO leaf and keeps it alive by reference, so if this engine
+    * refreshes later, the simulation still answers for the old snapshot
+    * from the old leaf. Its `currentSnapshot` is the pruned snapshot,
+    * which scoring reads and an explicit `refresh()` rebuilds from. The
+    * simulation shares this engine's fragment registry (tenants, ignored
+    * schemas, MDE fragments), MDE definitions, concepts, bidi functions
+    * and i18n document, so status and scoring see the host's hooks. */
   def whatIfDropTable(schemaName: String, tableName: String): Engine = {
     import scala.jdk.CollectionConverters._
     val edges = snapshot.dependencies

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogTable}
 import org.apache.spark.sql.functions._
 
@@ -235,13 +235,14 @@ object BatchTable {
   private[graft] def normFp(norm: Column => Column): String =
     norm(col("__graft_norm_fp__")).toString
 
-  /** Require `{name}_meta`'s stored normalizer fingerprint (if present)
-    * to match the caller's normalizer. */
-  private[graft] def checkNormFp(spark: SparkSession, name: String,
-      norm: Column => Column): Unit = {
-    val m = spark.table(s"${name}_meta")
-    if (m.columns.contains("norm_fp")) {
-      val stored = m.head().getAs[String]("norm_fp")
+  /** `{name}_meta`'s one row, read in one job, after requiring its
+    * stored normalizer fingerprint (if present) to match the caller's
+    * normalizer: the store's geometry and the check from a single read. */
+  private[graft] def checkedMeta(spark: SparkSession, name: String,
+      norm: Column => Column): Row = {
+    val m = spark.table(s"${name}_meta").head()
+    if (m.schema.fieldNames.contains("norm_fp")) {
+      val stored = m.getAs[String]("norm_fp")
       val got = normFp(norm)
       require(stored == got,
         s"$name: this store was built with a DIFFERENT text normalizer " +
@@ -250,5 +251,6 @@ object BatchTable {
           "normalizer write or query a disjoint token/shingle space; " +
           "pass the build-time normalizer, or rebuild the store")
     }
+    m
   }
 }

@@ -65,8 +65,8 @@ object CmsStore extends BatchTable.Store {
   def append(docs: DataFrame, idCol: String, textCol: String,
       name: String, batchId: Long,
       norm: Column => Column = graft.functions.TextFns.normText): Unit = {
-    val (n, depth, width) = meta(docs.sparkSession, name)
-    BatchTable.checkNormFp(docs.sparkSession, name, norm)
+    val m = BatchTable.checkedMeta(docs.sparkSession, name, norm)
+    val (n, depth, width) = (m.getInt(0), m.getInt(1), m.getInt(2))
     BatchTable.append(
       Corpus.cmsNgramMatrix(docs, idCol, textCol, n, depth, width, norm),
       s"${name}_cms", batchId)

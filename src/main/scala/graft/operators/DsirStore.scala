@@ -57,17 +57,13 @@ object DsirStore extends BatchTable.Store {
       .write.mode("overwrite").saveAsTable(s"${name}_meta")
   }
 
-  private[operators] def buckets(spark: SparkSession, name: String): Int =
-    spark.table(s"${name}_meta").head().getInt(0)
-
   /** Add a batch's source histogram under its own `batch_id` partition
     * (built with the STORED geometry; nothing already written is read
     * or touched). */
   def append(docs: DataFrame, idCol: String, textCol: String,
       name: String, batchId: Long,
       norm: Column => Column = graft.functions.TextFns.normText): Unit = {
-    val b = buckets(docs.sparkSession, name)
-    BatchTable.checkNormFp(docs.sparkSession, name, norm)
+    val b = BatchTable.checkedMeta(docs.sparkSession, name, norm).getInt(0)
     BatchTable.append(Corpus.dsirHistogram(docs, idCol, textCol, b, norm),
       s"${name}_dsir", batchId)
   }
@@ -93,8 +89,7 @@ object DsirStore extends BatchTable.Store {
       norm: Column => Column = graft.functions.TextFns.normText)
       : DataFrame = {
     val spark = docs.sparkSession
-    val b = buckets(spark, name)
-    BatchTable.checkNormFp(spark, name, norm)
+    val b = BatchTable.checkedMeta(spark, name, norm).getInt(0)
     Corpus.dsirScore(docs, idCol, textCol, b,
       Corpus.collectDsirHist(sourceHist(spark, name), b),
       Corpus.collectDsirHist(spark.table(s"${name}_tgt"), b), norm)

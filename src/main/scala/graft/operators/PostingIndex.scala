@@ -103,7 +103,7 @@ object PostingIndex extends BatchTable.Store {
   def append(docs: DataFrame, idCol: String, textCol: String,
       name: String, batchId: Long,
       norm: Column => Column = TextFns.normText): Unit = {
-    BatchTable.checkNormFp(docs.sparkSession, name, norm)
+    BatchTable.checkedMeta(docs.sparkSession, name, norm)
     BatchTable.append(postings(docs, idCol, textCol, norm),
       s"${name}_post", batchId)
     BatchTable.append(statsRow(docs, idCol, textCol, norm),
@@ -147,7 +147,7 @@ object PostingIndex extends BatchTable.Store {
     require(nQueryTerms >= 1 && nQueryTerms <= 128 && k >= 1,
       s"topK: need 1 <= nQueryTerms <= 128 and k >= 1, got $nQueryTerms/$k")
     val spark = queries.sparkSession
-    BatchTable.checkNormFp(spark, name, norm)
+    BatchTable.checkedMeta(spark, name, norm)
     // evaluated ONCE: the collected rows serve the isin bucket filter
     // below AND re-plant as the scoring plan's local query-term frame
     // (Corpus.bm25QueryTermsLocal) — the query set is bounded, and the

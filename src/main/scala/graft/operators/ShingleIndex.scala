@@ -126,8 +126,8 @@ object ShingleIndex extends BatchTable.Store {
       name: String, batchId: Long = BatchTable.BaseBatch,
       norm: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         graft.functions.TextFns.normText): Unit = {
-    val (n, _, parts) = meta(docs.sparkSession, name)
-    BatchTable.checkNormFp(docs.sparkSession, name, norm)
+    val m = BatchTable.checkedMeta(docs.sparkSession, name, norm)
+    val (n, parts) = (m.getInt(0), m.getInt(2))
     // persisted for the same two-writes reason as in build
     val sh = Dedup.shingleDocs(docs, idCol, textCol, n, norm).persist()
     try {
@@ -139,13 +139,9 @@ object ShingleIndex extends BatchTable.Store {
   /** Compaction re-clusters the postings by `p`, as build writes them. */
   override protected def fold(spark: SparkSession, name: String,
       table: String, rows: DataFrame): DataFrame =
-    if (table == s"${name}_idx") rows.repartition(meta(spark, name)._3, col("p"))
+    if (table == s"${name}_idx")
+      rows.repartition(spark.table(s"${name}_meta").head().getAs[Int]("parts"), col("p"))
     else rows
-
-  private def meta(spark: SparkSession, name: String): (Int, Int, Int) = {
-    val r = spark.table(s"${name}_meta").head()
-    (r.getInt(0), r.getInt(1), r.getInt(2))
-  }
 
   /** New-batch near-dup pairs against the indexed corpus — row-for-row
     * the result of `Dedup.incrementalNearDupPairs(corpus, newDocs, …)`
@@ -173,8 +169,8 @@ object ShingleIndex extends BatchTable.Store {
           .mkString(", ") +
         "; cast upstream (and rebuild a store built over other ids) or " +
         "use Dedup.incrementalNearDupPairs' generic-id path")
-    val (n, _, parts) = meta(spark, name)
-    BatchTable.checkNormFp(spark, name, norm)
+    val m = BatchTable.checkedMeta(spark, name, norm)
+    val (n, parts) = (m.getInt(0), m.getInt(2))
     val shNew = Dedup.shingleDocs(newDocs, idCol, textCol, n, norm).persist()
     val newInv = shNew.select(col("doc_id"),
       explode(transform(col("shingles"), s => hash60(s))).as("s"))

@@ -143,7 +143,7 @@ class AwGoldenSpec extends AnyFunSuite {
   }
 
   test("what-if keeps the host's hooks and derives its SMO without rebuilding or caching") {
-    engine.smo.count() // the parent's SMO is cached before the simulation
+    engine.smo.count() // the parent's SMO is materialized before the simulation
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val sim = engine.whatIfDropTable("production", "document")
     val st = sim.status.collect()(0)

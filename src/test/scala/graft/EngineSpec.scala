@@ -92,6 +92,14 @@ class EngineSpec extends AnyFunSuite {
 
   private lazy val engine = new Engine(spark, snap)
 
+  /** The fixture catalog cut to its `production` schema. */
+  private lazy val productionOnly = CatalogSnapshot.fromRows(spark,
+    relations.filter(_.getString(0) == "production"),
+    attributes.filter(_.getString(0) == "production"),
+    constraints.filter(_.getString(0) == "production"),
+    indexes.filter(_.getString(0) == "production"),
+    schemaPrivs)
+
   /** Janino compiles allowed in a repeated engine cycle: measured 0 with
     * the session's generated-code cache (Sessions.CodegenCacheEntries),
     * 16 with Spark's default of 100 entries. */
@@ -276,7 +284,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("what-if SMO: derived from the cached SMO, equal to a rebuild, no cache entry added") {
-    engine.smo.count() // the parent's SMO is cached before the simulation
+    engine.smo.count() // the parent's SMO is materialized before the simulation
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val sim = engine.whatIfDropTable("sales", "customer")
     assert(sim.status.collect().head.getAs[Long]("column_count") == 12L)
@@ -289,6 +297,60 @@ class EngineSpec extends AnyFunSuite {
     val custId = sim.smo.filter(col("table_name") === "order"
       && col("column_name") === "customer_id").collect()(0)
     assert(custId.isNullAt(custId.fieldIndex("constraints")))
+    // the simulation holds the parent's SMO as of the call: after the
+    // parent refreshes to a changed snapshot it answers for the old one
+    val parent = new Engine(spark, snap)
+    val held = parent.whatIfDropTable("sales", "customer")
+    parent.refresh(productionOnly)
+    assert(parent.status.collect().head.getAs[Long]("column_count") == 5L)
+    assert(held.status.collect().head.getAs[Long]("column_count") == 12L)
+  }
+
+  test("SMO leaf: one single-partition node with the builder's rows, in order") {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.LogicalRDD
+    val e = new Engine(spark, snap)
+    val smo = e.smo
+    val leaf = smo.queryExecution.analyzed
+    assert(leaf.isInstanceOf[LogicalRDD] && leaf.children.isEmpty, leaf.treeString)
+    // its size is its stored partition's, not the builder's join estimate
+    assert(leaf.stats.sizeInBytes > 0 && leaf.stats.sizeInBytes < (1 << 20), leaf.stats)
+    assert(smo.queryExecution.sparkPlan.outputPartitioning == SinglePartition)
+    // a per-table aggregate over the leaf needs no shuffle
+    val perTable = smo.groupBy(col("schema_name"), col("table_name")).count()
+    assert(perTable.collect().length == 6)
+    val plan = perTable.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+    val rebuilt = graft.smo.SmoBuilder.build(snap, e.ignoredSchemas)
+    assert(smo.exceptAll(rebuilt).isEmpty)
+    assert(rebuilt.exceptAll(smo).isEmpty)
+    val key = smo.collect().map(r => (r.getAs[String]("schema_name"),
+      r.getAs[String]("table_name"), r.getAs[String]("column_name")))
+    assert(key.sameElements(key.sorted))
+  }
+
+  test("catalog job budget: each catalog op runs a pinned number of Spark jobs") {
+    val e = new Engine(spark, snap)
+    val ops = Seq[(String, () => Any)](
+      "refresh" -> (() => e.refresh(snap)),
+      "status" -> (() => e.status.collect()),
+      "columns" -> (() => e.columns.filter(col("is_pii")).select("column_name").collect()),
+      "mde" -> (() => e.masterDataEntityCandidates.limit(10).collect()),
+      "whatif" -> (() => e.whatIfDropTable("sales", "customer").status.collect()))
+    // count a second cycle: a session's first MDE ranking runs one more job
+    ops.foreach(_._2())
+    val got = ops.map { case (op, run) =>
+      op -> org.apache.spark.JobTally.of(spark.sparkContext)(run()).jobs
+    }.toMap
+    // measured on Spark 4.1.2 with AQE, which runs one job per query
+    // stage and per broadcast. Reads plan over the SMO leaf, whose one
+    // partition lets their per-table aggregates skip the shuffle: an
+    // exchange over the SMO, or a rebuild of it, goes over the budget.
+    val budget = Map("refresh" -> 10, "status" -> 3, "columns" -> 1,
+      "mde" -> 7, "whatif" -> 7)
+    budget.foreach { case (op, max) =>
+      assert(got(op) <= max, s"$op ran ${got(op)} jobs, budget $max: $got")
+    }
   }
 
   test("a repeated engine cycle reuses its generated code") {
@@ -306,8 +368,10 @@ class EngineSpec extends AnyFunSuite {
     val first = cycle()
     val second = cycle()
     assert(second <= MaxRecompiles, s"first pass compiled $first, second $second")
-    // refreshing to an unchanged snapshot keeps the SMO cached
-    assert(e.smo.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    // refresh leaves the SMO materialized: reading it runs one
+    // single-task job, and no stage of the build
+    val read = org.apache.spark.JobTally.of(spark.sparkContext)(e.smo.collect())
+    assert(read == org.apache.spark.JobTally(jobs = 1, tasks = 1), read)
   }
 
   test("bidi mapping fns: forward/backward roundtrip where exact") {
@@ -374,13 +438,7 @@ class EngineSpec extends AnyFunSuite {
   test("refresh swaps snapshots atomically") {
     val e2 = new Engine(spark, snap)
     val before = e2.smo.count()
-    val smaller = CatalogSnapshot.fromRows(spark,
-      relations.filter(_.getString(0) == "production"),
-      attributes.filter(_.getString(0) == "production"),
-      constraints.filter(_.getString(0) == "production"),
-      indexes.filter(_.getString(0) == "production"),
-      schemaPrivs)
-    e2.refresh(smaller)
+    e2.refresh(productionOnly)
     assert(e2.smo.count() < before)
     assert(e2.smo.collect().forall(_.getAs[String]("schema_name") == "production"))
   }

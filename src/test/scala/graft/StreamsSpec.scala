@@ -1592,30 +1592,22 @@ class StreamsSpec extends AnyFunSuite {
 
   test("ingest job budget: one group-of-one CMS batch runs a pinned number of Spark jobs") {
     import graft.operators.CmsStore
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val name = "graft_jobbudget"
     val fam = Seq(Streams.StoreFamily.cms(name, "doc_id", "text"))
     val Seq(seed, b0, b1) = harnessText
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     try {
       CmsStore.build(seed, "doc_id", "text", name, 3, 4, 16)
       // the first batch creates the manifest; measure the steady one
       Streams.multiIngestBatch(b0, 0L, name, fam)
-      spark.sparkContext.addSparkListener(counter)
-      try {
+      val jobs = org.apache.spark.JobTally.of(spark.sparkContext) {
         Streams.multiIngestBatch(b1, 1L, name, fam)
-        org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(counter)
-      // measured 8 on Spark 4.1.2 at 4 cores, with AQE (one job per
-      // query stage): the manifest check, the `_meta` reads, the CMS
+      }.jobs
+      // measured 7 on Spark 4.1.2 at 4 cores, with AQE (one job per
+      // query stage): the manifest check, the one `_meta` read, the CMS
       // matrix's stages and insert, the manifest row. A second commit
-      // record or an extra exchange in the append goes over it.
-      assert(jobs.get() <= 8, s"one ingest batch ran ${jobs.get()} jobs")
+      // record, a second `_meta` read or an extra exchange in the append
+      // goes over it.
+      assert(jobs <= 7, s"one ingest batch ran $jobs jobs")
     } finally {
       Seq(s"${name}_cms", s"${name}_meta", s"${name}_manifest")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
