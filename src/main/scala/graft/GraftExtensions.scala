@@ -90,14 +90,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((
       new FunctionIdentifier("graft_caplist"),
       new ExpressionInfo(classOf[CapList].getName, null, "graft_caplist",
-        "_FUNC_(long_col, cap) - Collects the group's values, saturating at " +
-          "cap + 1 elements (size > cap marks a group over the cap). Only " +
-          "size and set views of the result are deterministic: element " +
-          "order, and which cap + 1 values a saturated array keeps, depend " +
-          "on partition scheduling.",
+        "_FUNC_(col, cap) - Collects the group's non-null values of any " +
+          "type, saturating at cap + 1 elements (size > cap marks a group " +
+          "over the cap). Only size and set views of the result are " +
+          "deterministic: element order, and which cap + 1 values a " +
+          "saturated array keeps, depend on partition scheduling.",
         "", "", "", "", "", "", ""),
       (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_caplist takes (long_col, cap)")
+        require(children.length == 2, "graft_caplist takes (col, cap)")
         val cap = children(1) match {
           case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
           case other => throw new IllegalArgumentException(

@@ -1,103 +1,66 @@
 package graft.expressions
 
-import java.nio.ByteBuffer
+import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.aggregate.Collect
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.DataType
 
-/** Saturating bounded collect of a long column: the group's values as an
-  * array, truncated at `cap + 1` elements — the aggregate that fuses a
-  * df-cap with candidate collection in ONE pass.
+/** Saturating bounded collect of a column of any type: the group's
+  * non-null values as an array, truncated at `cap + 1` elements — the
+  * aggregate that fuses a df-cap with candidate collection in ONE pass.
   *
-  * Contract: if the group holds at most `cap` rows, the result is the
-  * COMPLETE multiset of its values (arrival order, duplicates kept); if
-  * it holds more, the result saturates at length `cap + 1` — so
-  * `size(result) > cap` is exactly the "group over the df-cap" predicate
-  * and a kept group's array is exact. Callers must treat a saturated
-  * array as a drop marker, never as data: which cap+1 values survive is
-  * arrival-order-dependent (partition scheduling), while the kept-group
-  * contract is deterministic as a multiset.
+  * Contract: if the group holds at most `cap` non-null values, the
+  * result is the COMPLETE multiset of them (arrival order, duplicates
+  * kept); if it holds more, the result saturates at length `cap + 1` —
+  * so `size(result) > cap` is exactly the "group over the df-cap"
+  * predicate and a kept group's array is exact. Callers must treat a
+  * saturated array as a drop marker, never as data: which cap+1 values
+  * survive is arrival-order-dependent (partition scheduling), while the
+  * kept-group contract is deterministic as a multiset.
   *
-  * State is O(cap) per group regardless of group size — the same
-  * bounded-buffer discipline as [[KSmallestAgg]], so map-side partial
-  * aggregation works and a 100 TB groupBy over a skewed key space
-  * (stop-shingle posting lists) carries ≤ 8·(cap+1)-byte buffers through
-  * the shuffle instead of full posting lists. This is what replaces the
-  * count-then-anti-join df-cap (two passes + a broadcast) with a single
-  * exchange in Dedup.cappedCandidates.
+  * State is O(cap) per group regardless of group size, so map-side
+  * partial aggregation works and a groupBy over a skewed key space
+  * (stop-shingle posting lists, stop-token name blocks) carries at most
+  * cap+1 values per key through the shuffle instead of full posting
+  * lists. Built on Spark's [[Collect]] (the base of `collect_list`),
+  * which supplies null skipping, value copying and the typed buffer
+  * serialization; only the saturating `update` and `merge` are ours.
   *
-  * Registered as SQL function `graft_caplist(long_col, cap)` by
+  * Registered as SQL function `graft_caplist(col, cap)` by
   * [[graft.GraftExtensions]].
   */
 case class CapList(
     child: Expression, cap: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[scala.collection.mutable.ArrayBuffer[Long]]
-    with UnaryLike[Expression] {
+    extends Collect[ArrayBuffer[Any]] with UnaryLike[Expression] {
 
   private val maxLen = cap + 1
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != LongType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a bigint column, got ${child.dataType.simpleString}")
-    else if (cap < 1)
+    if (cap < 1)
       TypeCheckResult.TypeCheckFailure(s"$prettyName requires cap >= 1, got $cap")
     else TypeCheckResult.TypeCheckSuccess
 
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected lazy val bufferElementType: DataType = child.dataType
+  override protected def convertToBufferElement(value: Any): Any =
+    InternalRow.copyValue(value)
   override def prettyName: String = "graft_caplist"
 
-  override def createAggregationBuffer(): scala.collection.mutable.ArrayBuffer[Long] =
-    new scala.collection.mutable.ArrayBuffer[Long](math.min(maxLen, 16))
+  override def createAggregationBuffer(): ArrayBuffer[Any] =
+    new ArrayBuffer[Any](math.min(maxLen, 16))
 
-  override def update(
-      buf: scala.collection.mutable.ArrayBuffer[Long],
-      input: InternalRow): scala.collection.mutable.ArrayBuffer[Long] = {
-    if (buf.length < maxLen) {
-      val v = child.eval(input)
-      if (v != null) buf += v.asInstanceOf[Long]
-    }
-    buf
-  }
+  override def update(buf: ArrayBuffer[Any], input: InternalRow): ArrayBuffer[Any] =
+    if (buf.length < maxLen) super.update(buf, input) else buf
 
-  override def merge(
-      buf: scala.collection.mutable.ArrayBuffer[Long],
-      other: scala.collection.mutable.ArrayBuffer[Long]): scala.collection.mutable.ArrayBuffer[Long] = {
-    var i = 0
-    while (buf.length < maxLen && i < other.length) {
-      buf += other(i)
-      i += 1
-    }
-    buf
-  }
+  override def merge(buf: ArrayBuffer[Any], other: ArrayBuffer[Any]): ArrayBuffer[Any] =
+    buf ++= other.take(maxLen - buf.length)
 
-  override def eval(buf: scala.collection.mutable.ArrayBuffer[Long]): Any = {
-    val out = new Array[Any](buf.length)
-    var i = 0
-    while (i < buf.length) { out(i) = buf(i); i += 1 }
-    new GenericArrayData(out)
-  }
-
-  override def serialize(buf: scala.collection.mutable.ArrayBuffer[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buf.length)
-    var i = 0
-    while (i < buf.length) { bb.putLong(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): scala.collection.mutable.ArrayBuffer[Long] = {
-    val buf = createAggregationBuffer()
-    val bb = ByteBuffer.wrap(bytes)
-    while (bb.hasRemaining) buf += bb.getLong
-    buf
-  }
+  override def eval(buf: ArrayBuffer[Any]): Any = new GenericArrayData(buf.toArray)
 
   override def withNewMutableAggBufferOffset(offset: Int): CapList =
     copy(mutableAggBufferOffset = offset)

@@ -573,7 +573,7 @@ object Corpus {
 
   /** Corpus-wide boilerplate n-gram mining: the `k` word-`n`-grams
     * appearing in the most documents — the complement view of the dedup
-    * df-cap (what Dedup.cappedIndex DROPS is exactly what this surfaces
+    * df-cap (what Dedup.cappedPairs DROPS is exactly what this surfaces
     * for template/boilerplate review). Shingles are distinct per doc
     * (shingleDocs), so the count IS document frequency. One shuffle on
     * the shingle key with map-side partial counts; the top-k runs as
@@ -768,7 +768,7 @@ object Corpus {
     * 1-row aggregate. The final top-k is a per-query window. Stop-term
     * postings are the skew risk — `maxDf` drops query terms whose
     * posting list exceeds the cap (zero-information terms, the same
-    * df-cap lever as Dedup.cappedIndex).
+    * df-cap lever as Dedup.cappedPairs).
     *
     * Snapshot semantics: the query terms are collected when this method
     * BUILDS its plan (one driver job, [[bm25QueryTermsLocal]]), not when

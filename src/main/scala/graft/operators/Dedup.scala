@@ -160,82 +160,67 @@ object Dedup {
 
   /** df-capped candidate pairs (ida < idb, distinct) from the inverted
     * index over `sh` = shingleDocs output — the shared candidate stage
-    * of [[ngramJaccardPairs]] and [[containmentPairs]].
+    * of [[ngramJaccardPairs]] and [[containmentPairs]]: the hashed
+    * index fed to [[cappedPairs]] with the shingle hash as the key.
     *
-    * The index carries hash60(shingle), not the shingle string: the df
-    * groupBy, the anti-join, and the candidate self-join shuffle 8-byte
-    * longs instead of ~40-byte 5-grams (~2× on the pair pipeline).
-    * Collision honesty: a hash collision (a) may ADD a candidate —
-    * harmless, callers verify exactly on the string arrays — and (b)
-    * merges the colliding shingles' df counts, which can push rare
-    * shingles over the cap and silently DROP a candidate whose only
-    * shared shingles collided. At 2^60 hash space the expected number
-    * of colliding shingle pairs is |shingles|²/2^61 — negligible below
-    * ~10^8 distinct shingles and still vanishingly unlikely to be a
-    * pair's ONLY evidence above that — and cross-engine parity is
-    * unaffected either way because the oracle applies the identical
-    * hash before its df cap.
+    * The index carries hash60(shingle), not the shingle string: the
+    * caplist groupBy shuffles 8-byte longs instead of ~40-byte 5-grams
+    * (~2× on the pair pipeline). Collision honesty: a hash collision (a)
+    * may ADD a candidate — harmless, callers verify exactly on the
+    * string arrays — and (b) merges the colliding shingles' df counts,
+    * which can push rare shingles over the cap and silently DROP a
+    * candidate whose only shared shingles collided. At 2^60 hash space
+    * the expected number of colliding shingle pairs is |shingles|²/2^61
+    * — negligible below ~10^8 distinct shingles and still vanishingly
+    * unlikely to be a pair's ONLY evidence above that — and
+    * cross-engine parity is unaffected either way because the oracle
+    * applies the identical hash before its df cap. */
+  private def cappedCandidates(sh: DataFrame, cap: Int): DataFrame =
+    cappedPairs(sh.select(col("doc_id"),
+      explode(transform(col("shingles"), s => hash60(s))).as("s")),
+      "s", "doc_id", cap)
+
+  /** The one capped candidate-pair stage, for ids of any type: group
+    * `keyed` by `key`, drop every group with more than `cap` rows, and
+    * pair the members of each kept group — (ida, idb) with ida < idb,
+    * distinct across groups. Serves the shingle df-cap
+    * ([[cappedCandidates]]) and Resolve's name blocking.
     *
-    * The df-cap is an ANTI join against the OVER-cap set: that set is
-    * small by construction (only boilerplate shingles exceed the cap),
-    * so AQE broadcasts it and the full index is shuffled once (for the
-    * self-join), not twice. The groupBy keeps map-side partial counts,
-    * which a window-based df would lose (WindowExec buffers whole
-    * partitions — skew-unsafe on mega-hot shingles). */
-  private def cappedCandidates(sh: DataFrame, cap: Int): DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    if (sh.schema("doc_id").dataType == LongType) {
-      // Fused single-pass form (long ids — every query path): ONE
-      // groupBy(s) with a saturating bounded collect (graft_caplist,
-      // O(cap) state per key — skew-safe on stop-shingles by
-      // construction) replaces the old count→anti-join→persist→self-join
-      // cascade. size(ids) > cap is EXACTLY the old `df > cap` drop
-      // (caplist counts rows, duplicates included, same as count(1));
-      // a kept group's array is its complete posting list, so the
-      // in-expression pair expansion below emits exactly the pairs the
-      // capped self-join did: {x, y} per position pair i < j, oriented
-      // by value, self-pairs (within-doc hash collisions) dropped by
-      // the strict < — then distinct, as before. 2 exchanges end to
-      // end (groupBy + distinct) instead of the previous
-      // df-groupBy + anti-broadcast + persist + self-join-broadcast +
-      // distinct, and the inverted index is never materialized twice.
-      val hinv = sh.select(col("doc_id"),
-        explode(transform(col("shingles"), s => hash60(s))).as("s"))
-      hinv.groupBy(col("s"))
-        .agg(call_function("graft_caplist", col("doc_id"), lit(cap)).as("ids"))
-        .filter(size(col("ids")) <= cap)
-        .select(explode(flatten(transform(col("ids"), (x, i) =>
-          transform(slice(col("ids"), i + lit(2), size(col("ids"))), y =>
-            struct(least(x, y).as("ida"), greatest(x, y).as("idb"))))))
-          .as("p"))
-        .select(col("p.ida").as("ida"), col("p.idb").as("idb"))
-        .filter(col("ida") < col("idb"))
-        .distinct()
-    } else {
-      // generic-id fallback: the original capped self-join. persisted:
-      // the self-join's two sides would otherwise each re-run the
-      // explode + hash60 + df-cap anti-join chain (the exchanges
-      // dedupe at runtime via AQE reuse, the map-side chains do not)
-      val invf = cappedIndex(sh, cap).persist()
-      invf.as("a")
-        .join(invf.as("b"),
-          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("ida"), col("b.doc_id").as("idb"))
-        .distinct()
-    }
-  }
+    * ONE groupBy with a saturating bounded collect (graft_caplist,
+    * O(cap) state per key — skew-safe on stop-shingles and stop-tokens
+    * by construction). size(ids) > cap is EXACTLY the `count > cap`
+    * drop (caplist counts rows, duplicates included); a kept group's
+    * array is its complete member list, so the expansion emits exactly
+    * the pairs a capped self-join would: {x, y} per position pair
+    * i < j, oriented by value, self-pairs (duplicate members, e.g.
+    * within-doc hash collisions) dropped by the strict <. The expansion
+    * chains two generators — posexplode, then each member's tail — so
+    * no generated row holds more than `cap` ids, even for a full block
+    * at a large cap. Two exchanges end to end: the groupBy and the
+    * distinct. */
+  private[operators] def cappedPairs(keyed: DataFrame, key: String,
+      id: String, cap: Int): DataFrame =
+    keyed.groupBy(col(key))
+      .agg(call_function("graft_caplist", col(id), lit(cap)).as("ids"))
+      .filter(size(col("ids")).between(2, cap))
+      .select(col("ids"), posexplode(col("ids")).as(Seq("pos", "x")))
+      .select(col("x"),
+        explode(slice(col("ids"), col("pos") + 2, size(col("ids")))).as("y"))
+      .select(least(col("x"), col("y")).as("ida"),
+        greatest(col("x"), col("y")).as("idb"))
+      .filter(col("ida") < col("idb"))
+      .distinct()
 
   /** Fused incremental candidate generation over a tagged inverted
-    * index — the asymmetric (new-probe vs old-corpus) sibling of the
-    * single-pass form in [[cappedCandidates]], shared by
-    * [[incrementalNearDupPairs]] (in-memory) and
-    * [[ShingleIndex.incrementalPairs]] (store-served), so the two
+    * index — the asymmetric (new-probe vs old-corpus) sibling of
+    * [[cappedPairs]], shared by [[incrementalNearDupPairs]] (in-memory)
+    * and [[ShingleIndex.incrementalPairs]] (store-served), so the two
     * paths stay row-identical by construction.
     *
-    * Input: (s, doc_id: long, is_new) posting rows. ONE groupBy(s)
-    * collects TWO saturating bounded lists per shingle — the batch
-    * postings and the old postings, each `graft_caplist`-capped at
-    * cap+1 (CapList skips the NULL the `when` produces for the other
+    * Input: (s, doc_id, is_new) posting rows, ids of any type. ONE
+    * groupBy(s) collects TWO saturating bounded lists per shingle — the
+    * batch postings and the old postings, each `graft_caplist`-capped
+    * at cap+1 (CapList skips the NULL the `when` produces for the other
     * side, so one aggregation pass serves both) — then the combined
     * df-cap is `size(new)+size(old) <= cap`: exact when neither list
     * saturated, and a saturated list alone already exceeds the cap, so
@@ -274,20 +259,6 @@ object Dedup {
       .distinct()
   }
 
-  /** The df-capped hashed inverted index itself: (doc_id, s=hash60,
-    * passthrough cols) with over-cap shingles anti-joined out — the one
-    * place the hashing and cap semantics live; every candidate
-    * generator ([[cappedCandidates]], [[incrementalNearDupPairs]])
-    * builds on this so collision/cap changes apply everywhere at once. */
-  private def cappedIndex(sh: DataFrame, cap: Int,
-      passthrough: String*): DataFrame = {
-    val hinv = sh.select(col("doc_id") +: passthrough.map(col) :+
-      explode(transform(col("shingles"), s => hash60(s))).as("s"): _*)
-    val common = hinv.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > cap).select(col("s"))
-    hinv.join(common, Seq("s"), "left_anti")
-  }
-
   /** Incremental cross-corpus near-dup: new-batch docs vs an EXISTING
     * corpus — the ingest-time shape, where re-pairing the old corpus
     * with itself every batch would be O(corpus) per ingest. Candidates
@@ -319,29 +290,10 @@ object Dedup {
     val shNew = shingleDocs(newDocs, idCol, textCol, n, norm)
       .select(col("doc_id"), col("shingles"), lit(true).as("is_new"))
     val sh = shOld.unionByName(shNew).persist()
-    val cand = if (sh.schema("doc_id").dataType ==
-        org.apache.spark.sql.types.LongType) {
-      // fused single-aggregation form (long ids — every query path):
-      // see incrementalCandidates
-      incrementalCandidates(
-        sh.select(col("doc_id"), col("is_new"),
-          explode(transform(col("shingles"), s => hash60(s))).as("s")),
-        maxDocFreq)
-    } else {
-      // generic-id fallback: the original capped-index self-join.
-      // the probe side is NEW docs only — old×old pairs never form.
-      // a<b on ids dedups new×new; new×old keeps the new doc as probe.
-      val invf = cappedIndex(sh, maxDocFreq, "is_new")
-      invf.filter(col("is_new")).as("a")
-        .join(invf.as("b"),
-          col("a.s") === col("b.s")
-            && (col("a.doc_id") < col("b.doc_id") || !col("b.is_new"))
-            && col("a.doc_id") =!= col("b.doc_id"))
-        .select(col("a.doc_id").as("new_id"), col("b.doc_id").as("match_id"),
-          col("b.is_new").as("match_is_new"))
-        .distinct()
-    }
-    cand
+    incrementalCandidates(
+      sh.select(col("doc_id"), col("is_new"),
+        explode(transform(col("shingles"), s => hash60(s))).as("s")),
+      maxDocFreq)
       .join(sh.select(col("doc_id").as("new_id"), col("shingles").as("sha")),
         "new_id")
       .join(sh.select(col("doc_id").as("match_id"), col("shingles").as("shb")),
@@ -698,7 +650,7 @@ object Dedup {
     * duplicates (the thing being hunted), but an adversarial constant
     * key (e.g. all-black thumbnails hashing to 0) is the same
     * degenerate-key skew stop-shingles cause — cap it with
-    * `maxKeyFreq`, the df-cap pattern of [[cappedIndex]].
+    * `maxKeyFreq`, the df-cap rule of [[cappedPairs]].
     *
     * Recall honesty under the cap: dropping a (band, key) group drops
     * ONLY the candidates whose every matching band is over-cap — a
@@ -711,7 +663,7 @@ object Dedup {
     * @param maxKeyFreq when > 0, (band, key) groups with more than
     *   this many members are dropped before the self-join (anti-join
     *   against the small over-cap set, map-side partial counts — the
-    *   same shape as the shingle df-cap); 0 = no cap
+    *   same drop rule as the shingle df-cap); 0 = no cap
     * @return (ida, idb, hamming) with ida < idb, hamming <= maxHamming
     */
   def hammingNearDupPairs(hashes: DataFrame, idCol: String,

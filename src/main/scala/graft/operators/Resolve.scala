@@ -23,32 +23,6 @@ object Resolve {
   private def par(df: DataFrame): Int =
     df.sparkSession.sparkContext.defaultParallelism
 
-  /** Blocked fuzzy self-join over canonical names: pairs of DISTINCT
-    * normalized names that (a) share at least one blocking token and
-    * (b) sit within `maxDist` Levenshtein edits — each pair annotated
-    * with the min-id representative and record support of both sides,
-    * ready for the existing CC + survivorship pipeline
-    * ([[Clusters.connectedComponents]] / canonical-keep) to turn edges
-    * into entity ids.
-    *
-    * Blocking is standard token blocking with a size cap: a name enters
-    * the candidate stage once per distinct token, and tokens whose
-    * block exceeds `maxBlock` names are dropped entirely — a stop-token
-    * ("inc", "ltd", "the") blocks half the vocabulary into one O(n²)
-    * block, and a pair sharing ONLY stop-tokens is noise anyway (the
-    * same df-cap reasoning as Dedup.cappedIndex). Pairs are
-    * deduplicated across blocks BEFORE the edit-distance gate, so
-    * Levenshtein (O(len²) per pair, the expensive predicate) runs once
-    * per candidate pair. Spark's `levenshtein` and DuckDB's are both
-    * exact integer DP — the gate is engine-portable.
-    *
-    * Scale: one shuffle to distinct the names, one on the blocking
-    * token (capped, so no block is quadratic-unbounded), one to dedup
-    * candidate pairs; the name table re-joins only on equality.
-    *
-    * @return (name_a, name_b, dist, id_a, id_b, n_a, n_b) with
-    *   name_a < name_b, dist in [1, maxDist]
-    */
   /** Exact-group step shared by the pair and entity-id operators: one
     * row per DISTINCT non-empty canonical name, with the min record id
     * as its representative and the record support count. */
@@ -61,6 +35,35 @@ object Resolve {
       .agg(min(col("rid")).as("rep_id"), count(lit(1)).as("n_recs"))
       .repartition(par(recs), col("name"))
 
+  /** Blocked fuzzy pairing over canonical names: pairs of DISTINCT
+    * normalized names that (a) share at least one blocking token and
+    * (b) sit within `maxDist` Levenshtein edits — each pair annotated
+    * with the min-id representative and record support of both sides,
+    * ready for the existing CC + survivorship pipeline
+    * ([[Clusters.connectedComponents]] / canonical-keep) to turn edges
+    * into entity ids.
+    *
+    * Blocking is standard token blocking with a size cap: a name enters
+    * the candidate stage once per distinct token, and tokens whose
+    * block exceeds `maxBlock` names are dropped entirely — a stop-token
+    * ("inc", "ltd", "the") blocks half the vocabulary into one O(n²)
+    * block, and a pair sharing ONLY stop-tokens is noise anyway (the
+    * same df-cap reasoning as the shingle index). Candidates come from
+    * Dedup.cappedPairs, the capped stage every pair operator shares:
+    * one groupBy(token) collects each block's names through
+    * graft_caplist, so no block is self-joined or persisted. Pairs are
+    * deduplicated across blocks BEFORE the edit-distance gate, so
+    * Levenshtein (O(len²) per pair, the expensive predicate) runs once
+    * per candidate pair. Spark's `levenshtein` and DuckDB's are both
+    * exact integer DP — the gate is engine-portable.
+    *
+    * Scale: one shuffle to distinct the names, one on the blocking
+    * token (capped at maxBlock + 1 names of state per token), one to
+    * dedup candidate pairs; the name table re-joins only on equality.
+    *
+    * @return (name_a, name_b, dist, id_a, id_b, n_a, n_b) with
+    *   name_a < name_b, dist in [1, maxDist]
+    */
   def fuzzyNamePairs(recs: DataFrame, idCol: String, nameCol: String,
       maxDist: Int, maxBlock: Long = 1000L,
       norm: Column => Column = TextFns.normText): DataFrame =
@@ -73,31 +76,21 @@ object Resolve {
   private def pairsFromNames(names: DataFrame, maxDist: Int,
       maxBlock: Long): DataFrame = {
     require(maxDist >= 1, s"fuzzyNamePairs: maxDist must be >= 1, got $maxDist")
-    require(maxBlock >= 2, s"fuzzyNamePairs: maxBlock must be >= 2, got $maxBlock")
-    val blocks = names.select(col("name"),
-      explode(array_distinct(TextFns.tokens(col("name")))).as("blk"))
-    // persisted: the candidate self-join's two sides would otherwise
-    // each re-run the explode + block-size groupBy + filter chain (the
-    // same map-side duplication as Dedup.cappedCandidates — exchanges
-    // dedupe at runtime, map chains do not). Caller-clears-cache
-    // convention, as with `names`.
-    val kept = blocks.join(
-      blocks.groupBy(col("blk")).agg(count(lit(1)).as("bsz"))
-        .filter(col("bsz") <= maxBlock),
-      Seq("blk"))
-      .persist()
-    val cand = kept.select(col("blk"), col("name").as("name_a"))
-      .join(kept.select(col("blk"), col("name").as("name_b")), Seq("blk"))
-      .filter(col("name_a") < col("name_b"))
-      .select(col("name_a"), col("name_b")).distinct()
-    // threshold form: the DP abandons a pair the moment its running
-    // band exceeds maxDist (returns -1) — O(len·maxDist) per pair
-    // instead of O(len²), and the exact distance is still returned for
-    // every pair inside the gate (identical to the unbounded form
+    require(maxBlock >= 2 && maxBlock < Int.MaxValue,
+      s"fuzzyNamePairs: maxBlock must be in [2, ${Int.MaxValue}), got $maxBlock")
+    // token blocking: each name is an id and each of its distinct tokens
+    // a key of the shared capped stage. (name, token) rows are distinct,
+    // so the stage's `size(ids) <= maxBlock` is the block-size rule.
+    // threshold form of the gate: the DP abandons a pair the moment its
+    // running band exceeds maxDist (returns -1) — O(len·maxDist) per
+    // pair instead of O(len²), and the exact distance is still returned
+    // for every pair inside the gate (identical to the unbounded form
     // there, which is what the oracle replays)
-    cand
-      .select(col("name_a"), col("name_b"),
-        levenshtein(col("name_a"), col("name_b"), maxDist).as("dist"))
+    Dedup.cappedPairs(names.select(col("name"),
+        explode(array_distinct(TextFns.tokens(col("name")))).as("blk")),
+        "blk", "name", maxBlock.toInt)
+      .select(col("ida").as("name_a"), col("idb").as("name_b"),
+        levenshtein(col("ida"), col("idb"), maxDist).as("dist"))
       .filter(col("dist") >= 1)
       .join(names.select(col("name").as("name_a"), col("rep_id").as("id_a"),
         col("n_recs").as("n_a")), Seq("name_a"))

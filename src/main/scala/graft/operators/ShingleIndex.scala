@@ -47,7 +47,9 @@ import org.apache.spark.sql.functions._
   * the index holds — same candidates (df computed over old+new, cap
   * applied to the combined count, old×old never paired), same exact
   * Jaccard verification on the full arrays. DedupIndexSpec pins the
-  * equality; p30 remains the oracle gate for the semantics.
+  * equality; p30 remains the oracle gate for the semantics. Doc ids may
+  * be of any type: the store keeps the type it was built with, and
+  * every appended or probed batch must use the same one.
   *
   * Scale: per-ingest work is one scan of `{name}_idx`'s key column
   * (columnar, exchange-free groupBy on the bucket key, no text touched)
@@ -155,20 +157,20 @@ object ShingleIndex extends BatchTable.Store {
       norm: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         graft.functions.TextFns.normText): DataFrame = {
     val spark = newDocs.sparkSession
-    // the fused candidate stage collects BOTH sides' ids via
-    // graft_caplist, which takes bigint only — check the batch and the
-    // stored tables here, before any job, naming every type involved
+    // the fused candidate stage collects batch and stored ids into one
+    // caplist pair per shingle and joins them back to both sides' arrays:
+    // any id type works, but all three must agree — check here, before
+    // any job, naming every type involved
     val idTypes = (s"batch $idCol" ->
       newDocs.select(col(idCol)).schema.head.dataType) +:
       Seq("idx", "sh").map(t => s"${name}_$t.doc_id" ->
         spark.table(s"${name}_$t").schema("doc_id").dataType)
-    require(idTypes.forall(_._2 == org.apache.spark.sql.types.LongType),
-      "ShingleIndex.incrementalPairs requires bigint doc ids (the fused " +
-        "candidate stage collects them via graft_caplist), got " +
+    require(idTypes.map(_._2).distinct.size == 1,
+      "ShingleIndex.incrementalPairs requires the batch and the stored " +
+        "tables to share one doc id type, got " +
         idTypes.map { case (w, t) => s"$w: ${t.simpleString}" }
           .mkString(", ") +
-        "; cast upstream (and rebuild a store built over other ids) or " +
-        "use Dedup.incrementalNearDupPairs' generic-id path")
+        "; cast the batch ids upstream (or rebuild the store over them)")
     val m = BatchTable.checkedMeta(spark, name, norm)
     val (n, parts) = (m.getInt(0), m.getInt(2))
     val shNew = Dedup.shingleDocs(newDocs, idCol, textCol, n, norm).persist()

@@ -100,11 +100,14 @@ object Pipeline {
   // dataset-build quality gate: minimum token count to keep a doc
   private val BuildMinTokens = 30
 
-  /** Shared CTE block `ex → common → exf` mirroring Dedup.cappedIndex
-    * exactly — including its collision behavior (extra candidates are
+  /** Shared CTE block `ex → common → exf`: the reference form of the
+    * hashed, df-capped inverted index that Dedup's capped stages
+    * (cappedCandidates → cappedPairs, incrementalCandidates) fuse into
+    * one caplist aggregate. The df-cap drops exactly the same postings,
+    * and the collision behavior matches (extra candidates are
     * re-verified on the string arrays; merged df counts can in
     * principle cap out a rare shingle, identically in both engines, so
-    * parity holds either way — see the cappedIndex scaladoc). `sh`
+    * parity holds either way — see the cappedCandidates scaladoc). `sh`
     * must expose (doc_id, shingles [, extra]). The single source of
     * the hash60-index/df-cap SQL: p02b/p13/p15 (via cappedPairsCtes),
     * p28, and p30 all splice this block. */

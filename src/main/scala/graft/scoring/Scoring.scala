@@ -41,8 +41,13 @@ object Scoring {
         col("references_table").as("table_name"))
       .agg(count(lit(1)).as("fk_in"))
 
+    // shuffle-hash hint: a planned sort-merge join left AQE to switch to
+    // a broadcast at run time, and a session's first, cold ranking lost
+    // that race and ran one extra job. A broadcast hint would fix the job
+    // count too, but each broadcast hashed relation holds a memory page
+    // on the heap until the context cleaner frees it.
     val tablestats = tables
-      .join(inbound, Seq("schema_name", "table_name"), "left")
+      .join(inbound.hint("shuffle_hash"), Seq("schema_name", "table_name"), "left")
       .select(col("schema_name"), col("table_name"), col("approx_rows"),
         coalesce(col("fk_in"), lit(0L)).as("foreign_key_count"))
 

@@ -4,12 +4,11 @@ import graft.operators.Dedup
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** CapList (expressions/CapList) invariants and the fused
-  * Dedup.cappedCandidates path built on it: bounded-buffer semantics
-  * (complete multiset under the cap, saturation at cap+1 over it),
-  * partition-layout invariance of the kept/dropped decision, and
-  * end-to-end pair-set equality between the fused long-id path and the
-  * legacy generic-id self-join path it replaced.
+/** CapList (expressions/CapList) invariants and Dedup's capped
+  * candidate stages built on it: bounded-buffer semantics (complete
+  * multiset under the cap, saturation at cap+1 over it), partition-layout
+  * invariance of the kept/dropped decision, any input type, and
+  * identical pairs for long, int and string ids.
   */
 class CapListSpec extends AnyFunSuite {
   private lazy val spark = Sessions.local(8)
@@ -47,46 +46,64 @@ class CapListSpec extends AnyFunSuite {
     assert(out(2).sorted == (1 to 5).map(_.toLong))
   }
 
-  test("rejects non-bigint input and cap < 1") {
+  test("accepts string input; rejects cap < 1") {
     import spark.implicits._
-    val strs = Seq("a", "b").toDF("v")
-    intercept[org.apache.spark.sql.AnalysisException] {
-      strs.agg(call_function("graft_caplist", col("v"), lit(4))).collect()
-    }
+    // three partitions: partial buffers serialize and merge
+    val strs = Seq(Some("a"), Some("b"), None, Some("a"), Some("c"))
+      .toDF("v").repartition(3)
+    def caplist(cap: Int) = strs
+      .agg(call_function("graft_caplist", col("v"), lit(cap)))
+      .head().getSeq[String](0)
+    // under the cap: every non-null value, duplicates kept
+    assert(caplist(4).sorted == Seq("a", "a", "b", "c"))
+    // over the cap: saturated at cap + 1
+    assert(caplist(2).size == 3)
     intercept[Exception] {
       Seq(1L).toDF("v")
         .agg(call_function("graft_caplist", col("v"), lit(0))).collect()
     }
   }
 
-  test("fused long-id candidates == legacy generic-id self-join, pairs and scores") {
+  test("long, int and string ids give identical unordered pairs and scores") {
     import spark.implicits._
-    // boilerplate header shared by MOST docs pushes its shingles over
-    // the cap; each near-dup pair shares rare doc-specific shingles
+    // boilerplate shared by MOST docs pushes its shingles over the cap;
+    // each near-dup pair shares rare doc-specific shingles. 108 and 1010
+    // order one way as numbers and the other way as strings.
     val boiler = "the quick brown fox jumps over the lazy dog again"
     val docs = ((1 to 12).map { i =>
       (i.toLong, s"$boiler unique passage number $i alpha beta gamma delta run $i")
     } ++ Seq(
       (21L, "completely distinct text body one two three four five six seven"),
-      (22L, "completely distinct text body one two three four five six eight")
+      (22L, "completely distinct text body one two three four five six eight"),
+      (108L, "another pair of rows sharing nearly all their words here x"),
+      (1010L, "another pair of rows sharing nearly all their words here y")
     )).toDF("doc_id", "text")
     val cap = 3
-    def pairSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map { r =>
-        val a = r.get(0).toString.toLong
-        val b = r.get(1).toString.toLong
-        (Set(a, b), r.getAs[Int]("inter"), r.getAs[Int]("union_sz"))
-      }.toSet
-    val fused = pairSet(Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-      n = 3, num = 1, den = 10, maxDocFreq = Some(cap)))
-    // string ids route through the legacy self-join fallback; pair
-    // orientation may differ (string vs long ordering), so compare
-    // unordered pairs
-    val legacy = pairSet(Dedup.ngramJaccardPairs(
-      docs.select(col("doc_id").cast("string").as("doc_id"), col("text")),
-      "doc_id", "text", n = 3, num = 1, den = 10, maxDocFreq = Some(cap)))
-    assert(fused.nonEmpty, "fixture should produce capped candidates")
-    assert(fused == legacy)
-    spark.catalog.clearCache()
+    // each row with its pair's two ids as an unordered set of strings:
+    // orientation follows the id type's ordering
+    def unordered(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (Set(r.get(0).toString, r.get(1).toString),
+        r.toSeq.drop(2))).toSet
+    def run(idType: String) = {
+      def ids(keep: org.apache.spark.sql.Column) = docs.filter(keep)
+        .select(col("doc_id").cast(idType).as("doc_id"), col("text"))
+      val all = ids(lit(true))
+      val odd = col("doc_id") % 2 === 1
+      val out = Seq(
+        Dedup.ngramJaccardPairs(all, "doc_id", "text",
+          n = 3, num = 1, den = 10, maxDocFreq = Some(cap)),
+        Dedup.containmentPairs(all, "doc_id", "text",
+          n = 3, num = 1, den = 10, maxDocFreq = cap),
+        Dedup.incrementalNearDupPairs(ids(odd), ids(!odd), "doc_id", "text",
+          n = 3, num = 1, den = 10, maxDocFreq = cap)).map(unordered)
+      spark.catalog.clearCache()
+      out
+    }
+    val long = run("bigint")
+    long.foreach(ps => assert(ps.nonEmpty, "fixture should produce capped candidates"))
+    // new×new (108, 1010) and new×old (22 probes 21) both form
+    assert(long(2).map(_._2.last) == Set(true, false), long(2))
+    assert(run("int") == long)
+    assert(run("string") == long)
   }
 }

@@ -250,6 +250,29 @@ class DedupIndexSpec extends AnyFunSuite {
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
+  test("a string-id store's incrementalPairs == in-memory pairs") {
+    def strIds(df: DataFrame) =
+      df.select(col("doc_id").cast("string").as("doc_id"), col("text"))
+    val old0 = strIds(docs.filter(col("doc_id") % 5 =!= 0))
+    val batch = localize(strIds(docs.filter(col("doc_id") % 5 === 0)))
+    try {
+      ShingleIndex.build(old0, "doc_id", "text", "graft_sid")
+      val viaIndex = ShingleIndex.incrementalPairs(
+        batch, "doc_id", "text", "graft_sid")
+      val inMemory = Dedup.incrementalNearDupPairs(
+        old0, batch, "doc_id", "text")
+      assert(viaIndex.schema("new_id").dataType ==
+        org.apache.spark.sql.types.StringType)
+      assert(!viaIndex.isEmpty, "fixture should contain planted near-dups")
+      assert(viaIndex.exceptAll(inMemory).isEmpty)
+      assert(inMemory.exceptAll(viaIndex).isEmpty)
+    } finally {
+      spark.catalog.clearCache()
+      Seq("graft_sid_idx", "graft_sid_sh", "graft_sid_meta")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
   test("ScaleLadder corpus: every doc 10k+9 is a planted near-dup of doc 10k+8") {
     val corpus = graft.tools.ScaleLadder.docs(spark, 20)
     assert(corpus.count() == 20)

@@ -337,11 +337,14 @@ class EngineSpec extends AnyFunSuite {
       "columns" -> (() => e.columns.filter(col("is_pii")).select("column_name").collect()),
       "mde" -> (() => e.masterDataEntityCandidates.limit(10).collect()),
       "whatif" -> (() => e.whatIfDropTable("sales", "customer").status.collect()))
-    // count a second cycle: a session's first MDE ranking runs one more job
-    ops.foreach(_._2())
-    val got = ops.map { case (op, run) =>
+    // count the first cycle and a second: MDE's inbound-FK join is a
+    // shuffle-hash join, so a session's first ranking runs no extra job
+    // (a sort-merge join left AQE to race the two sides to a broadcast)
+    def cycle() = ops.map { case (op, run) =>
       op -> org.apache.spark.JobTally.of(spark.sparkContext)(run()).jobs
     }.toMap
+    val (first, second) = (cycle(), cycle())
+    val got = first.map { case (op, n) => op -> math.max(n, second(op)) }
     // measured on Spark 4.1.2 with AQE, which runs one job per query
     // stage and per broadcast. Reads plan over the SMO leaf, whose one
     // partition lets their per-table aggregates skip the shuffle: an

@@ -1381,6 +1381,22 @@ class PipelineSpec extends AnyFunSuite {
       Set("zenith lamps"))
   }
 
+  test("fuzzy name pairs: a block of exactly maxBlock names pairs fully, one more drops it") {
+    import spark.implicits._
+    val k = 4
+    // "yy" blocks k names, "zz" k + 1; every other token is one name's
+    // own, and names within a block sit one edit apart
+    val yy = ('a' until ('a' + k).toChar).map(c => s"yy q$c")
+    val zz = ('a' to ('a' + k).toChar).map(c => s"zz r$c")
+    val d = (yy ++ zz).zipWithIndex.map { case (n, i) => (i.toLong, n) }
+      .toDF("id", "name")
+    val got = graft.operators.Resolve
+      .fuzzyNamePairs(d, "id", "name", maxDist = 1, maxBlock = k.toLong)
+      .collect().map(r => (r.getAs[String]("name_a"), r.getAs[String]("name_b")))
+    assert(got.length == k * (k - 1) / 2, got.mkString(", "))
+    assert(got.toSet == yy.combinations(2).map(p => (p(0), p(1))).toSet)
+  }
+
   test("entity ids: transitive closure through a chain, singletons self, dups co-assign") {
     import spark.implicits._
     // chain: lampa ~ lampb ~ lampc (a↔c is dist 2, still an edge, but

@@ -13,6 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanSpec extends AnyFunSuite {
   private lazy val spark = Sessions.local(8)
   private val sf = "/root/testdata/sf0.001"
+  // jobs of the df-capped ngramJaccardPairs stage that perfbench's
+  // curate op runs, collected on sf0.001
+  private val CuratePairJobs = 9
 
   private def fmt(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.explainString(
@@ -180,6 +183,44 @@ class PlanSpec extends AnyFunSuite {
     val plain = e.select(
       aggregate(col("v"), lit(0.0d), (acc, x) => acc + x).as("s"))
     assert(!plain.queryExecution.optimizedPlan.toString.contains("graft_dot"))
+  }
+
+  test("fuzzy name pairs: blocking is one caplist aggregate, no block self-join or cache") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import spark.implicits._
+    val d = Seq((1L, "acme widget corp"), (2L, "acme widgets corp"),
+      (3L, "zenith lamps")).toDF("id", "name")
+    val p = graft.operators.Resolve
+      .fuzzyNamePairs(d, "id", "name", maxDist = 2).queryExecution.optimizedPlan
+    val caplists = p.collect { case a: Aggregate
+      if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[graft.expressions.CapList])) => a }
+    assert(caplists.size == 1, p.treeString)
+    val blkJoins = p.collect { case j: Join
+      if j.condition.exists(_.references.exists(_.name == "blk")) => j }
+    assert(blkJoins.isEmpty, p.treeString)
+    assert(p.collect { case r: InMemoryRelation => r }.isEmpty, p.treeString)
+  }
+
+  test("curate pair-stage job budget: string ids run no more jobs than long ids") {
+    import graft.operators.Dedup
+    val docs = Tables.df(spark, sf, "documents")
+    def jobs(idType: String) = {
+      val d = docs.select(col("doc_id").cast(idType).as("doc_id"), col("text"))
+      val n = org.apache.spark.JobTally.of(spark.sparkContext)(
+        Dedup.ngramJaccardPairs(d, "doc_id", "text", maxDocFreq = Some(20))
+          .collect()).jobs
+      spark.catalog.clearCache()
+      n
+    }
+    // warm once, so neither side pays a first-run job
+    jobs("bigint")
+    val long = jobs("bigint")
+    val str = jobs("string")
+    // measured on Spark 4.1.2 with AQE (one job per query stage and per
+    // broadcast)
+    assert(long <= CuratePairJobs, s"long ids ran $long jobs, budget $CuratePairJobs")
+    assert(str <= long, s"string ids ran $str jobs, long ids $long")
   }
 
   test("salted join: same rows as plain join, salt splits the hot key") {
