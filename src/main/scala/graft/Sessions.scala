@@ -20,10 +20,31 @@ import org.apache.spark.sql.SparkSession
   * 2× headroom over that. The conf is static: it takes effect only if it
   * is set before the JVM's first query, so a host that builds its own
   * SparkSession must set it there too.
+  *
+  * Memory pages: every Tungsten consumer (a broadcast
+  * `UnsafeHashedRelation`, a per-task `BytesToBytesMap`, hash aggregate or
+  * sorter) allocates its memory in pages of `spark.buffer.pageSize`, and
+  * its first page whole, however little it holds. Spark's default is the
+  * execution pool over (cores × 16), rounded up to a power of two and
+  * clamped to 1–64 MiB: 16 MiB at a 3 GB heap and 4 cores, 64 MiB at
+  * 8 GB. Each string-keyed broadcast hash relation over a catalog-sized
+  * frame (an SMO build join, an ignored-schema anti-join, what-if's
+  * dropped-set join) then pinned one such page on the driver until the
+  * ContextCleaner ran: 102 MB of `long[]` pages in the catalog session's
+  * 201 MB live heap. [[PageSizeBytes]] is Spark's own floor, 1 MiB; a
+  * consumer that needs more takes more pages, and a record larger than a
+  * page gets a page of its own size. The bound it implies: a task's page
+  * table holds 8,192 pages, so one task can address 8 GiB, above any
+  * task's share of a local session's execution memory. This conf is
+  * static too: it is read when the SparkContext starts, so a host that
+  * builds its own SparkSession must set it there.
   */
 object Sessions {
   /** `spark.sql.codegen.cache.maxEntries`; see the object doc. */
   val CodegenCacheEntries = 1000
+
+  /** `spark.buffer.pageSize`, in bytes; see the object doc. */
+  val PageSizeBytes: Long = 1L << 20
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
@@ -34,6 +55,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.buffer.pageSize", PageSizeBytes.toString)
       // a whole-stage class named after its stage id is new code whenever
       // the id differs, and AQE numbers a query's stages in the order it
       // plans them, which varies with the order sibling stages finish

@@ -255,19 +255,24 @@ object Import {
     }
   }
 
-  /** Evaluate rules in ONE aggregation pass: (rule, column, violations). */
+  /** Evaluate rules in ONE aggregation pass: (rule, column, violations).
+    * No rules is no check: an empty frame, and no job. */
   def validate(staging: DataFrame, rules: Seq[Rule]): DataFrame = {
-    require(rules.nonEmpty, "no rules to validate")
-    val counts = staging.agg(
-      count(lit(1)).as("_total"),
-      rules.map(r => count(when(r.violation, 1)).as(s"${r.name}:${r.column}")): _*)
     val spark = staging.sparkSession
     import spark.implicits._
-    val row = counts.collect()(0)
-    rules.map { r =>
-      (r.name, r.column, row.getAs[Long](s"${r.name}:${r.column}"),
-        row.getAs[Long]("_total"))
-    }.toDF("rule", "column", "violations", "total_rows")
+    val counts =
+      if (rules.isEmpty) Nil
+      else {
+        val row = staging.agg(
+          count(lit(1)).as("_total"),
+          rules.map(r => count(when(r.violation, 1)).as(s"${r.name}:${r.column}")): _*)
+          .collect()(0)
+        rules.map { r =>
+          (r.name, r.column, row.getAs[Long](s"${r.name}:${r.column}"),
+            row.getAs[Long]("_total"))
+        }
+      }
+    counts.toDF("rule", "column", "violations", "total_rows")
   }
 
   /** FK pre-validation: staging values with no match in the reference
@@ -293,7 +298,9 @@ object Import {
     * IMPORTED (or *_FAILED), optimistic-version checked at every step.
     * The sink is injected (JDBC writer in production, parquet in tests).
     * Returns the final migration row; `summary` carries the validation
-    * counts as JSON. */
+    * counts as JSON (`[]` when the target yields no rules). A failure
+    * after LOADED — in `rules`, validation or the sink — lands
+    * IMPORT_FAILED with an `{"error":…}` summary and is rethrown. */
   def runImport(
       store: MigrationStore,
       source: MigrationSource,
@@ -317,33 +324,40 @@ object Import {
       }
     val loaded = store.transition(m.id, MigrationState.Loaded, m.version)
     val mapped = applyMapping(staged, mappings)
-    val checks = validate(mapped, rules(mapped)).collect()
-    val bad = checks.filter(_.getAs[Long]("violations") > 0)
+    // IMPORT_FAILED is reached from LOADED only through IMPORTING
+    def failed(importing: DataMigration, summary: String): DataMigration =
+      store.transition(importing.id, MigrationState.ImportFailed,
+        importing.version, Some(summary))
+    def startImport(): DataMigration =
+      store.transition(loaded.id, MigrationState.Importing, loaded.version)
+    val checks =
+      try validate(mapped, rules(mapped)).collect()
+      catch {
+        case e: Exception =>
+          failed(startImport(), errorJson(e))
+          throw e
+      }
     val summaryJson = checks.map(r =>
         s"""{"rule":${jsonStr(r.getString(0))},"column":${jsonStr(r.getString(1))},""" +
           s""""violations":${r.getLong(2)}}""")
       .mkString("[", ",", "]")
-    if (bad.nonEmpty) {
-      store.transition(loaded.id, MigrationState.Importing, loaded.version)
-      store.transition(loaded.id, MigrationState.ImportFailed, loaded.version + 1,
-        Some(summaryJson))
-      store.get(m.id).get
-    } else {
-      val importing =
-        store.transition(loaded.id, MigrationState.Importing, loaded.version)
+    val importing = startImport()
+    if (checks.exists(_.getAs[Long]("violations") > 0))
+      failed(importing, summaryJson)
+    else
       try {
         sink(mapped)
         store.transition(importing.id, MigrationState.Imported,
           importing.version, Some(summaryJson))
       } catch {
         case e: Exception =>
-          store.transition(importing.id, MigrationState.ImportFailed,
-            importing.version,
-            Some(s"""{"error":${jsonStr(e.getMessage)}}"""))
+          failed(importing, errorJson(e))
           throw e
       }
-    }
   }
+
+  private def errorJson(e: Exception): String =
+    s"""{"error":${jsonStr(e.getMessage)}}"""
 
   private def jsonStr(s: String): String =
     "\"" + Option(s).getOrElse("").flatMap {

@@ -356,6 +356,30 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  test("a catalog-sized broadcast hash relation holds one 1 MiB memory page") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    // string keys build an UnsafeHashedRelation, whose map takes its
+    // first memory page whole however few rows it holds: at Spark's
+    // default page size (up to 64 MiB) each such broadcast pinned that
+    // much driver heap until the ContextCleaner ran
+    val joined = snap.attributes.join(broadcast(snap.relations),
+      Seq("schema_name", "table_name"))
+    assert(joined.collect().length == attributes.length)
+    object Plans extends AdaptiveSparkPlanHelper
+    val exchanges = Plans.collect(joined.queryExecution.executedPlan) {
+      case b: BroadcastExchangeExec => b
+    }
+    assert(exchanges.length == 1, joined.queryExecution.executedPlan)
+    // the exchange's data size is its HashedRelation's estimatedSize: the
+    // map's pages plus its pointer array (1 KiB here), so one 1 MiB page
+    // reads just over 1 MiB
+    val relationBytes = exchanges.head.metrics("dataSize").value
+    val MiB = 1L << 20
+    assert(relationBytes < 2 * MiB, s"$relationBytes bytes")
+    assert(org.apache.spark.SparkEnv.get.memoryManager.pageSizeBytes <= MiB)
+  }
+
   test("a repeated engine cycle reuses its generated code") {
     import org.apache.spark.metrics.source.CodegenMetrics
     val e = new Engine(spark, snap)

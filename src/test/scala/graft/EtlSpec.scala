@@ -2,7 +2,7 @@ package graft
 
 import graft.etl._
 import graft.mapping.BidiRegistry
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -243,6 +243,50 @@ class EtlSpec extends AnyFunSuite {
     assert(result.state == "IMPORT_FAILED")
     assert(!sinkRan)
     assert(result.summary.get.contains("\"violations\":1"))
+  }
+
+  test("a target with no rules validates nothing and lands IMPORTED with summary []") {
+    import spark.implicits._
+    val store = new MigrationStore
+    var sunk = 0
+    val result = Import.runImport(
+      store, MigrationSource.Csv, "free_text",
+      load = () => Seq("a", "b").toDF("note"),
+      mappings = Seq(Import.ColumnMapping("note", "note",
+        BidiRegistry.withDefaults("identity"))),
+      rules = _ => Nil, // e.g. only nullable text columns
+      sink = df => sunk = df.collect().length)
+    assert(result.state == "IMPORTED" && result.summary.contains("[]"))
+    assert(sunk == 2)
+  }
+
+  test("a throwing rules callback or validation lands IMPORT_FAILED with the error and rethrows") {
+    import spark.implicits._
+    val failures = Seq[(String, DataFrame => Seq[Import.Rule])](
+      "no smo for target" -> (_ => throw new IllegalStateException("no smo for target")),
+      "absent_col" -> (_ => Seq(Import.Rule("not_null", "absent_col",
+        col("absent_col").isNull))))
+    failures.foreach { case (message, rules) =>
+      val store = new MigrationStore
+      var sinkRan = false
+      val e = intercept[Exception] {
+        Import.runImport(store, MigrationSource.Csv, "people",
+          load = () => Seq("a").toDF("name"),
+          mappings = Seq(Import.ColumnMapping("name", "name",
+            BidiRegistry.withDefaults("identity"))),
+          rules = rules,
+          sink = _ => sinkRan = true)
+      }
+      assert(e.getMessage.contains(message))
+      assert(store.list.size == 1)
+      val m = store.list.head
+      // LOADED -> IMPORTING -> IMPORT_FAILED, as a failed sink goes
+      assert(m.state == "IMPORT_FAILED" && m.version == 3 &&
+        m.importStartedAt.isDefined, m)
+      assert(m.summary.exists(_.startsWith("""{"error":""")), m)
+      assert(m.summary.exists(_.contains(message)), m)
+      assert(!sinkRan)
+    }
   }
 
   test("xlsx staging: real workbook -> stage -> map -> validate -> sink lands IMPORTED") {
