@@ -125,12 +125,16 @@ final class Engine private (
   /** SQL text of defined MDEs — the persistable form (EngineState). */
   def mdeSqlDefs: Seq[(String, String)] = mdeDefs.toSeq
 
+  /** The status rollup. The tenant and MDE JSON is read when this frame
+    * is built, not when it runs (Status.status): a host fragment that
+    * reads a table runs its collect here. */
   def status: DataFrame = Status.status(columns, listTenants, listMdes)
 
   def verifyInstallation: DataFrame = Status.verifyInstallation(listTenants, listMdes)
 
+  /** Reads the ignored schemas when the frame is built (Scoring). */
   def masterDataEntityCandidates: DataFrame =
-    Scoring.masterDataEntityCandidates(snapshot, ignoredSchemas)
+    Scoring.masterDataEntityCandidates(snapshot, fragments.df("ignored_schemas"))
 
   // ---- i18n ----------------------------------------------------------------
 
@@ -157,13 +161,15 @@ final class Engine private (
     * The dependency closure is computed driver-side: edges are
     * catalog-scale (one per view×base-relation, ≤10^5 for thousand-table
     * databases), not data-scale, so a collect here is the same class of
-    * operation as the reference walking pg_depend inside Postgres.
+    * operation as the reference walking pg_depend inside Postgres. The
+    * dropped relations and the dropped FKs (a second collect) enter the
+    * simulated plans as literals, not as joins.
     *
     * Snapshot semantics: the simulated engine's SMO is derived from this
     * engine's SMO as of the call (its rows minus the dropped relations',
     * its constraint arrays minus the dropped FKs), not rebuilt, and not
-    * materialized: it adds no job and no cache entry. It reads this
-    * engine's SMO leaf and keeps it alive by reference, so if this engine
+    * materialized: it adds no cache entry. It reads this engine's SMO
+    * leaf and keeps it alive by reference, so if this engine
     * refreshes later, the simulation still answers for the old snapshot
     * from the old leaf. Its `currentSnapshot` is the pruned snapshot,
     * which scoring reads and an explicit `refresh()` rebuilds from. The
@@ -171,13 +177,10 @@ final class Engine private (
     * schemas, MDE fragments), MDE definitions, concepts, bidi functions
     * and i18n document, so status and scoring see the host's hooks. */
   def whatIfDropTable(schemaName: String, tableName: String): Engine = {
-    import scala.jdk.CollectionConverters._
-    val edges = snapshot.dependencies
-      .select(col("dependent_schema"), col("dependent_table"),
-        col("referenced_schema"), col("referenced_table"))
+    val byRef = snapshot.dependencies
+      .select("referenced_schema", "referenced_table", "dependent_schema", "dependent_table")
       .collect()
-      .map(r => ((r.getString(2), r.getString(3)), (r.getString(0), r.getString(1))))
-    val byRef = edges.groupBy(_._1).map { case (k, v) => (k, v.map(_._2)) }
+      .groupMap(r => (r.getString(0), r.getString(1)))(r => (r.getString(2), r.getString(3)))
     val dropped = mutable.Set((schemaName, tableName))
     val frontier = mutable.Queue((schemaName, tableName))
     while (frontier.nonEmpty) {
@@ -186,29 +189,22 @@ final class Engine private (
         if (dropped.add(dep)) frontier.enqueue(dep)
       }
     }
-    val droppedDf = spark.createDataFrame(
-      dropped.toSeq.map { case (s, t) => org.apache.spark.sql.Row(s, t) }.asJava,
-      StructType(Seq(StructField("schema_name", StringType, nullable = false),
-        StructField("table_name", StringType, nullable = false))))
-    def not(df: DataFrame) =
-      df.join(broadcast(droppedDf), Seq("schema_name", "table_name"), "left_anti")
+    // one literal membership test: its generated code is the same
+    // whatever the number of dropped relations
+    val droppedLit = typedLit(dropped.toSeq)
+    def live(s: String, t: String) =
+      !array_contains(droppedLit, struct(col(s).as("_1"), col(t).as("_2")))
+    def not(df: DataFrame) = df.filter(live("schema_name", "table_name"))
     val inboundFk = coalesce(col("references_schema"), lit("")) === schemaName &&
       coalesce(col("references_table"), lit("")) === tableName
-    val prunedDeps = snapshot.dependencies
-      .join(broadcast(droppedDf),
-        col("dependent_schema") === col("schema_name")
-          && col("dependent_table") === col("table_name"), "left_anti")
-    // DROP ... CASCADE also revokes grants on the dropped relations
-    val prunedGrants = snapshot.grants
-      .join(broadcast(droppedDf),
-        snapshot.grants("table_schema") === droppedDf("schema_name")
-          && snapshot.grants("table_name") === droppedDf("table_name"),
-        "left_anti")
     val sim = CatalogSnapshot(
       not(snapshot.relations), not(snapshot.attributes),
       not(snapshot.constraints).filter(!inboundFk), not(snapshot.indexes),
-      snapshot.schemaPrivs, prunedDeps, snapshot.roles, snapshot.roleMembers,
-      prunedGrants)
+      snapshot.schemaPrivs,
+      snapshot.dependencies.filter(live("dependent_schema", "dependent_table")),
+      snapshot.roles, snapshot.roleMembers,
+      // DROP ... CASCADE also revokes grants on the dropped relations
+      snapshot.grants.filter(live("table_schema", "table_name")))
     val simSmo = SmoBuilder.withoutConstraints(not(smo),
       snapshot.constraints.filter(inboundFk))
     val e = new Engine(spark, sim, indexedSpaceQuirk, fragments, mdeDefs,

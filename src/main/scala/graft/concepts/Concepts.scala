@@ -3,6 +3,7 @@ package graft.concepts
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import java.util.regex.Pattern
 import scala.collection.immutable.VectorMap
 
 /** A named boolean predicate over an SMO row — the reference's dynamic
@@ -23,11 +24,22 @@ final case class ConceptDef(name: String, predicate: Column)
   * (sql/V000012__more_concepts.sql:1-31). Redefinition replaces in place
   * (the reference's `create or replace function`), and is idempotent
   * (core_test.clj:163-171).
+  *
+  * The definition order is cut into dependency layers once per registry,
+  * that is at define: a concept starts a new layer only if it references
+  * the is_* column of a concept in the current one. Applying the registry
+  * is one projection per layer, so the builtins are one projection.
   */
 final class ConceptRegistry private (
     private val defs: VectorMap[String, Column],
     /** SQL text of SQL-defined concepts — the persistable subset. */
     val sqlDefs: Map[String, String]) {
+
+  private val layers: Vector[Vector[(String, Column)]] =
+    defs.foldLeft(Vector(Vector.empty[(String, Column)])) { case (ls, d @ (_, pred)) =>
+      if (ls.last.exists { case (n, _) => ConceptRegistry.reads(pred, n) }) ls :+ Vector(d)
+      else ls.init :+ (ls.last :+ d)
+    }
 
   def define(name: String, predicate: Column): ConceptRegistry =
     new ConceptRegistry(defs.updated(name, predicate), sqlDefs - name)
@@ -47,20 +59,27 @@ final class ConceptRegistry private (
   def contains(name: String): Boolean = defs.contains(name)
 
   /** Fold `is_<concept>` columns onto the SMO (redefine_smo_view_with_
-    * concepts): evaluate in definition order so a predicate can reference
-    * any earlier concept's is_* column, then project the is_* columns
-    * sorted by name for view-shape parity with the reference. */
+    * concepts): one projection per layer adds its is_* columns, and the
+    * last layer's also orders them by name for view-shape parity with
+    * the reference. */
   def applyAll(smo: DataFrame): DataFrame = {
-    val folded = defs.foldLeft(smo) { case (df, (name, pred)) =>
-      df.withColumn(s"is_$name", pred)
+    val inner = layers.init.foldLeft(smo) { (df, layer) =>
+      df.select(col("*") +: layer.map { case (n, p) => p.as(s"is_$n") }: _*)
     }
-    folded.select((smo.columns.map(col) ++
-      defs.keys.toSeq.sorted.map(n => col(s"is_$n"))): _*)
+    val last = layers.last.toMap
+    inner.select((smo.columns.toSeq.map(col) ++ names.map(n =>
+      last.get(n).fold(col(s"is_$n"))(_.as(s"is_$n")))): _*)
   }
 }
 
 object ConceptRegistry {
   def empty: ConceptRegistry = new ConceptRegistry(VectorMap.empty, Map.empty)
+
+  /** Whether a predicate's SQL text names the concept's is_* column. A
+    * false hit, in a string literal say, only costs one more projection. */
+  private def reads(p: Column, concept: String): Boolean =
+    s"(?i)(?<![\\w$$])${Pattern.quote(s"is_$concept")}(?![\\w$$])".r
+      .findFirstIn(p.toString).nonEmpty
 
   /** PG semantics: jsonb_array_elements(NULL) yields no rows, so EXISTS
     * over a NULL packed array is FALSE — Spark's exists() returns NULL
@@ -123,15 +142,9 @@ object ConceptRegistry {
       x => x.getField("type") === "f" &&
         like(lower(x.getField("definition")),
           concat(lit("% references "), lower(col("table_name")), lit("(%"))))
-    val externalReference = !foreignKey && (
-      lower(col("column_name")).like("%_id") ||
-      lower(col("column_name")).like("%url%") ||
-      lower(col("column_name")).like("%uri%") ||
-      lower(col("column_name")).like("%_ref%") ||
-      lower(col("column_name")).like("%_code%") ||
-      lower(col("column_name")).like("%uuid%") ||
-      lower(col("column_name")).like("%guid%") ||
-      lower(col("column_name")).like("%external_%"))
+    val externalReference = !foreignKey && Seq("%_id", "%url%", "%uri%",
+      "%_ref%", "%_code%", "%uuid%", "%guid%", "%external_%")
+      .map(lower(col("column_name")).like).reduce(_ || _)
     val ignoredTable = schemaMigrationTable
 
     empty

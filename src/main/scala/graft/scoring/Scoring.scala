@@ -1,7 +1,8 @@
 package graft.scoring
 
 import graft.catalog.CatalogSnapshot
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** master_data_entity_candidates — heuristic ranking of tables by
@@ -27,10 +28,16 @@ import org.apache.spark.sql.functions._
   */
 object Scoring {
 
+  /** @param ignored ignored schema names in its first column, read when
+    *   this frame is built, as are the schemas without usage in
+    *   `snap.schemaPrivs`, which are ignored too (SmoBuilder.ignoredSchemas):
+    *   both enter the plan as one literal list. */
   def masterDataEntityCandidates(
       snap: CatalogSnapshot, ignored: DataFrame): DataFrame = {
-    val tables = snap.relations.filter(col("relkind") === "r")
-      .join(broadcast(ignored.toDF("schema_name")), Seq("schema_name"), "left_anti")
+    val noUsage = snap.schemaPrivs.filter(!col("has_usage")).select(col("schema_name"))
+    val skip = (noUsage.collect() ++ ignored.collect()).flatMap(r => Option(r.getString(0)))
+    val tables = snap.relations.filter(col("relkind") === "r" &&
+      !array_contains(typedLit(skip.distinct.toSeq), col("schema_name")))
 
     // inbound-FK counts: group the 'f' constraints by their referenced
     // table, then left-join — equivalent to the reference's
@@ -41,26 +48,28 @@ object Scoring {
         col("references_table").as("table_name"))
       .agg(count(lit(1)).as("fk_in"))
 
-    // shuffle-hash hint: a planned sort-merge join left AQE to switch to
-    // a broadcast at run time, and a session's first, cold ranking lost
-    // that race and ran one extra job. A broadcast hint would fix the job
-    // count too, but each broadcast hashed relation holds a memory page
-    // on the heap until the context cleaner frees it.
+    // broadcast hint: a planned sort-merge join left AQE to switch to a
+    // broadcast at run time, and a session's first, cold ranking lost
+    // that race and ran one extra job. The hint fixes the plan; with
+    // 1 MiB memory pages (Sessions.PageSizeBytes) the catalog-sized hash
+    // relation holds one small page until the context cleaner frees it.
+    // The extremes over every table are a window over one partition.
+    val fkIn = coalesce(col("fk_in"), lit(0L))
+    val all = Window.partitionBy()
     val tablestats = tables
-      .join(inbound.hint("shuffle_hash"), Seq("schema_name", "table_name"), "left")
+      .join(broadcast(inbound), Seq("schema_name", "table_name"), "left")
       .select(col("schema_name"), col("table_name"), col("approx_rows"),
-        coalesce(col("fk_in"), lit(0L)).as("foreign_key_count"))
-
-    val minmax = tablestats.agg(
-      min(col("approx_rows")).as("min_rows"), max(col("approx_rows")).as("max_rows"),
-      min(col("foreign_key_count")).as("min_fk"), max(col("foreign_key_count")).as("max_fk"))
+        fkIn.as("foreign_key_count"),
+        min(col("approx_rows")).over(all).as("min_rows"),
+        max(col("approx_rows")).over(all).as("max_rows"),
+        min(fkIn).over(all).as("min_fk"), max(fkIn).over(all).as("max_fk"))
 
     val rowsTerm = (col("max_rows") - col("approx_rows")).cast("float") /
       nullif((col("max_rows") - col("min_rows")), lit(0L)).cast("float")
     val fkTerm = (col("foreign_key_count") - col("min_fk")).cast("float") /
       nullif((col("max_fk") - col("min_fk")), lit(0L)).cast("float")
 
-    tablestats.crossJoin(broadcast(minmax))
+    tablestats
       .select(col("schema_name"), col("table_name"), col("approx_rows"),
         col("foreign_key_count"),
         coalesce(

@@ -73,19 +73,19 @@ object SmoBuilder {
     * what `build` gives once those rows leave the snapshot, without
     * rebuilding. Rows are matched in the form `build` packs them, and an
     * array left empty becomes null, as `build` leaves it. `dropped` is
-    * grouped per table and broadcast, so it must be catalog-sized. */
+    * collected now and enters the plan as one literal, so it must be
+    * catalog-sized. */
   def withoutConstraints(smo: DataFrame, dropped: DataFrame): DataFrame = {
-    val gone = dropped
-      .groupBy(col("schema_name"), col("table_name"))
-      .agg(collect_set(packedConstraint(col("constraint_name"),
-        col("constraint_type"), col("definition"), col("sequence_name")))
-        .as("dropped_constraints"))
-    smo.join(broadcast(gone), Seq("schema_name", "table_name"), "left")
-      .withColumn("constraints",
-        when(col("dropped_constraints").isNull, col("constraints"))
-          .otherwise(packed(array_except(col("constraints"),
-            col("dropped_constraints")))))
-      .drop("dropped_constraints")
+    val gone = typedLit(dropped.select(col("schema_name"), col("table_name"),
+      col("constraint_name"), col("constraint_type"), col("definition"),
+      when(col("constraint_type") === "p", col("sequence_name"))).collect().toSeq
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3),
+        r.getString(4), r.getString(5))))
+    val kept = filter(col("constraints"), c => !array_contains(gone, struct(
+      col("schema_name").as("_1"), col("table_name").as("_2"),
+      c.getField("name").as("_3"), c.getField("type").as("_4"),
+      c.getField("definition").as("_5"), c.getField("sequence_name").as("_6"))))
+    smo.withColumn("constraints", when(size(kept) > 0, kept))
   }
 
   def build(snap: CatalogSnapshot, ignored: DataFrame): DataFrame = {

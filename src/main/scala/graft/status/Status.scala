@@ -30,7 +30,14 @@ object Status {
   /** Table-level counts: tables with any column flagged. */
   private val tableCounts = Seq("schema_migration_table", "ignored_table")
 
-  /** @param columns the SMO widened by ConceptRegistry.applyAll — must
+  /** Snapshot semantics: `tenants` and `mdes` are read when the status
+    * frame is built, not when it runs, as [[graft.operators.Corpus.bm25TopK]]
+    * reads its query terms: a frame kept and run again shows the
+    * registries as they were at the call. For the default fragments,
+    * local relations, that read runs no job; a host fragment that reads
+    * a table runs its collect here.
+    *
+    * @param columns the SMO widened by ConceptRegistry.applyAll — must
     *   contain every is_* referenced below.
     * @param tenants list_tenants() rows (tenant_id, tenant_short_name,
     *   tenant_display_name, tenant_locale, tenant_data)
@@ -48,19 +55,20 @@ object Status {
         tableCounts.map(c => countIf(col(s"is_$c")).as(s"${c}_count")) ++
         columnCounts.map(c => total(s"${c}_count")): _*)
 
-    // the two scalar subqueries (jsonb_agg ... order by) become 1-row DFs
-    // cross-joined in — registry data is tiny, both sides broadcast.
-    // array_sort on the struct orders by its first field, matching the
-    // reference's ORDER BY tenant_id / mde_name; empty → NULL like
-    // jsonb_agg over an empty set.
-    def packedJson(df: DataFrame, name: String): DataFrame = {
-      val arr = array_sort(collect_list(struct(df.columns.map(col): _*)))
-      df.agg(when(size(arr) > 0, to_json(arr)).as(name))
-    }
+    counts.select(col("*"), packedJson(tenants).as("tenants"),
+      packedJson(mdes).as("master_data_entities"))
+  }
 
-    counts
-      .crossJoin(broadcast(packedJson(tenants, "tenants")))
-      .crossJoin(broadcast(packedJson(mdes, "master_data_entities")))
+  /** The reference's scalar subquery `jsonb_agg(row ORDER BY …)` over a
+    * registry frame: its rows are collected now, on the driver, and enter
+    * the plan as one array literal. array_sort on the struct orders by
+    * its first field, matching the reference's ORDER BY tenant_id /
+    * mde_name; no rows give NULL, as jsonb_agg over an empty set. */
+  private def packedJson(df: DataFrame): Column = {
+    val fields = df.schema.fields.toSeq.zipWithIndex
+    val rows = df.collect().toSeq.map(r =>
+      struct(fields.map { case (f, i) => lit(r.get(i)).cast(f.dataType).as(f.name) }: _*))
+    if (rows.isEmpty) lit(null).cast("string") else to_json(array_sort(array(rows: _*)))
   }
 
   /** verify_installation() (sql/V000001__init.sql:388-393). */

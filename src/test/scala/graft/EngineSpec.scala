@@ -337,8 +337,8 @@ class EngineSpec extends AnyFunSuite {
       "columns" -> (() => e.columns.filter(col("is_pii")).select("column_name").collect()),
       "mde" -> (() => e.masterDataEntityCandidates.limit(10).collect()),
       "whatif" -> (() => e.whatIfDropTable("sales", "customer").status.collect()))
-    // count the first cycle and a second: MDE's inbound-FK join is a
-    // shuffle-hash join, so a session's first ranking runs no extra job
+    // count the first cycle and a second: MDE's inbound-FK join is
+    // hinted broadcast, so a session's first ranking runs no extra job
     // (a sort-merge join left AQE to race the two sides to a broadcast)
     def cycle() = ops.map { case (op, run) =>
       op -> org.apache.spark.JobTally.of(spark.sparkContext)(run()).jobs
@@ -349,11 +349,93 @@ class EngineSpec extends AnyFunSuite {
     // stage and per broadcast. Reads plan over the SMO leaf, whose one
     // partition lets their per-table aggregates skip the shuffle: an
     // exchange over the SMO, or a rebuild of it, goes over the budget.
-    val budget = Map("refresh" -> 10, "status" -> 3, "columns" -> 1,
-      "mde" -> 7, "whatif" -> 7)
+    // Registry rows, the ignored schemas and the what-if drop set enter
+    // the plans as literals: status is its one final job; MDE is the
+    // privileges collect, the inbound-FK shuffle and broadcast, the
+    // window's exchange and the final job; what-if is the dependency
+    // collect, the dropped-FK collect and the final job.
+    val budget = Map("refresh" -> 10, "status" -> 1, "columns" -> 1,
+      "mde" -> 5, "whatif" -> 3)
     budget.foreach { case (op, max) =>
       assert(got(op) <= max, s"$op ran ${got(op)} jobs, budget $max: $got")
     }
+  }
+
+  test("status tenant and MDE JSON is byte-identical to the aggregated form, parent and what-if") {
+    import org.apache.spark.sql.DataFrame
+    // the reference form: the registry frames aggregated in the plan
+    def packedJson(df: DataFrame): String = {
+      val arr = array_sort(collect_list(struct(df.columns.map(col): _*)))
+      df.agg(when(size(arr) > 0, to_json(arr))).collect().head.getString(0)
+    }
+    val e = new Engine(spark, snap)
+    def check(on: Engine): Unit = {
+      val s = on.status.collect().head
+      assert(s.getAs[String]("tenants") == packedJson(on.listTenants))
+      assert(s.getAs[String]("master_data_entities") == packedJson(on.listMdes))
+    }
+    check(e) // both registries empty: NULL, as jsonb_agg over no rows
+    e.fragments.update("list_tenants",
+      """SELECT col1 AS tenant_id, col2 AS tenant_short_name,
+        |       col3 AS tenant_display_name, col4 AS tenant_locale,
+        |       col5 AS tenant_data
+        |FROM VALUES
+        |  ('t2', 'zeta', 'Zeta GmbH', 'de-DE',
+        |   '{"motto": "say \\"hi\\"", "city": "Zürich 東京"}'),
+        |  ('t1', 'alpha', CAST(NULL AS STRING), 'en-US', NULL)""".stripMargin)
+    e.defineMasterDataEntity("suppliers", "SELECT 1 AS supplier_id")
+    e.defineMasterDataEntity("accounts", "SELECT 1 AS account_id")
+    val tenants = e.status.collect().head.getAs[String]("tenants")
+    val (t1, t2) = (tenants.indexOf("\"t1\""), tenants.indexOf("\"t2\""))
+    assert(0 <= t1 && t1 < t2, tenants) // ordered by tenant_id
+    assert(tenants.contains("Zürich 東京") && tenants.contains("\\\"motto\\\""), tenants)
+    check(e)
+    check(e.whatIfDropTable("sales", "customer"))
+  }
+
+  test("concepts apply as one projection per dependency layer, resolved at define") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.execution.LogicalRDD
+    val e = new Engine(spark, snap)
+    def layers(df: DataFrame): Int = {
+      val plan = df.queryExecution.analyzed
+      val projects = Iterator.iterate(plan)(_.children.head).takeWhile(_.isInstanceOf[Project])
+      val n = projects.length
+      assert(Iterator.iterate(plan)(_.children.head).drop(n).next()
+        .isInstanceOf[LogicalRDD], plan.treeString)
+      n
+    }
+    def hits(concept: String) = e.columns.filter(col(s"is_$concept"))
+      .select("column_name").collect().map(_.getString(0)).sorted.toSeq
+    assert(layers(e.columns) == 1) // the builtins are one projection
+    // reading an is_* of the current layer starts a new one
+    e.defineConcept("texty", "data_type = 'text'")
+    assert(layers(e.columns) == 1)
+    e.defineConcept("texty_key", "is_texty and is_natural_key")
+    assert(layers(e.columns) == 2)
+    assert(hits("texty_key") == Seq("sku"))
+    // a concept over SMO columns only joins the last layer
+    e.defineConcept("wide", "attnum > 4")
+    assert(layers(e.columns) == 2)
+    // a redefinition keeps its position, before the concept reading it
+    e.defineConcept("texty", "data_type = 'uuid'")
+    assert(layers(e.columns) == 2)
+    assert(hits("texty_key") == Nil && hits("texty") == Seq("rowguid"))
+    assert(e.columns.columns.filter(_.startsWith("is_")).toSeq ==
+      e.listConcepts.map(n => s"is_$n"))
+  }
+
+  test("MDE ranking reads the ignored schemas when called, with no refresh") {
+    val e = new Engine(spark, snap)
+    e.refresh()
+    def ranked = e.masterDataEntityCandidates.collect()
+      .map(_.getAs[String]("schema_name")).toSet
+    assert(ranked == Set("sales", "production", "public"))
+    e.fragments.update("ignored_schemas",
+      "SELECT col1 AS nspname FROM VALUES ('pg_catalog'), ('production')")
+    // schemas without usage stay ignored too
+    assert(ranked == Set("sales", "public"))
   }
 
   test("a catalog-sized broadcast hash relation holds one 1 MiB memory page") {

@@ -289,6 +289,35 @@ class EtlSpec extends AnyFunSuite {
     }
   }
 
+  test("import job budget: an IMPORTED and an IMPORT_FAILED run take a pinned number of jobs") {
+    val dir = Files.createTempDirectory("etl_jobs").toFile.getAbsolutePath
+    val reg = BidiRegistry.withDefaults
+    def importOnce(name: String, csv: String): (DataMigration, Int) = {
+      Files.writeString(java.nio.file.Path.of(s"$dir/$name.csv"), csv)
+      var m: DataMigration = null
+      val jobs = org.apache.spark.JobTally.of(spark.sparkContext) {
+        m = Import.runImport(new MigrationStore, MigrationSource.Csv, "people",
+          load = () => Import.stageCsv(spark, s"$dir/$name.csv",
+            Some("id BIGINT, raw_name STRING, code STRING")),
+          mappings = Seq(Import.ColumnMapping("id", "id", reg("identity")),
+            Import.ColumnMapping("raw_name", "name", reg("trim_str")),
+            Import.ColumnMapping("code", "code", reg("identity"))),
+          rules = _ => Seq(Import.Rule("not_null", "name", col("name").isNull),
+            Import.Rule("max_length_4", "code", length(col("code")) > 4)),
+          sink = _.write.mode("append").parquet(s"$dir/sink"))
+      }.jobs
+      (m, jobs)
+    }
+    val (good, goodJobs) = importOnce("good", "id,raw_name,code\n1, alice ,K1\n2,bob,K22\n")
+    val (bad, badJobs) = importOnce("bad", "id,raw_name,code\n1,,K1\n2,bob,K22222\n")
+    assert(good.state == "IMPORTED" && bad.state == "IMPORT_FAILED")
+    // measured on Spark 4.1.2 with AQE, one job per query stage: the
+    // staged load's count and validation's aggregate, and on the
+    // IMPORTED path the sink's write
+    assert(goodJobs <= 6, s"IMPORTED ran $goodJobs jobs")
+    assert(badJobs <= 5, s"IMPORT_FAILED ran $badJobs jobs")
+  }
+
   test("xlsx staging: real workbook -> stage -> map -> validate -> sink lands IMPORTED") {
     val dir = Files.createTempDirectory("xlsx").toFile.getAbsolutePath
     val path = s"$dir/people.xlsx"
