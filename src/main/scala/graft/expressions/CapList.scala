@@ -41,9 +41,12 @@ case class CapList(
 
   private val maxLen = cap + 1
 
+  // cap = Int.MaxValue would overflow maxLen to Int.MinValue, and a
+  // buffer that never appends drops every group silently
   override def checkInputDataTypes(): TypeCheckResult =
-    if (cap < 1)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName requires cap >= 1, got $cap")
+    if (cap < 1 || cap == Int.MaxValue)
+      TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires cap in [1, ${Int.MaxValue}), got $cap")
     else TypeCheckResult.TypeCheckSuccess
 
   override protected lazy val bufferElementType: DataType = child.dataType

@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.TextFns._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Deduplication operators for large-scale training-data pipelines.
   * Four families, in increasing sophistication:
@@ -20,13 +21,18 @@ import org.apache.spark.sql.functions._
   * reproducible by the DuckDB oracle — no JVM-seed drift between runs or
   * engines.
   *
-  * Operators persist() shared intermediates (self-join inputs); a
-  * long-lived session running many pipelines should
+  * Operators persist() intermediates that several stages read: the
+  * per-doc shingle frames and MinHash's `sigs` (band keys and the
+  * verify lookups); candidate generation itself persists nothing (one
+  * groupBy per blocking key, [[cappedPairs]]), and
+  * Similarity.ivfNearDupPairs persists nothing at all (its vectors'
+  * readers share one exchange). A long-lived session running many
+  * pipelines should
   * `spark.catalog.clearCache()` between them (Bench/Verify do).
   *
   * Scale notes (100 TB, 1000 executors):
   *   - every operator is a pure shuffle-on-key plan: exact dedup shuffles
-  *     on the 128-bit text hash, LSH shuffles on (band, key) — both
+  *     on the 128-bit text hash, LSH groups on (band, key) — both
   *     uniform unless the corpus is pathologically skewed;
   *   - the shingle inverted index drops ultra-frequent shingles above
   *     `maxDocFreq` (stopword-shingle skew guard) — the classic
@@ -178,83 +184,114 @@ object Dedup {
   private def cappedCandidates(sh: DataFrame, cap: Int): DataFrame =
     cappedPairs(sh.select(col("doc_id"),
       explode(transform(col("shingles"), s => hash60(s))).as("s")),
-      "s", "doc_id", cap)
+      col("s"), col("doc_id"), Some(cap))
 
-  /** The one capped candidate-pair stage, for ids of any type: group
-    * `keyed` by `key`, drop every group with more than `cap` rows, and
-    * pair the members of each kept group — (ida, idb) with ida < idb,
-    * distinct across groups. Serves the shingle df-cap
-    * ([[cappedCandidates]]) and Resolve's name blocking.
+  /** The one symmetric candidate-pair stage, for ids of any type: group
+    * `keyed` by the blocking `key`, collect each group's `member`s, and
+    * pair the members of every group of two or more — (ida, idb)
+    * ordered by id, distinct across groups. Serves the shingle df-cap
+    * ([[cappedCandidates]]), Resolve's name blocking, the MinHash bands
+    * ([[minhashLshPairs]]), the SimHash blocks ([[simhashPairs]]), the
+    * Hamming bands ([[hammingNearDupPairs]]) and the IVF cells
+    * ([[Similarity.ivfNearDupPairs]]); no caller self-joins its keys.
     *
-    * ONE groupBy with a saturating bounded collect (graft_caplist,
+    * A member is an id, or a payload struct whose FIRST field is the id
+    * (e.g. struct(id, hash)), so a small payload reaches verification
+    * without a join back. Pairs orient by least/greatest, which order a
+    * struct by its first field, and drop self-pairs on the id alone:
+    * two rows with the same id never pair, whatever their payloads.
+    *
+    * `cap = Some(c)`: a saturating bounded collect (graft_caplist,
     * O(cap) state per key — skew-safe on stop-shingles and stop-tokens
-    * by construction). size(ids) > cap is EXACTLY the `count > cap`
-    * drop (caplist counts rows, duplicates included); a kept group's
-    * array is its complete member list, so the expansion emits exactly
-    * the pairs a capped self-join would: {x, y} per position pair
-    * i < j, oriented by value, self-pairs (duplicate members, e.g.
-    * within-doc hash collisions) dropped by the strict <. The expansion
-    * chains two generators — posexplode, then each member's tail — so
-    * no generated row holds more than `cap` ids, even for a full block
-    * at a large cap. Two exchanges end to end: the groupBy and the
-    * distinct. */
-  private[operators] def cappedPairs(keyed: DataFrame, key: String,
-      id: String, cap: Int): DataFrame =
-    keyed.groupBy(col(key))
-      .agg(call_function("graft_caplist", col(id), lit(cap)).as("ids"))
-      .filter(size(col("ids")).between(2, cap))
-      .select(col("ids"), posexplode(col("ids")).as(Seq("pos", "x")))
-      .select(col("x"),
-        explode(slice(col("ids"), col("pos") + 2, size(col("ids")))).as("y"))
+    * by construction), and a group of more than `c` rows is dropped.
+    * size(ids) > cap is EXACTLY the `count > cap` drop (caplist counts
+    * rows, duplicates included); a kept group's array is its complete
+    * member list. `cap = None`: collect_list, nothing dropped. A block
+    * of m members is then one m-element row: MinHash, SimHash and
+    * Hamming keys are small by design, and an IVF cell holds about
+    * assignProbe · n / nCells ids, ≈ 3√n under the nCells ~ √n rule.
+    *
+    * The expansion ([[expandTails]]) emits {x, y} per position pair
+    * i < j — exactly the pairs a self-join on the key would. Two
+    * exchanges end to end: the groupBy and the distinct. */
+  private[operators] def cappedPairs(keyed: DataFrame, key: Column,
+      member: Column, cap: Option[Int]): DataFrame = {
+    val id: Column => Column = keyed.select(member).schema.head.dataType match {
+      case s: StructType => _.getField(s.head.name)
+      case _ => identity
+    }
+    val kept = keyed.groupBy(key)
+      .agg(collectMembers(member, cap).as("ids"))
+      .filter(size(col("ids")) >= 2 && underCap(size(col("ids")), cap))
+    expandTails(kept.select(col("ids")), col("ids"),
+        pos => slice(col("ids"), pos + 2, size(col("ids"))))
       .select(least(col("x"), col("y")).as("ida"),
         greatest(col("x"), col("y")).as("idb"))
-      .filter(col("ida") < col("idb"))
+      .filter(id(col("ida")) < id(col("idb")))
       .distinct()
+  }
+
+  /** A group's members: graft_caplist under a cap, else collect_list.
+    * Both skip NULLs. */
+  private def collectMembers(member: Column, cap: Option[Int]): Column =
+    cap.fold(collect_list(member))(c =>
+      call_function("graft_caplist", member, lit(c)))
+
+  private def underCap(n: Column, cap: Option[Int]): Column =
+    cap.fold(lit(true))(n <= _)
+
+  /** The expansion both blocking stages share: each element `x` of
+    * `members`, at 0-based position `pos`, pairs with every element `y`
+    * of `tail(pos)`. Two chained generators — posexplode, then the
+    * tail — so no generated row holds more than one block's members,
+    * even for an uncapped block. */
+  private def expandTails(lists: DataFrame, members: Column,
+      tail: Column => Column): DataFrame =
+    lists.select(col("*"), posexplode(members).as(Seq("pos", "x")))
+      .select(col("x"), explode(tail(col("pos"))).as("y"))
 
   /** Fused incremental candidate generation over a tagged inverted
     * index — the asymmetric (new-probe vs old-corpus) sibling of
-    * [[cappedPairs]], shared by [[incrementalNearDupPairs]] (in-memory)
-    * and [[ShingleIndex.incrementalPairs]] (store-served), so the two
-    * paths stay row-identical by construction.
+    * [[cappedPairs]], shared by [[incrementalNearDupPairs]] (in-memory),
+    * [[ShingleIndex.incrementalPairs]] (store-served) and
+    * [[IvfIndex.incrementalNearDups]] (cells), so the shingle paths
+    * stay row-identical by construction.
     *
-    * Input: (s, doc_id, is_new) posting rows, ids of any type. ONE
-    * groupBy(s) collects TWO saturating bounded lists per shingle — the
-    * batch postings and the old postings, each `graft_caplist`-capped
-    * at cap+1 (CapList skips the NULL the `when` produces for the other
-    * side, so one aggregation pass serves both) — then the combined
-    * df-cap is `size(new)+size(old) <= cap`: exact when neither list
-    * saturated, and a saturated list alone already exceeds the cap, so
-    * the drop set is EXACTLY the old (df_old + df_new) > cap rule.
-    * Pairs expand in-expression from kept lists: new×new once with the
-    * smaller id as new_id (least/greatest + the != filter, as in the
-    * symmetric path), new×old keeping the new doc as probe; old×old
-    * never forms. Replaces two df aggregates, an over-cap join, two
-    * persists, a semi-join, a union, and the candidate self-join with
-    * one exchange + the distinct.
+    * Input: (doc_id, is_new) rows with a blocking `key`, ids of any
+    * type. ONE groupBy(key) collects TWO lists per key — the batch
+    * members and the old ones (the collect skips the NULL the `when`
+    * produces for the other side, so one aggregation pass serves
+    * both). Under `cap = Some(c)` each list is a graft_caplist capped
+    * at c, and the combined df-cap is `size(new)+size(old) <= c`: exact
+    * when neither list saturated, and a saturated list alone already
+    * exceeds the cap, so the drop set is EXACTLY the (df_old + df_new)
+    * > cap rule. `cap = None` keeps every key, with the uncapped
+    * stage's one-row-per-block bound ([[cappedPairs]]).
+    *
+    * Pairs expand through [[expandTails]]: each new member against the
+    * new members after it (emitted once, smaller id as new_id) and
+    * every old member (the new doc stays the probe); old×old never
+    * forms.
     *
     * @return (new_id, match_id, match_is_new), distinct
     */
   private[operators] def incrementalCandidates(tagged: DataFrame,
-      cap: Int): DataFrame = {
-    val lists = tagged.groupBy(col("s")).agg(
-      call_function("graft_caplist",
-        when(col("is_new"), col("doc_id")), lit(cap)).as("new_ids"),
-      call_function("graft_caplist",
-        when(!col("is_new"), col("doc_id")), lit(cap)).as("old_ids"))
-    val nn = flatten(transform(col("new_ids"), (x, i) =>
-      transform(slice(col("new_ids"), i + lit(2), size(col("new_ids"))), y =>
-        struct(least(x, y).as("new_id"), greatest(x, y).as("match_id"),
-          lit(true).as("match_is_new")))))
-    val no = flatten(transform(col("new_ids"), x =>
-      transform(col("old_ids"), o =>
-        struct(x.as("new_id"), o.as("match_id"),
-          lit(false).as("match_is_new")))))
-    lists
+      key: Column, cap: Option[Int]): DataFrame = {
+    val lists = tagged.groupBy(key).agg(
+      collectMembers(when(col("is_new"), col("doc_id")), cap).as("new_ids"),
+      collectMembers(when(!col("is_new"), col("doc_id")), cap).as("old_ids"))
       .filter(size(col("new_ids")) >= 1 &&
-        size(col("new_ids")) + size(col("old_ids")) <= cap)
-      .select(explode(concat(nn, no)).as("p"))
-      .select(col("p.new_id").as("new_id"), col("p.match_id").as("match_id"),
-        col("p.match_is_new").as("match_is_new"))
+        underCap(size(col("new_ids")) + size(col("old_ids")), cap))
+    def tag(ids: Column, isNew: Boolean) =
+      transform(ids, m => struct(m.as("id"), lit(isNew).as("is_new")))
+    val (x, y, yNew) = (col("x"), col("y.id"), col("y.is_new"))
+    expandTails(lists.select(col("new_ids"), col("old_ids")), col("new_ids"),
+        pos => concat(
+          tag(slice(col("new_ids"), pos + 2, size(col("new_ids"))), true),
+          tag(col("old_ids"), false)))
+      .select(when(yNew, least(x, y)).otherwise(x).as("new_id"),
+        when(yNew, greatest(x, y)).otherwise(y).as("match_id"),
+        yNew.as("match_is_new"))
       .filter(col("new_id") =!= col("match_id"))
       .distinct()
   }
@@ -293,7 +330,7 @@ object Dedup {
     incrementalCandidates(
       sh.select(col("doc_id"), col("is_new"),
         explode(transform(col("shingles"), s => hash60(s))).as("s")),
-      maxDocFreq)
+      col("s"), Some(maxDocFreq))
       .join(sh.select(col("doc_id").as("new_id"), col("shingles").as("sha")),
         "new_id")
       .join(sh.select(col("doc_id").as("match_id"), col("shingles").as("shb")),
@@ -488,11 +525,12 @@ object Dedup {
 
   /** MinHash+LSH near-dup pairs, exact-verified.
     *
-    * Plan shape: signature (narrow) → explode band keys → shuffle on
-    * (band, key) self-join → distinct candidate pairs → join back to
-    * shingle arrays → exact Jaccard ≥ num/den in integer arithmetic.
-    * Only candidates ever pair up — at 100 TB the band join is the sole
-    * wide stage and its key space is uniform md5 output.
+    * Plan shape: signature (narrow) → explode band keys → the uncapped
+    * [[cappedPairs]] stage on the (band, key) struct (one groupBy, then
+    * the distinct) → join back to shingle arrays → exact Jaccard ≥
+    * num/den in integer arithmetic. Only candidates ever pair up — at
+    * 100 TB the band groupBy is the sole wide candidate stage and its
+    * key space is uniform md5 output.
     */
   def minhashLshPairs(
       docs: DataFrame, idCol: String, textCol: String,
@@ -501,23 +539,16 @@ object Dedup {
       norm: Column => Column = normText): DataFrame = {
     require(k % bands == 0, s"bands=$bands must divide k=$k")
     // persisted: sigs feeds the band keys AND the verify-stage shingle
-    // lookups; keys feeds both sides of the bucket self-join.
+    // lookups.
     val sigs = minhashSignatures(docs, idCol, textCol, n, k, norm).persist()
     // zero-shingle docs (NULL sig) drop HERE, above the persist
     // boundary: the predicate reads the cached sig column through the
     // InMemoryRelation, so unlike a filter below the cache it can never
     // be rewritten into a re-evaluation of the text pipeline.
-    val keys = sigs.filter(col("sig").isNotNull)
-      .select(col("doc_id"),
-        explode(lshBandKeys(col("sig"), k, bands)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-      .persist()
-    val cand = keys.as("a")
-      .join(keys.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("ida"), col("b.doc_id").as("idb"))
-      .distinct()
+    val cand = cappedPairs(sigs.filter(col("sig").isNotNull)
+        .select(col("doc_id"),
+          explode(lshBandKeys(col("sig"), k, bands)).as("bk")),
+      col("bk"), col("doc_id"), None)
     val sh = sigs.select(col("doc_id"), col("shingles"))
     cand
       .join(sh.select(col("doc_id").as("ida"), col("shingles").as("sha")), "ida")
@@ -547,27 +578,21 @@ object Dedup {
     * identical), then verify Hamming ≤ maxDist. 15-bit keys over the
     * 60-bit fingerprint keep block buckets ~128× smaller than the old
     * 8-bit/32-bit scheme — the candidate count that matters at corpus
-    * scale. */
+    * scale. Blocks go through the uncapped [[cappedPairs]] stage with
+    * (doc_id, simhash) as the member, so verification needs no join
+    * back. */
   def simhashPairs(
       docs: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 3, norm: Column => Column = normText): DataFrame = {
     val fp = simhashDocs(docs, idCol, textCol, norm)
-    // persisted: both sides of the block self-join
-    val blocks = fp.select(col("doc_id"), col("simhash"),
+    cappedPairs(fp.select(struct(col("doc_id"), col("simhash")).as("m"),
         explode(array((0 until 4).map { blk =>
           struct(lit(blk).as("blk"),
             shiftright(col("simhash"), blk * 15).bitwiseAND(32767).as("key"))
-        }: _*)).as("bk"))
-      .select(col("doc_id"), col("simhash"),
-        col("bk.blk").as("blk"), col("bk.key").as("key"))
-      .persist()
-    blocks.as("a")
-      .join(blocks.as("b"),
-        col("a.blk") === col("b.blk") && col("a.key") === col("b.key")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("ida"), col("b.doc_id").as("idb"),
-        hamming(col("a.simhash"), col("b.simhash")).as("dist"))
-      .distinct()
+        }: _*)).as("bk")),
+      col("bk"), col("m"), None)
+      .select(col("ida.doc_id").as("ida"), col("idb.doc_id").as("idb"),
+        hamming(col("ida.simhash"), col("idb.simhash")).as("dist"))
       .filter(col("dist") <= maxDist)
   }
 
@@ -632,7 +657,7 @@ object Dedup {
   /** Near-dup pairs over 64-bit perceptual/locality hashes (image
     * dHash — [[Multimodal.imageDHashes]] — audio fingerprints, or any
     * single-long sketch): band the hash into `bands` equal bit
-    * windows, candidate-join on any shared (band, key), then verify
+    * windows, pair hashes sharing any (band, key), then verify
     * the TRUE Hamming distance — the single-long sibling of
     * [[simhashPairs]]' multi-band scheme.
     *
@@ -643,7 +668,7 @@ object Dedup {
     * spread its differing bits across all bands); raise `bands` to
     * chase recall at the cost of candidate volume.
     *
-    * Scale shape: one shuffle on (band, key) — the same O(n·bands)
+    * Scale shape: one groupBy on (band, key) — the same O(n·bands)
     * candidate structure as MinHash banding; verification is a pure
     * xor+popcount on the pair. A key shared by m hashes yields
     * O(m²) candidates: near-identical media clusters are REAL
@@ -660,10 +685,10 @@ object Dedup {
     * the full hash first; the cap is the adversarial-input guard, not
     * the dedup path for it.
     *
-    * @param maxKeyFreq when > 0, (band, key) groups with more than
-    *   this many members are dropped before the self-join (anti-join
-    *   against the small over-cap set, map-side partial counts — the
-    *   same drop rule as the shingle df-cap); 0 = no cap
+    * @param maxKeyFreq when > 0, the [[cappedPairs]] cap: a (band, key)
+    *   group with more than this many members is dropped, one of
+    *   exactly this many is kept (the shingle df-cap's rule, bounded
+    *   O(cap) state per key); 0 = no cap
     * @return (ida, idb, hamming) with ida < idb, hamming <= maxHamming
     */
   def hammingNearDupPairs(hashes: DataFrame, idCol: String,
@@ -677,31 +702,18 @@ object Dedup {
     val mask = if (w == 64) -1L else (1L << w) - 1
     val keyed = hashes
       .select(col(idCol).as("id"), col(hashCol).cast("long").as("h"))
-      .select(col("id"), col("h"),
+      .select(struct(col("id"), col("h")).as("m"),
         explode(array((0 until bands).map { b =>
           struct(lit(b).as("band"),
             shiftrightunsigned(col("h"), b * w).bitwiseAND(lit(mask))
               .as("key"))
         }: _*)).as("bk"))
-      .select(col("id"), col("h"), col("bk.band").as("band"),
-        col("bk.key").as("key"))
-    val capped =
-      if (maxKeyFreq <= 0L) keyed
-      else {
-        val hot = keyed.groupBy(col("band"), col("key"))
-          .agg(count(lit(1)).as("kf"))
-          .filter(col("kf") > maxKeyFreq)
-          .select(col("band"), col("key"))
-        keyed.join(hot, Seq("band", "key"), "left_anti")
-      }
-    capped.as("a").join(capped.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("ida"), col("b.id").as("idb"),
-        col("a.h").as("ha"), col("b.h").as("hb"))
-      .distinct() // a pair can match in several bands
-      .select(col("ida"), col("idb"),
-        expr("bit_count(ha ^ hb)").cast("int").as("hamming"))
+    // a cap at or above Int.MaxValue bounds nothing an array can hold
+    val cap = Some(maxKeyFreq).filter(f => f > 0L && f < Int.MaxValue)
+      .map(_.toInt)
+    cappedPairs(keyed, col("bk"), col("m"), cap)
+      .select(col("ida.id").as("ida"), col("idb.id").as("idb"),
+        hamming(col("ida.h"), col("idb.h")).cast("int").as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
 }

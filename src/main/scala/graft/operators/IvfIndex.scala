@@ -231,10 +231,14 @@ object IvfIndex extends BatchTable.Store {
     * cell co-occupants under `assignProbe`-way multi-assignment of the
     * BATCH side (the store holds probe=1 assignments; multi-probing the
     * batch recovers boundary-straddling pairs — same recall geometry as
-    * [[Similarity.ivfNearDupPairs]]), deduped as bare id pairs BEFORE
-    * vectors re-attach, then exact-cosine verified. New×new pairs emit
-    * once with `vec_id < match_id` (the caller's keeper rule drops the
-    * larger id — [[dupKeeperMap]], shared by the p44 gate and
+    * [[Similarity.ivfNearDupPairs]]). They come from the uncapped
+    * [[Dedup.incrementalCandidates]] stage keyed on `list_id` — the
+    * batch's assignments tagged new, the probed stored cells tagged
+    * old — as bare id pairs, deduped BEFORE vectors re-attach, then
+    * exact-cosine verified. A probed cell is one row of its batch ids
+    * plus its ~n/nCells stored ids. New×new pairs emit once with
+    * `vec_id < match_id` (the caller's keeper rule drops the larger id
+    * — [[dupKeeperMap]], shared by the p44 gate and
     * [[graft.streaming.Streams.vectorIngestBatch]]).
     * Determinism: candidate sets and cosines are exact functions of the
     * stored centroid geometry — no RNG anywhere. Zero-norm batch
@@ -254,7 +258,7 @@ object IvfIndex extends BatchTable.Store {
     val v = Similarity.withNorm(batch, idCol, vecCol, "vec_id", "v")
       .persist()
     val assigned = Similarity.assignCells(v, "vec_id", "v", centroids,
-      assignProbe).persist()
+      assignProbe, carryVec = false).persist()
     // FILE pruning, same shape as [[topK]]: the batch can only match
     // cells it probes, so the (batch-bounded) probed list_ids push down
     // as a static filter the bucketed store prunes files on;
@@ -265,35 +269,28 @@ object IvfIndex extends BatchTable.Store {
     val cells0 = spark.table(s"${name}_cells")
     val cells = if (probed.length < nCells)
       cells0.filter(col("list_id").isin(probed: _*)) else cells0
-    // id-only candidates, deduped before vectors re-attach (the same
-    // shuffle-payload saving as ivfNearDupPairs' slim stage)
-    val slim = assigned.select(col("list_id"), col("vec_id"))
-    val candOld = slim
-      .join(cells.select(col("list_id"), col("neighbor_id")), Seq("list_id"))
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .select(col("vec_id"), col("neighbor_id").as("match_id"),
-        lit(false).as("match_is_new"))
-      .distinct()
-    val candNew = slim.as("a")
-      .join(slim.as("b"),
-        col("a.list_id") === col("b.list_id")
-          && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("match_id"),
-        lit(true).as("match_is_new"))
-      .distinct()
+    val cand = Dedup.incrementalCandidates(
+      assigned.select(col("list_id"), col("vec_id").as("doc_id"),
+          lit(true).as("is_new"))
+        .unionByName(cells.select(col("list_id"),
+          col("neighbor_id").as("doc_id"), lit(false).as("is_new"))),
+      col("list_id"), None)
+      .withColumnRenamed("new_id", "vec_id")
     // exact verify: batch vectors from the cached batch frame; stored
     // match vectors from the (bucket-pruned) cell store, one row per
-    // vector (probe=1 storage assignment — no duplicates to dedup)
+    // vector (probe=1 storage assignment — no duplicates to dedup).
+    // ONE join on (match_id, match_is_new) picks the side, so the
+    // candidate stage has one consumer and runs once.
     val batchVecs = v.select(col("vec_id"), col("v"), col("v_n"))
-    val storeVecs = cells.select(col("neighbor_id").as("match_id"),
-      col("cv").as("vb"), col("cv_n").as("nb"))
-    val withA = candOld.unionByName(candNew)
+    val matchVecs = batchVecs.select(col("vec_id").as("match_id"),
+        col("v").as("vb"), col("v_n").as("nb"), lit(true).as("match_is_new"))
+      .unionByName(cells.select(col("neighbor_id").as("match_id"),
+        col("cv").as("vb"), col("cv_n").as("nb"),
+        lit(false).as("match_is_new")))
+    cand
       .join(batchVecs.select(col("vec_id"), col("v").as("va"),
         col("v_n").as("na")), "vec_id")
-    withA.filter(!col("match_is_new")).join(storeVecs, "match_id")
-      .unionByName(withA.filter(col("match_is_new"))
-        .join(batchVecs.select(col("vec_id").as("match_id"),
-          col("v").as("vb"), col("v_n").as("nb")), "match_id"))
+      .join(matchVecs, Seq("match_id", "match_is_new"))
       .select(col("vec_id"), col("match_id"),
         (Similarity.dot(col("va"), col("vb")) / (col("na") * col("nb")))
           .as("cos"), col("match_is_new"))
@@ -309,12 +306,14 @@ object IvfIndex extends BatchTable.Store {
     * several keepers.
     *
     * @return (vec_id, dup_of) — one row per dropped vector. */
-  def dupKeeperMap(dups: DataFrame): DataFrame =
-    dups.filter(!col("match_is_new"))
-      .select(col("vec_id"), col("match_id").as("_dup"))
-      .unionByName(dups.filter(col("match_is_new"))
-        .select(col("match_id").as("vec_id"), col("vec_id").as("_dup")))
+  def dupKeeperMap(dups: DataFrame): DataFrame = {
+    // one projection, not a filter per side: a match_is_new filter
+    // would push into the candidate stage and run it once per side
+    val nn = col("match_is_new")
+    dups.select(when(nn, col("match_id")).otherwise(col("vec_id")).as("vec_id"),
+        when(nn, col("vec_id")).otherwise(col("match_id")).as("_dup"))
       .groupBy(col("vec_id")).agg(min(col("_dup")).as("dup_of"))
+  }
 
   /** Centroid-drift report for a stored index: per `batch_id`, the
     * exact mean cosine of the stored vectors to their assigned (frozen)

@@ -88,7 +88,7 @@ object Resolve {
     // there, which is what the oracle replays)
     Dedup.cappedPairs(names.select(col("name"),
         explode(array_distinct(TextFns.tokens(col("name")))).as("blk")),
-        "blk", "name", maxBlock.toInt)
+        col("blk"), col("name"), Some(maxBlock.toInt))
       .select(col("ida").as("name_a"), col("idb").as("name_b"),
         levenshtein(col("ida"), col("idb"), maxDist).as("dist"))
       .filter(col("dist") >= 1)

@@ -211,7 +211,7 @@ object ShingleIndex extends BatchTable.Store {
       newInv.select(col("s"), col("doc_id"), lit(true).as("is_new"))
         .unionByName(idxRel.select(col("s"), col("doc_id"),
           lit(false).as("is_new"))),
-      maxDocFreq)
+      col("s"), Some(maxDocFreq))
     // exact verify: match-side arrays come from the batch for new×new
     // and from the bucketed store for new×old — candidate-bounded reads
     val shOldStore = spark.table(s"${name}_sh")

@@ -217,32 +217,31 @@ object Similarity {
     * (2·nCells) versus the brute-force n²/2 — and the caller sets
     * nCells ~ √n once per corpus (from table stats), giving O(n^1.5)
     * total pair work, an O(√n)-size broadcast, and O(n·√n)
-    * assignment. Nothing broadcasts the corpus; the only broadcast is
-    * the centroid set. `embeddingNearDupPairs` (Dedup) remains the
-    * exact baseline that specs measure recall against. */
+    * assignment. Candidates come from the uncapped
+    * [[Dedup.cappedPairs]] stage keyed on `list_id`: one groupBy, each
+    * cell one row of ~assignProbe · n / nCells ids (≈ 3√n), pairs
+    * deduped as bare ids before vectors re-attach. Nothing broadcasts
+    * the corpus; the only broadcast is the centroid set.
+    * `embeddingNearDupPairs` (Dedup) remains the exact baseline that
+    * specs measure recall against. */
   def ivfNearDupPairs(
       embs: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nCells: Int = 64, assignProbe: Int = 3): DataFrame = {
-    // persisted: v feeds centroid selection, cell assignment, AND both
-    // sides of the verification re-attach — without the cache the
-    // cast/norm/repartition pipeline runs three times per call.
+    // not persisted: v's four readers (centroid selection, cell
+    // assignment, both verify re-attaches) share its one repartition
+    // exchange — the cast and norm run once, map-side, and every reader
+    // reuses the shuffle output
     val v = withNorm(embs, idCol, vecCol, "vec_id", "v")
       .repartition(par(embs), col("vec_id"))
-      .persist()
     val centroids = topKByHashCentroids(v, "vec_id", "v", nCells)
-    val assigned = assignCells(v, "vec_id", "v", centroids, assignProbe)
-    // candidate generation over bare ids: the bucket self-join and the
-    // distinct shuffle move 16-byte pairs, not 0.5 KB vector payloads
+    // candidate generation over bare ids: the groupBy and the distinct
+    // shuffle move 8-byte ids, not 0.5 KB vector payloads
     // (multi-assignment means ~assignProbe² duplicates of every pair —
     // dedup BEFORE attaching vectors or the verify shuffle is ~30×
     // heavier than it needs to be).
-    val slim = assigned.select(col("list_id"), col("vec_id")).persist()
-    val cand = slim.as("a")
-      .join(slim.as("b"),
-        col("a.list_id") === col("b.list_id")
-          && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("ida"), col("b.vec_id").as("idb"))
-      .distinct()
+    val cand = Dedup.cappedPairs(
+      assignCells(v, "vec_id", "v", centroids, assignProbe),
+      col("list_id"), col("vec_id"), None)
     // exact verification: vectors re-attach via two id-keyed joins (one
     // row per vector; shuffle-on-id at scale, AQE-broadcast when small)
     val vecs = v.select(col("vec_id"), col("v"), col("v_n"))
@@ -285,7 +284,7 @@ object Similarity {
     val e = withNorm(eval, idCol, vecCol, "eval_id", "ev").persist()
     val centroids = topKByHashCentroids(c, "vec_id", "v", nCells)
     // id-only candidates, deduped BEFORE vectors re-attach (the same
-    // ~30× shuffle saving as ivfNearDupPairs' slim stage)
+    // ~30× shuffle saving as ivfNearDupPairs' id-only candidates)
     val cand = assignCells(c, "vec_id", "v", centroids, assignProbe)
       .select(col("list_id"), col("vec_id"))
       .join(assignCells(e, "eval_id", "ev", centroids, assignProbe)

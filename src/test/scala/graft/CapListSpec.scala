@@ -58,9 +58,9 @@ class CapListSpec extends AnyFunSuite {
     assert(caplist(4).sorted == Seq("a", "a", "b", "c"))
     // over the cap: saturated at cap + 1
     assert(caplist(2).size == 3)
-    intercept[Exception] {
+    for (bad <- Seq(0, Int.MaxValue)) intercept[Exception] {
       Seq(1L).toDF("v")
-        .agg(call_function("graft_caplist", col("v"), lit(0))).collect()
+        .agg(call_function("graft_caplist", col("v"), lit(bad))).collect()
     }
   }
 

@@ -570,6 +570,10 @@ class MultimodalCodecSpec extends AnyFunSuite {
     assert(graft.operators.Dedup
       .hammingNearDupPairs(const, "id", "h", 0, maxKeyFreq = 3L)
       .count() == 0L)
+    // a group of exactly maxKeyFreq members is kept: all 4·3/2 pairs
+    assert(graft.operators.Dedup
+      .hammingNearDupPairs(const, "id", "h", 0, maxKeyFreq = 4L)
+      .count() == 6L)
     assert(graft.operators.Dedup
       .hammingNearDupPairs(const, "id", "h", 0)
       .count() == 6L)

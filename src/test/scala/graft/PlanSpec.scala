@@ -16,6 +16,10 @@ class PlanSpec extends AnyFunSuite {
   // jobs of the df-capped ngramJaccardPairs stage that perfbench's
   // curate op runs, collected on sf0.001
   private val CuratePairJobs = 9
+  // jobs of p05_embed_neardup at sf0.01, warm, 8 cores: 8 with the
+  // blocking stage on list_id (11 when the cells were a persisted
+  // self-join)
+  private val P05Jobs = 8
 
   private def fmt(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.explainString(
@@ -200,6 +204,47 @@ class PlanSpec extends AnyFunSuite {
       if j.condition.exists(_.references.exists(_.name == "blk")) => j }
     assert(blkJoins.isEmpty, p.treeString)
     assert(p.collect { case r: InMemoryRelation => r }.isEmpty, p.treeString)
+  }
+
+  test("band and cell near-dup pairs: one collect aggregate on the key, no key self-join or key cache") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Collect
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import spark.implicits._
+    val keyCols = Set("bk", "band", "blk", "key", "list_id")
+    val hashes = Seq((1L, 42L), (2L, 43L), (3L, 1L << 40)).toDF("id", "h")
+    val plans: Seq[(String, LogicalPlan)] =
+      Seq("p03_minhash_lsh", "p04_simhash", "p05_embed_neardup").map(q =>
+        q -> SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan) ++
+      Seq(0L, 2L).map(cap => s"hamming maxKeyFreq=$cap" -> graft.operators.Dedup
+        .hammingNearDupPairs(hashes, "id", "h", 3, maxKeyFreq = cap)
+        .queryExecution.optimizedPlan)
+    for ((name, p) <- plans) {
+      val collects = p.collect { case a: Aggregate
+        if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[Collect[_]])) => a }
+      assert(collects.size == 1, s"$name\n${p.treeString}")
+      assert(collects.head.groupingExpressions.flatMap(_.references)
+        .exists(r => keyCols(r.name)), s"$name\n${p.treeString}")
+      val keyJoins = p.collect { case j: Join
+        if j.condition.exists(_.references.exists(r => keyCols(r.name))) => j }
+      assert(keyJoins.isEmpty, s"$name\n${p.treeString}")
+      val keyCaches = p.collect { case r: InMemoryRelation
+        if r.output.exists(a => keyCols(a.name)) => r }
+      assert(keyCaches.isEmpty, s"$name\n${p.treeString}")
+    }
+    spark.catalog.clearCache()
+  }
+
+  test("p05 job budget at sf0.01") {
+    val q = SparkEntry.queries("p05_embed_neardup")
+    val sf01 = new java.io.File(sf).getParent + "/sf0.01" // beside sf0.001
+    // warm once, so the measured run pays no first-run job
+    q(spark, sf01).collect()
+    spark.catalog.clearCache()
+    val n = org.apache.spark.JobTally.of(spark.sparkContext)(
+      q(spark, sf01).collect()).jobs
+    spark.catalog.clearCache()
+    assert(n <= P05Jobs, s"p05 ran $n jobs, budget $P05Jobs")
   }
 
   test("curate pair-stage job budget: string ids run no more jobs than long ids") {
