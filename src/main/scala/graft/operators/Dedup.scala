@@ -207,9 +207,13 @@ object Dedup {
     * size(ids) > cap is EXACTLY the `count > cap` drop (caplist counts
     * rows, duplicates included); a kept group's array is its complete
     * member list. `cap = None`: collect_list, nothing dropped. A block
-    * of m members is then one m-element row: MinHash, SimHash and
-    * Hamming keys are small by design, and an IVF cell holds about
-    * assignProbe · n / nCells ids, ≈ 3√n under the nCells ~ √n rule.
+    * of m members is then one m-element row, buffered whole (a
+    * collect does not spill), which expands into m(m−1)/2 pairs: the
+    * pairs, not the row, bound an uncapped caller. MinHash, SimHash
+    * and Hamming keys are small by design. An IVF cell holds about
+    * assignProbe · n / nCells ids, and every caller passes nCells = 64,
+    * so a cell grows linearly in n: p05's largest is 112 ids at
+    * n = 2,000 (sf0.1) and 1,787 at n = 32,000, 1.2× the 3n/64 mean.
     *
     * The expansion ([[expandTails]]) emits {x, y} per position pair
     * i < j — exactly the pairs a self-join on the key would. Two
@@ -222,7 +226,8 @@ object Dedup {
     }
     val kept = keyed.groupBy(key)
       .agg(collectMembers(member, cap).as("ids"))
-      .filter(size(col("ids")) >= 2 && underCap(size(col("ids")), cap))
+      .filter(size(col("ids")) >= 2 &&
+        cap.fold(lit(true))(size(col("ids")) <= _))
     expandTails(kept.select(col("ids")), col("ids"),
         pos => slice(col("ids"), pos + 2, size(col("ids"))))
       .select(least(col("x"), col("y")).as("ida"),
@@ -236,9 +241,6 @@ object Dedup {
   private def collectMembers(member: Column, cap: Option[Int]): Column =
     cap.fold(collect_list(member))(c =>
       call_function("graft_caplist", member, lit(c)))
-
-  private def underCap(n: Column, cap: Option[Int]): Column =
-    cap.fold(lit(true))(n <= _)
 
   /** The expansion both blocking stages share: each element `x` of
     * `members`, at 0-based position `pos`, pairs with every element `y`
@@ -258,15 +260,18 @@ object Dedup {
     * stay row-identical by construction.
     *
     * Input: (doc_id, is_new) rows with a blocking `key`, ids of any
-    * type. ONE groupBy(key) collects TWO lists per key — the batch
-    * members and the old ones (the collect skips the NULL the `when`
-    * produces for the other side, so one aggregation pass serves
-    * both). Under `cap = Some(c)` each list is a graft_caplist capped
-    * at c, and the combined df-cap is `size(new)+size(old) <= c`: exact
-    * when neither list saturated, and a saturated list alone already
-    * exceeds the cap, so the drop set is EXACTLY the (df_old + df_new)
-    * > cap rule. `cap = None` keeps every key, with the uncapped
-    * stage's one-row-per-block bound ([[cappedPairs]]).
+    * type. Under `cap = Some(c)`, ONE groupBy(key) collects TWO
+    * graft_caplist lists per key, capped at c — the batch members and
+    * the old ones (the collect skips the NULL the `when` produces for
+    * the other side, so one aggregation pass serves both) — and the
+    * combined df-cap is `size(new)+size(old) <= c`: exact when neither
+    * list saturated, and a saturated list alone already exceeds the
+    * cap, so the drop set is EXACTLY the (df_old + df_new) > cap rule.
+    * Under `cap = None` nothing is dropped and only the batch members
+    * are collected: the old rows stream through a join against the
+    * per-key batch lists, so no row ever holds an old block (an
+    * uncapped old block — a stored IVF cell — grows with the corpus,
+    * while the batch side is bounded by the batch).
     *
     * Pairs expand through [[expandTails]]: each new member against the
     * new members after it (emitted once, smaller id as new_id) and
@@ -277,18 +282,31 @@ object Dedup {
     */
   private[operators] def incrementalCandidates(tagged: DataFrame,
       key: Column, cap: Option[Int]): DataFrame = {
-    val lists = tagged.groupBy(key).agg(
-      collectMembers(when(col("is_new"), col("doc_id")), cap).as("new_ids"),
-      collectMembers(when(!col("is_new"), col("doc_id")), cap).as("old_ids"))
-      .filter(size(col("new_ids")) >= 1 &&
-        underCap(size(col("new_ids")) + size(col("old_ids")), cap))
     def tag(ids: Column, isNew: Boolean) =
       transform(ids, m => struct(m.as("id"), lit(isNew).as("is_new")))
+    def newTail(pos: Column) =
+      tag(slice(col("new_ids"), pos + 2, size(col("new_ids"))), true)
+    val pairs = cap match {
+      case Some(c) =>
+        val lists = tagged.groupBy(key).agg(
+          collectMembers(when(col("is_new"), col("doc_id")), cap).as("new_ids"),
+          collectMembers(when(!col("is_new"), col("doc_id")), cap).as("old_ids"))
+          .filter(size(col("new_ids")) >= 1 &&
+            size(col("new_ids")) + size(col("old_ids")) <= c)
+        expandTails(lists.select(col("new_ids"), col("old_ids")),
+          col("new_ids"), pos => concat(newTail(pos), tag(col("old_ids"), false)))
+      case None =>
+        val lists = tagged.filter(col("is_new")).groupBy(key.as("_k"))
+          .agg(collect_list(col("doc_id")).as("new_ids"))
+        expandTails(lists, col("new_ids"), newTail)
+          .unionByName(tagged.filter(!col("is_new"))
+            .select(key.as("_k"), col("doc_id").as("o"))
+            .join(lists, "_k")
+            .select(explode(col("new_ids")).as("x"),
+              struct(col("o").as("id"), lit(false).as("is_new")).as("y")))
+    }
     val (x, y, yNew) = (col("x"), col("y.id"), col("y.is_new"))
-    expandTails(lists.select(col("new_ids"), col("old_ids")), col("new_ids"),
-        pos => concat(
-          tag(slice(col("new_ids"), pos + 2, size(col("new_ids"))), true),
-          tag(col("old_ids"), false)))
+    pairs
       .select(when(yNew, least(x, y)).otherwise(x).as("new_id"),
         when(yNew, greatest(x, y)).otherwise(y).as("match_id"),
         yNew.as("match_is_new"))

@@ -235,8 +235,13 @@ object IvfIndex extends BatchTable.Store {
     * [[Dedup.incrementalCandidates]] stage keyed on `list_id` — the
     * batch's assignments tagged new, the probed stored cells tagged
     * old — as bare id pairs, deduped BEFORE vectors re-attach, then
-    * exact-cosine verified. A probed cell is one row of its batch ids
-    * plus its ~n/nCells stored ids. New×new pairs emit once with
+    * exact-cosine verified. Only the batch side is collected, one row
+    * of batch ids per probed cell; the stored cell rows stream through
+    * a join against those rows. A stored cell holds ~n/nCells ids,
+    * linear in the stored corpus at a fixed nCells (largest measured,
+    * nCells = 64: 48 ids after growing a store to 2,000 vectors by
+    * 250-vector appends, 793 at 34,000), so a one-vector batch never
+    * holds a whole stored cell in one row. New×new pairs emit once with
     * `vec_id < match_id` (the caller's keeper rule drops the larger id
     * — [[dupKeeperMap]], shared by the p44 gate and
     * [[graft.streaming.Streams.vectorIngestBatch]]).

@@ -214,13 +214,15 @@ object Similarity {
     * a common cell), then EXACT cosine verification inside candidates
     * only. With `nCells` fixed centroids every cell holds ~assignProbe
     * × n / nCells vectors, so candidate count is ≈ assignProbe² · n² /
-    * (2·nCells) versus the brute-force n²/2 — and the caller sets
-    * nCells ~ √n once per corpus (from table stats), giving O(n^1.5)
+    * (2·nCells) versus the brute-force n²/2. A caller that sets
+    * nCells ~ √n once per corpus (from table stats) gets O(n^1.5)
     * total pair work, an O(√n)-size broadcast, and O(n·√n)
-    * assignment. Candidates come from the uncapped
+    * assignment; the declared queries pass a fixed 64, so their cells
+    * and pair work grow with n. Candidates come from the uncapped
     * [[Dedup.cappedPairs]] stage keyed on `list_id`: one groupBy, each
-    * cell one row of ~assignProbe · n / nCells ids (≈ 3√n), pairs
-    * deduped as bare ids before vectors re-attach. Nothing broadcasts
+    * cell one row of ~assignProbe · n / nCells ids (its bound and
+    * measured sizes are there), pairs deduped as bare ids before
+    * vectors re-attach. Nothing broadcasts
     * the corpus; the only broadcast is the centroid set.
     * `embeddingNearDupPairs` (Dedup) remains the exact baseline that
     * specs measure recall against. */

@@ -235,6 +235,38 @@ class PlanSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
+  test("incremental IVF near-dups collect only the batch: stored cells stream, never one row") {
+    import graft.operators.IvfIndex
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Collect
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import spark.implicits._
+    val store = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)), (3L, Seq(0.9f, 0.1f)))
+      .toDF("vec_id", "embedding")
+    val batch = Seq((10L, Seq(0.99f, 0.1f)), (11L, Seq(0.98f, 0.12f)))
+      .toDF("vec_id", "embedding")
+    try {
+      IvfIndex.build(store, "vec_id", "embedding", "graft_planivf", nCells = 2)
+      val p = IvfIndex.incrementalNearDups(batch, "vec_id", "embedding",
+        "graft_planivf", threshold = 0.9).queryExecution.optimizedPlan
+      def readsCells(n: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+        n.exists {
+          case r: LogicalRelation =>
+            r.catalogTable.exists(_.identifier.table == "graft_planivf_cells")
+          case _ => false
+        }
+      val collects = p.collect { case a: Aggregate
+        if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[Collect[_]])) => a }
+      assert(collects.nonEmpty, p.treeString)
+      assert(!collects.exists(readsCells), p.treeString)
+      assert(readsCells(p), p.treeString)
+    } finally {
+      Seq("graft_planivf_cells", "graft_planivf_cent")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      spark.catalog.clearCache()
+    }
+  }
+
   test("p05 job budget at sf0.01") {
     val q = SparkEntry.queries("p05_embed_neardup")
     val sf01 = new java.io.File(sf).getParent + "/sf0.01" // beside sf0.001
